@@ -82,23 +82,24 @@ class CrawlConfig:
     # engine mechanics
     reference_compat: bool = False
     use_bloom: bool = True
-    # seen-set filter implementation (the north rule's "bloom/cuckoo"):
-    #   "bloom"  — append-only; pairs with bloom_shards for the 10^10 tier.
+    # seen-set filter (the north rule's "bloom/cuckoo"); operators/seen.py
+    # builds it from this field and the bloom_* fields below:
+    #   "bloom"  — append-only.
     #   "cuckoo" — deletable fingerprints: REQUIRED for TTL recrawl
     #       eviction (CrawlEngine.evict_for_recrawl) — a bloom cannot
     #       remove dead keys, so under recrawl its fpp only degrades while
-    #       a cuckoo sized for the LIVE seen set runs forever. With
-    #       bloom_shards > 1 the ShardedCuckooStore runs the 10^10-tier
-    #       lifecycle (executor-side versioned per-shard blobs, adds AND
-    #       deletes shard-parallel, driver holds only the manifest).
-    # Both are PREFILTERS: hits still route through the exact anti-join.
+    #       a cuckoo sized for the LIVE seen set runs forever.
+    # Either runs as one driver-held filter or, with bloom_shards > 1, as
+    # the sharded store. Both are PREFILTERS: hits still route through the
+    # exact anti-join.
     seen_filter: str = "bloom"
     bloom_expected_insertions: int = 10_000_000  # application.properties:33
     bloom_fpp: float = 0.01                      # application.properties:34
-    # >1 = the 10^10-tier bloom lifecycle: one filter per shard (keyed by
-    # host_bucket), built/updated EXECUTOR-side as versioned blob files;
-    # the driver holds only the {shard: version} manifest. 1 = single
-    # global filter updated driver-side (right below ~10^8 insertions).
+    # >1 = the 10^10-tier lifecycle for either filter: one filter per shard
+    # (keyed by host_bucket), added to and deleted from EXECUTOR-side as
+    # versioned blob files; the driver holds only the {shard: version}
+    # manifest. 1 = single global filter updated driver-side (right below
+    # ~10^8 insertions).
     bloom_shards: int = 1
     # scale guard for TTL eviction on a SINGLE (unsharded) cuckoo filter:
     # that mode must materialize the victims' 8-byte hashes driver-side

@@ -18,9 +18,9 @@ through the authoritative full-string anti-join. No URL can be dropped by
 a bloom false positive, and bloom false negatives are impossible.
 
 Scale: at 10^10 URLs / fpp 0.01 the bits are ~12 GB — too big for one
-filter; production would shard the bloom by host_bucket (one filter per
-bucket, built per partition, merged per bucket). The API takes n/fpp so
-tests exercise the same code at small n.
+filter; operators/seen.py shards it by host_bucket (one filter per shard,
+built and updated executor-side). The API takes n/fpp so tests exercise
+the same code at small n.
 """
 
 from __future__ import annotations
@@ -37,6 +37,9 @@ _CHUNK = 1 << 18  # insert-kernel chunk: position buffer = 256k x k x 8B (~14MB 
 
 
 class BloomFilter:
+    kind = "bloom"
+    deletable = False  # a bit may be shared by several keys
+
     # class-level scratch, keyed by (n_bits, n_hashes): the insert kernel's
     # working buffers are faulted ONCE per process and reused across calls,
     # instances, and (in reused Python UDF workers) across tasks. Fresh
@@ -112,7 +115,7 @@ class BloomFilter:
             np.right_shift(h, np.uint64(31), out=t)
             h ^= t
 
-    def add_many(self, hashes: np.ndarray) -> None:
+    def add_many(self, hashes: np.ndarray) -> int:
         """Chunked, buffer-reusing insert. Positions are computed in-place
         into class-level scratch (see _scratch note) and scattered into a
         reusable dense boolean array, then packbits-OR'd into the bits —
@@ -120,10 +123,11 @@ class BloomFilter:
         read-modify-write hazard, and it is ~90x faster than
         np.bitwise_or.at (an unbuffered ufunc, ~0.3M positions/s). Filters
         >256MB of bits (none at our shard sizes — the 10^10 tier shards by
-        host_bucket) fall back to the ufunc per chunk."""
+        host_bucket) fall back to the ufunc per chunk. Returns the number
+        of keys placed — always all of them, unlike a full cuckoo."""
         n = len(hashes)
         if n == 0:
-            return
+            return 0
         b = self._bufs()
         dense = b["dense"]
         nb = np.uint64(self.n_bits)
@@ -154,6 +158,7 @@ class BloomFilter:
         if dense is not None:
             np.bitwise_or(self.bits, np.packbits(dense, bitorder="little")[: self.bits.size],
                           out=self.bits)
+        return n
 
     def might_contain_many(self, hashes: np.ndarray) -> np.ndarray:
         if len(hashes) == 0:
@@ -191,8 +196,8 @@ def build_bloom(df: DataFrame, hash_col: str, expected_insertions: int, fpp: flo
     bucket) rather than one global bitarray — same code per shard.
     """
     proto = BloomFilter.for_capacity(expected_insertions, fpp)
-    merged = _distributed_or_merge(df, hash_col, proto.n_bits, proto.n_hashes,
-                                   max_build_partitions, tree_depth)
+    merged = merge_partition_filters(df, hash_col, proto.n_bits, proto.n_hashes,
+                                     max_build_partitions, tree_depth)
     return merged if merged is not None else proto
 
 
@@ -211,8 +216,8 @@ def _partition_filter_fn(n_bits: int, n_hashes: int):
     return per_partition
 
 
-def _distributed_or_merge(df: DataFrame, hash_col: str, n_bits: int, n_hashes: int,
-                          max_parts: int, tree_depth: int) -> BloomFilter | None:
+def merge_partition_filters(df: DataFrame, hash_col: str, n_bits: int, n_hashes: int,
+                            max_parts: int = 32, tree_depth: int = 2) -> BloomFilter | None:
     """Per-partition filters + treeReduce OR-merge, computed EXACTLY ONCE.
 
     The blob RDD is persisted before the emptiness probe — an unpersisted
@@ -249,191 +254,3 @@ def _distributed_or_merge(df: DataFrame, hash_col: str, n_bits: int, n_hashes: i
         return blobs.treeReduce(lambda a, b: a.union(b), depth=tree_depth)
     finally:
         blobs.unpersist()
-
-
-def add_hashes(bloom: BloomFilter, df: DataFrame, hash_col: str,
-               distributed_threshold: int = 5_000_000, n_rows: int | None = None) -> None:
-    """Incremental update after a round. Two regimes:
-
-    - small-to-medium rounds: pull ONLY the 8-byte hashes to the driver
-      (Arrow) and add them — with the packbits scatter a few million hashes
-      set in <0.5s, far cheaper than collecting per-partition blobs
-      (max_parts x filter-size bytes through the driver),
-    - huge rounds (>= distributed_threshold new URLs): build per-partition
-      delta filters of the SAME dimensions executor-side (mapInPandas),
-      OR-merge them, and OR the delta into `bloom` — the driver only
-      merges bit arrays.
-
-    Pass ``n_rows`` when the caller already counted df (saves a job).
-    """
-    n = df.count() if n_rows is None else n_rows
-    if n >= distributed_threshold:
-        delta = _distributed_or_merge(df, hash_col, bloom.n_bits, bloom.n_hashes,
-                                      max_parts=32, tree_depth=2)
-        if delta is not None:
-            np.bitwise_or(bloom.bits, delta.bits, out=bloom.bits)
-        return
-    pdf = df.select(hash_col).toPandas()
-    vals = pdf.iloc[:, 0].dropna().to_numpy(dtype=np.int64)
-    if len(vals):
-        bloom.add_many(vals)
-
-
-class ShardedBloomStore:
-    """The 10^10-tier bloom lifecycle: ONE filter per host_bucket shard,
-    built and updated EXECUTOR-SIDE, persisted as versioned per-shard blob
-    files under a shared directory (the warehouse locally; an object store
-    on a real cluster). The driver never materializes a filter — it only
-    tracks the {shard: version} manifest (a dict of ints), so driver memory
-    is O(n_shards), not O(total bits): at 10^10 insertions / fpp 0.01 the
-    global filter is ~12 GB, while a 256-shard store is ~47 MB per shard
-    and every build/update/prefilter touches shards partition-parallel.
-
-    Write protocol: each applyInPandas group task builds its shard's delta
-    bitarray, ORs it with the shard's previous version file (if any), and
-    os.replace()s a tmp file into `shard-SSSS-vVVVVVV.bin` — versioned
-    names mean a reader holding an older manifest never observes a torn
-    or half-updated filter (same idea as the SnapshotStore commit
-    protocol). Old versions are pruned two checkpoints back by the caller.
-
-    Correctness contract is unchanged from the global filter: shard miss =
-    definitely new; shard hit MUST still pass the exact anti-join.
-    """
-
-    def __init__(self, directory: str, n_shards: int, n_bits_per_shard: int,
-                 n_hashes: int, versions: dict | None = None):
-        import os
-
-        self.directory = directory
-        self.n_shards = n_shards
-        self.n_bits = n_bits_per_shard
-        self.n_hashes = n_hashes
-        # {shard_id: version}; a shard absent here has no filter yet (reads
-        # as "maybe new" = definitely-new via empty filter semantics)
-        self.versions: dict[int, int] = dict(versions or {})
-        os.makedirs(directory, exist_ok=True)
-
-    @classmethod
-    def for_capacity(cls, directory: str, n_shards: int,
-                     expected_insertions_total: int, fpp: float) -> "ShardedBloomStore":
-        proto = BloomFilter.for_capacity(
-            max(expected_insertions_total // max(n_shards, 1), 1), fpp)
-        return cls(directory, n_shards, proto.n_bits, proto.n_hashes)
-
-    @staticmethod
-    def shard_path(directory: str, shard: int, version: int) -> str:
-        import os
-
-        return os.path.join(directory, f"shard-{shard:05d}-v{version:08d}.bin")
-
-    def update(self, df: DataFrame, hash_col: str, shard_col: str,
-               version: int) -> list[int]:
-        """Executor-side build/update: group rows by shard, each group task
-        folds its hashes into (previous version OR delta) and commits
-        `shard-k-v<version>.bin`. Returns the shard ids written; shards
-        with no rows this round keep their old version. Idempotent per
-        (data, version) — re-running a torn round overwrites the same
-        version files with identical bytes (exact-resume safe)."""
-        directory, n_bits, n_hashes = self.directory, self.n_bits, self.n_hashes
-        prev = dict(self.versions)
-
-        def per_shard(key, pdf):
-            import os
-            import tempfile
-
-            shard = int(key[0])
-            bf = BloomFilter(n_bits, n_hashes)
-            pv = prev.get(shard)
-            if pv is not None:
-                with open(ShardedBloomStore.shard_path(directory, shard, pv), "rb") as f:
-                    bf = BloomFilter.from_bytes(f.read())
-            vals = pdf[hash_col].dropna().to_numpy(dtype=np.int64)
-            bf.add_many(vals)
-            fd, tmp = tempfile.mkstemp(dir=directory, suffix=".bloom.tmp")
-            with os.fdopen(fd, "wb") as f:
-                f.write(bf.to_bytes())
-            os.replace(tmp, ShardedBloomStore.shard_path(directory, shard, version))
-            return pd.DataFrame({"shard": [shard], "n": [len(vals)]})
-
-        out = (df.select(F.col(shard_col).alias("__shard"), F.col(hash_col))
-                 .groupBy("__shard")
-                 .applyInPandas(per_shard, "shard int, n long")
-                 .collect())
-        written = [int(r.shard) for r in out]
-        for s in written:
-            self.versions[s] = version
-        return written
-
-    def prefilter_udf(self):
-        """(hash, shard) -> bool pandas UDF. Each worker lazily opens ONLY
-        the shard files its partitions reference (repartition the candidate
-        set by the shard column first so a task touches exactly one shard),
-        cached per (shard, version) with a small LRU so long-lived workers
-        stay bounded."""
-        from pyspark.sql.functions import pandas_udf
-
-        directory = self.directory
-        versions = dict(self.versions)
-        n_bits, n_hashes = self.n_bits, self.n_hashes
-        cache: dict = {}
-
-        def _get(shard: int) -> BloomFilter | None:
-            v = versions.get(shard)
-            if v is None:
-                return None
-            key = (shard, v)
-            bf = cache.get(key)
-            if bf is None:
-                if len(cache) >= 8:  # bound worker RSS to a few shards
-                    cache.pop(next(iter(cache)))
-                with open(ShardedBloomStore.shard_path(directory, shard, v), "rb") as f:
-                    bf = cache[key] = BloomFilter.from_bytes(f.read())
-            return bf
-
-        @pandas_udf("boolean")
-        def _might_contain(hashes: pd.Series, shards: pd.Series) -> pd.Series:
-            out = np.zeros(len(hashes), dtype=bool)
-            hv = hashes.fillna(0).to_numpy(dtype=np.int64)
-            sv = shards.fillna(-1).to_numpy(dtype=np.int64)
-            for shard in np.unique(sv):
-                bf = _get(int(shard))
-                if bf is None:
-                    continue  # no filter yet -> definitely new
-                m = sv == shard
-                out[m] = bf.might_contain_many(hv[m])
-            return pd.Series(out)
-
-        return _might_contain
-
-    def prune_versions(self, keep_from: dict) -> None:
-        """Delete blob files older than `keep_from[shard]` (the previous
-        checkpoint's versions) — called after a checkpoint commits."""
-        import os
-
-        for f in os.listdir(self.directory):
-            if not f.startswith("shard-") or not f.endswith(".bin"):
-                continue
-            shard, ver = int(f[6:11]), int(f[13:21])
-            if ver < keep_from.get(shard, 0):
-                os.unlink(os.path.join(self.directory, f))
-
-
-def bloom_prefilter_udf(bloom: BloomFilter):
-    """Series->Series pandas UDF: might_contain over Arrow batches. The
-    filter bytes ship to executors once via closure broadcast."""
-    from pyspark.sql.functions import pandas_udf
-
-    blob = bloom.to_bytes()
-    memo: dict = {}  # per-worker: deserialize the bit array ONCE per task,
-    # not once per Arrow batch (the filter is MBs; a per-batch copy would
-    # memcpy gigabytes across a large round)
-
-    @pandas_udf("boolean")
-    def _might_contain(hashes: pd.Series) -> pd.Series:
-        bf = memo.get("bf")
-        if bf is None:
-            bf = memo["bf"] = BloomFilter.from_bytes(blob)
-        vals = hashes.fillna(0).to_numpy(dtype=np.int64)
-        return pd.Series(bf.might_contain_many(vals))
-
-    return _might_contain

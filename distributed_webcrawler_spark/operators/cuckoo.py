@@ -14,14 +14,13 @@ keys it previously inserted (session teardown).
 Implementation: partial-key cuckoo filter (Fan et al., CoNEXT'14 — public
 algorithm): buckets of 4 x 16-bit fingerprints, alternate bucket =
 bucket XOR hash(fingerprint), bounded eviction kicks. Vectorized numpy
-lookups for batch membership; insertion is per-key (driver/executor-side
-build over hashes, same shapes as the bloom builder).
+lookups for batch membership; insertion is per-key. The driver-held and
+sharded deployments live in operators/seen.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 _EMPTY = 0  # fingerprints are forced nonzero
 _KICKS = 500
@@ -37,6 +36,9 @@ def _mix(h: np.ndarray | int):
 
 
 class CuckooFilter:
+    kind = "cuckoo"
+    deletable = True
+
     def __init__(self, n_buckets: int, bucket_size: int = 4,
                  table: np.ndarray | None = None):
         # power-of-two bucket count so XOR-partial-key stays in range
@@ -165,198 +167,3 @@ class CuckooFilter:
         bucket_size = int.from_bytes(data[8:12], "little")
         table = np.frombuffer(data[12:], dtype=np.uint16).reshape(n_buckets, bucket_size).copy()
         return cls(n_buckets, bucket_size, table)
-
-
-def build_cuckoo(df, col: str, expected_insertions: int) -> "CuckooFilter":
-    """Build a filter from a DataFrame column, driver-side. The single-
-    filter twin of bloom.build_bloom for the engine's seen_filter="cuckoo"
-    mode: right for the ≲10^8-insertion tier where the table (2 bytes/slot
-    ≈ 2.4·n bytes at load 0.84) fits the driver. The 10^10 path is
-    :class:`ShardedCuckooStore` below (one filter per host_bucket shard,
-    built/updated/deleted executor-side exactly like ShardedBloomStore),
-    selected by the engine when bloom_shards > 1.
-
-    Collects ONLY the 8-byte hash column (toPandas via Arrow), never rows."""
-    cf = CuckooFilter.for_capacity(max(expected_insertions, 16))
-    hv = df.select(col).toPandas()[col].dropna().to_numpy(dtype=np.int64)
-    cf.add_many(hv)
-    return cf
-
-
-def cuckoo_prefilter_udf(cf: "CuckooFilter"):
-    """Series->Series pandas UDF: might_contain over Arrow batches — the
-    drop-in twin of bloom_prefilter_udf. Table bytes ship once via closure
-    broadcast; each worker re-materializes the numpy table once per task,
-    not per batch."""
-    from pyspark.sql.functions import pandas_udf
-
-    blob = cf.to_bytes()
-    memo: dict = {}
-
-    @pandas_udf("boolean")
-    def _might_contain(hashes: pd.Series) -> pd.Series:
-        f = memo.get("cf")
-        if f is None:
-            f = memo["cf"] = CuckooFilter.from_bytes(blob)
-        vals = hashes.fillna(0).to_numpy(dtype=np.int64)
-        return pd.Series(f.might_contain_many(vals))
-
-    return _might_contain
-
-
-class ShardedCuckooStore:
-    """The 10^10-tier cuckoo lifecycle — the deletable twin of
-    bloom.ShardedBloomStore, same file protocol verbatim: ONE filter per
-    host_bucket shard, built/updated/DELETED executor-side, persisted as
-    versioned per-shard blobs (`cuckoo-SSSS-vVVVVVV.bin`, os.replace
-    commit, readers on an older {shard: version} manifest never see a
-    torn table; old versions pruned after checkpoints). The driver holds
-    only the manifest dict, never filter bits: at 10^10 live keys a
-    256-shard store is ~95 MB/shard (2.4 bytes/key at 0.84 load) and
-    every operation touches shards partition-parallel.
-
-    What the bloom store cannot do: `delete(df, ...)` removes
-    fingerprints shard-parallel, so TTL recrawl eviction
-    (CrawlEngine.evict_for_recrawl) keeps occupancy equal to the LIVE
-    seen set forever. Contract is unchanged: prefilter only — a hit
-    still routes through the exact anti-join; deletion only of
-    previously-inserted keys. An insert that fails placement (shard
-    over-full) raises loudly rather than silently dropping the key —
-    a missing fingerprint would be a FALSE NEGATIVE, the one error class
-    the seen-set must never produce."""
-
-    def __init__(self, directory: str, n_shards: int, capacity_per_shard: int,
-                 versions: dict | None = None):
-        import os
-
-        self.directory = directory
-        self.n_shards = n_shards
-        self.capacity = capacity_per_shard
-        self.versions: dict[int, int] = dict(versions or {})
-        os.makedirs(directory, exist_ok=True)
-
-    @classmethod
-    def for_capacity(cls, directory: str, n_shards: int,
-                     expected_insertions_total: int) -> "ShardedCuckooStore":
-        return cls(directory, n_shards,
-                   max(expected_insertions_total // max(n_shards, 1), 64))
-
-    @staticmethod
-    def shard_path(directory: str, shard: int, version: int) -> str:
-        import os
-
-        return os.path.join(directory, f"cuckoo-{shard:05d}-v{version:08d}.bin")
-
-    def _apply(self, df, hash_col: str, shard_col: str, version: int,
-               op: str) -> list[int]:
-        """Executor-side shard mutation (op = 'add' | 'delete'): group by
-        shard, fold into (previous version ± delta), commit the versioned
-        blob. Idempotence caveat for delete: re-running the same (data,
-        version) overwrites with identical bytes, because the fold always
-        starts from the PREVIOUS version's file, never the in-progress
-        one — same exact-resume property as the bloom store."""
-        import pandas as _pd
-
-        directory, capacity = self.directory, self.capacity
-        prev = dict(self.versions)
-
-        def per_shard(key, pdf):
-            import os
-            import tempfile
-
-            shard = int(key[0])
-            pv = prev.get(shard)
-            if pv is not None:
-                with open(ShardedCuckooStore.shard_path(directory, shard, pv), "rb") as f:
-                    cf = CuckooFilter.from_bytes(f.read())
-            else:
-                cf = CuckooFilter.for_capacity(capacity)
-            vals = pdf[hash_col].dropna().to_numpy(dtype=np.int64)
-            if op == "add":
-                ok = cf.add_many(vals)
-                if ok != len(vals):
-                    raise RuntimeError(
-                        f"cuckoo shard {shard} over-full: placed {ok}/{len(vals)} "
-                        f"(capacity {capacity}) — raise capacity or shard count; "
-                        f"a dropped fingerprint would be a false negative")
-            else:
-                cf.delete_many(vals)
-            fd, tmp = tempfile.mkstemp(dir=directory, suffix=".cuckoo.tmp")
-            with os.fdopen(fd, "wb") as f:
-                f.write(cf.to_bytes())
-            os.replace(tmp, ShardedCuckooStore.shard_path(directory, shard, version))
-            return _pd.DataFrame({"shard": [shard], "n": [len(vals)]})
-
-        from pyspark.sql import functions as F
-
-        out = (df.select(F.col(shard_col).alias("__shard"), F.col(hash_col))
-               .groupBy("__shard")
-               .applyInPandas(per_shard, "shard int, n long")
-               .collect())
-        written = [int(r.shard) for r in out]
-        for s in written:
-            self.versions[s] = version
-        return written
-
-    def update(self, df, hash_col: str, shard_col: str, version: int) -> list[int]:
-        return self._apply(df, hash_col, shard_col, version, "add")
-
-    def delete(self, df, hash_col: str, shard_col: str, version: int) -> list[int]:
-        return self._apply(df, hash_col, shard_col, version, "delete")
-
-    def prefilter_udf(self):
-        """(hash, shard) -> bool pandas UDF; workers lazily open only the
-        shard files their partitions reference, small LRU per worker —
-        identical shape to the bloom store's."""
-        from pyspark.sql.functions import pandas_udf
-
-        directory = self.directory
-        versions = dict(self.versions)
-        cache: dict = {}
-
-        def _get(shard: int):
-            v = versions.get(shard)
-            if v is None:
-                return None
-            key = (shard, v)
-            cf = cache.get(key)
-            if cf is None:
-                if len(cache) >= 8:
-                    cache.pop(next(iter(cache)))
-                with open(ShardedCuckooStore.shard_path(directory, shard, v), "rb") as f:
-                    cf = cache[key] = CuckooFilter.from_bytes(f.read())
-            return cf
-
-        @pandas_udf("boolean")
-        def _might_contain(hashes: pd.Series, shards: pd.Series) -> pd.Series:
-            out = np.zeros(len(hashes), dtype=bool)
-            hv = hashes.fillna(0).to_numpy(dtype=np.int64)
-            sv = shards.fillna(-1).to_numpy(dtype=np.int64)
-            for shard in np.unique(sv):
-                cf = _get(int(shard))
-                if cf is None:
-                    continue  # no filter yet -> definitely new
-                m = sv == shard
-                out[m] = cf.might_contain_many(hv[m])
-            return pd.Series(out)
-
-        return _might_contain
-
-    def occupancy(self) -> int:
-        """Total stored fingerprints across current shard versions
-        (driver-side reads of the blobs; monitoring/tests only)."""
-        total = 0
-        for shard, v in self.versions.items():
-            with open(self.shard_path(self.directory, shard, v), "rb") as f:
-                total += CuckooFilter.from_bytes(f.read()).occupancy
-        return total
-
-    def prune_versions(self, keep_from: dict) -> None:
-        import os
-
-        for f in os.listdir(self.directory):
-            if not f.startswith("cuckoo-") or not f.endswith(".bin"):
-                continue
-            shard, ver = int(f[7:12]), int(f[14:22])
-            if ver < keep_from.get(shard, 0):
-                os.unlink(os.path.join(self.directory, f))

@@ -7,7 +7,7 @@ One crawl round = ONE Spark job (SURVEY.md §3.2 Spark equivalent):
     gate by robots (broadcast join + Arrow UDF)      (J3/F4/C9)
     fetch = join web_graph, join payloads, decode    (J4/S5/C7, Arrow batches)
     append pages; expand links -> canonicalize ->    (S7/C1/C2/C4/C5)
-    first-wins in-round dedup -> bloom prefilter ->
+    first-wins in-round dedup -> seen prefilter ->
     exact seen anti-join -> append frontier          (J1)
     append progress + metrics; checkpoint            (A8, exact resume)
 
@@ -30,8 +30,9 @@ Scale design notes:
   _schedule + tools/bench_skew.py); the robots join is broadcast; the
   fetch join keys on `url` (unique per row — host skew cannot reach it)
   with AQE skew splitting as backstop,
-- the seen anti-join is bloom-prefiltered: at fpp 0.01 ~99% of truly-new
-  candidates skip the frontier-sized join entirely (J1 scale path),
+- the seen anti-join is prefiltered by a bloom or cuckoo seen set
+  (operators/seen.py): at fpp 0.01 ~99% of truly-new candidates skip the
+  frontier-sized join entirely (J1 scale path),
 - the global `orderBy().limit()` exists ONLY behind reference_compat for
   parity testing; the clean path never globally sorts the frontier,
 - all timestamps/sequence numbers are derived from (round, sort keys) —
@@ -53,7 +54,7 @@ from ..config import CrawlConfig
 from ..functions import urls as U
 from ..functions.robots_fn import gate_by_robots, parse_robots_table
 from ..operators import topk
-from ..operators.bloom import BloomFilter, bloom_prefilter_udf, build_bloom
+from ..operators import seen as seen_sets
 from ..sources import codec
 from ..sources.store import SnapshotStore
 
@@ -198,15 +199,23 @@ class CrawlEngine:
             self.host_budgets = crawl_delay_budgets(
                 robots, config.round_window_s,
                 config.budget_per_host_per_round).cache()
-        self.bloom: BloomFilter | None = None
-        self.bloom_shards = None            # ShardedBloomStore (cfg.bloom_shards > 1)
-        self.cuckoo = None                  # CuckooFilter (seen_filter="cuckoo", 1 shard)
-        self.cuckoo_shards = None           # ShardedCuckooStore (cuckoo + bloom_shards > 1)
-        if config.seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', got {config.seen_filter!r}")
+        seen_sets.validate(config)
+        self.seen = None  # the URL-seen prefilter (operators/seen.py); None = exact join only
         self._round_caches: list = []
         self.last_stage_secs: dict[str, float] = {}
         self._pool = None  # lazy persistent pool for the round's side branches
+
+    def _seen_view(self, kind: str, sharded: bool):
+        s = self.seen
+        if s is None or s.kind != kind or s.sharded != sharded:
+            return None
+        return s if sharded else s.filter
+
+    # read-only views by kind: the benchmark and the tests inspect the live filter
+    bloom = property(lambda self: self._seen_view("bloom", False))
+    cuckoo = property(lambda self: self._seen_view("cuckoo", False))
+    bloom_shards = property(lambda self: self._seen_view("bloom", True))
+    cuckoo_shards = property(lambda self: self._seen_view("cuckoo", True))
 
     def _branch_pool(self):
         """One persistent 2-thread pool per engine: the round's independent
@@ -269,70 +278,19 @@ class CrawlEngine:
         )
         fsnap, n_seeds = self._t("frontier").append_counted(rows, skip_empty=True)
         self._set_session_status(session_id, "RUNNING")
-        if cfg.use_bloom:
-            # Sharded stores fold in ONLY the just-appended seed snapshot:
-            # their on-disk blobs already hold every earlier frontier row
-            # (persisted versions survive across sessions and resume), and
-            # cuckoo inserts are NOT idempotent — re-folding the full
-            # frontier on a second start_session would store duplicate
-            # fingerprints, breaking evict_for_recrawl's one-copy-per-
-            # frontier-row accounting and inflating occupancy toward the
-            # shard-full error. The single in-memory filters below instead
-            # rebuild from scratch over the full frontier, which is
-            # equivalent and self-healing.
-            if cfg.seen_filter == "cuckoo" and cfg.bloom_shards > 1:
-                from ..operators.cuckoo import ShardedCuckooStore
-
-                if self.cuckoo_shards is None:
-                    self.cuckoo_shards = ShardedCuckooStore.for_capacity(
-                        os.path.join(self.store.warehouse, "cuckoo_shards"),
-                        cfg.bloom_shards, cfg.bloom_expected_insertions)
-                if n_seeds > 0:
-                    self.cuckoo_shards.update(
-                        self._t("frontier").read_snapshot(self.spark, fsnap)
-                            .select("url_hash", self._bloom_shard_col()),
-                        "url_hash", "__shard", version=self._next_seen_version())
-            elif cfg.seen_filter == "cuckoo":
-                from ..operators.cuckoo import build_cuckoo
-
-                fr = self._t("frontier").read(self.spark)
-                self.cuckoo = build_cuckoo(fr, "url_hash", cfg.bloom_expected_insertions)
-            elif cfg.bloom_shards > 1:
-                from ..operators.bloom import ShardedBloomStore
-
-                if self.bloom_shards is None:
-                    self.bloom_shards = ShardedBloomStore.for_capacity(
-                        os.path.join(self.store.warehouse, "bloom_shards"),
-                        cfg.bloom_shards, cfg.bloom_expected_insertions, cfg.bloom_fpp)
-                if n_seeds > 0:
-                    self.bloom_shards.update(
-                        self._t("frontier").read_snapshot(self.spark, fsnap)
-                            .select("url_hash", self._bloom_shard_col()),
-                        "url_hash", "__shard", version=self._next_seen_version())
-            else:
-                fr = self._t("frontier").read(self.spark)
-                self.bloom = build_bloom(fr, "url_hash", cfg.bloom_expected_insertions, cfg.bloom_fpp)
+        if cfg.use_bloom and self.seen is None:
+            self.seen = seen_sets.create(cfg, self.store.warehouse)
+            fr = self._t("frontier").read(self.spark)
+            if fr is not None:
+                self.seen.add_frame(fr)
+        elif cfg.use_bloom and n_seeds > 0:
+            # fold in ONLY the just-appended seed snapshot: cuckoo inserts
+            # are NOT idempotent, and re-folding the full frontier on a
+            # second start_session would store duplicate fingerprints,
+            # breaking evict_for_recrawl's one-copy-per-frontier-row
+            # accounting
+            self.seen.add_snapshot(self._t("frontier"), fsnap)
         self._checkpoint(0)
-
-    def _bloom_shard_col(self):
-        return F.pmod(F.col("host_bucket"), F.lit(self.cfg.bloom_shards)) \
-                .cast("int").alias("__shard")
-
-    def _next_seen_version(self) -> int:
-        """Strictly-monotone blob version for whichever sharded seen-store
-        is active (cuckoo or bloom). Round numbers are NOT safe versions:
-        cuckoo shards mutate on eviction between rounds, bloom shards gain
-        extra folds from repeat start_session and reinject_for_recrawl —
-        reusing a round number there would rewrite a committed version
-        with different bytes and break older manifests' views. max+1
-        keeps the versioned-blob invariant (a committed version is
-        immutable) AND torn-round idempotence: a resumed re-run recomputes
-        the same max(checkpointed versions)+1 over the same deterministic
-        data."""
-        store = self.cuckoo_shards if self.cuckoo_shards is not None else self.bloom_shards
-        if store is None or not store.versions:
-            return 1
-        return max(store.versions.values()) + 1
 
     # ------------------------------------------------------------- views
     def pending(self) -> DataFrame:
@@ -701,9 +659,10 @@ class CrawlEngine:
         is a column-pruned scan (no out_links, no bytes).
 
         Skew note: the join key is ``url`` (unique per row), so a hot host
-        cannot skew it; host-level skew lives in the scheduling window and
-        is salted there (topk_per_group_salted). AQE skew-join stays on as
-        the backstop.
+        cannot skew it; host-level skew lives in the scheduling window,
+        where Catalyst's InferWindowGroupLimit ships <= budget rows per host
+        and input partition into the exchange (see _schedule). AQE
+        skew-join stays on as the backstop.
         """
         if self.cfg.fetch_mode == "http":
             return self._fetch_http(allowed)
@@ -871,7 +830,7 @@ class CrawlEngine:
     def _expand(self, fetched: DataFrame, rnd: int) -> DataFrame:
         """C1/C2/C4/C5 + J1: explode out_links of ok-pages under the depth
         gate, resolve+canonicalize, validity-filter, first-wins in-round
-        dedup, bloom-prefiltered exact seen anti-join."""
+        dedup, seen-prefiltered exact seen anti-join."""
         cfg = self.cfg
         parents = fetched.where(
             (F.col("web_status") == 200) & (F.col("depth") < cfg.max_depth)
@@ -910,48 +869,23 @@ class CrawlEngine:
             self._discovered_at(F.lit(rnd)).alias("discovered_at"),
         )
         # seen-set is per (session_id, url) — reference keys every structure
-        # by session (URLFrontier.java:44-54). The bloom hashes the url alone:
+        # by session (URLFrontier.java:44-54). The filter hashes the url alone:
         # a cross-session hit just routes through the exact anti-join.
         # shuffle-hash, never broadcast: the seen/frontier side GROWS every
         # round (10^10 rows at the target tier) — auto-broadcast would stall
         # the driver building a frontier-sized hash table once it crosses
         # the threshold anyway, so pin the scalable plan now
-        seen = (self._t("frontier").read(self.spark)
-                .select("session_id", "url").hint("shuffle_hash"))
-        tagged = None
-        if cfg.use_bloom and self.cuckoo_shards is not None:
-            maybe_cs = self.cuckoo_shards.prefilter_udf()
-            tagged = cand.withColumn(
-                "__maybe_seen",
-                maybe_cs(F.col("url_hash"),
-                         F.pmod(F.col("host_bucket"), F.lit(cfg.bloom_shards)).cast("int"))).cache()
-        elif cfg.use_bloom and self.cuckoo is not None:
-            # cuckoo prefilter: identical plan shape to the bloom (closure-
-            # broadcast table, Arrow-batched membership); the difference is
-            # lifecycle — evict_for_recrawl can DELETE fingerprints
-            from ..operators.cuckoo import cuckoo_prefilter_udf
-
-            maybe_c = cuckoo_prefilter_udf(self.cuckoo)
-            tagged = cand.withColumn("__maybe_seen", maybe_c(F.col("url_hash"))).cache()
-        elif cfg.use_bloom and self.bloom_shards is not None:
-            # sharded prefilter (10^10 tier): each task consults only the
-            # shard files its rows reference (worker-local lazy load)
-            maybe_s = self.bloom_shards.prefilter_udf()
-            tagged = cand.withColumn(
-                "__maybe_seen",
-                maybe_s(F.col("url_hash"),
-                        F.pmod(F.col("host_bucket"), F.lit(cfg.bloom_shards)).cast("int"))).cache()
-        elif cfg.use_bloom and self.bloom is not None:
-            maybe = bloom_prefilter_udf(self.bloom)
-            tagged = cand.withColumn("__maybe_seen", maybe(F.col("url_hash"))).cache()
-        if tagged is not None:
+        seen_keys = (self._t("frontier").read(self.spark)
+                     .select("session_id", "url").hint("shuffle_hash"))
+        if self.seen is not None:
+            tagged = cand.withColumn("__maybe_seen", self.seen.prefilter()).cache()
             self._round_caches.append(tagged)  # unpersisted at end of round
             definitely_new = tagged.where(~F.col("__maybe_seen")).drop("__maybe_seen")
             needs_check = tagged.where(F.col("__maybe_seen")).drop("__maybe_seen")
             new_rows = definitely_new.unionByName(
-                needs_check.join(seen, ["session_id", "url"], "left_anti"))
+                needs_check.join(seen_keys, ["session_id", "url"], "left_anti"))
         else:
-            new_rows = cand.join(seen, ["session_id", "url"], "left_anti")
+            new_rows = cand.join(seen_keys, ["session_id", "url"], "left_anti")
         return new_rows
 
     def run_round(self, rnd: int) -> dict:
@@ -1029,25 +963,11 @@ class CrawlEngine:
             fsnap, n_new = self._t("frontier").append_counted(
                 new_rows.select(*self._frontier_row_cols()), skip_empty=True)
             mark_at("expand_frontier")
-            if n_new > 0 and cfg.use_bloom and self.cuckoo_shards is not None:
-                self.cuckoo_shards.update(
-                    self._t("frontier").read_snapshot(self.spark, fsnap)
-                        .select("url_hash", self._bloom_shard_col()),
-                    "url_hash", "__shard", version=self._next_seen_version())
-            elif n_new > 0 and cfg.use_bloom and self.bloom_shards is not None:
-                # executor-side sharded update from the parquet the append
-                # JUST wrote: group tasks fold their shard's hashes and commit
-                # versioned blob files — the driver never holds filter bits
-                self.bloom_shards.update(
-                    self._t("frontier").read_snapshot(self.spark, fsnap)
-                        .select("url_hash", self._bloom_shard_col()),
-                    "url_hash", "__shard", version=self._next_seen_version())
-            elif n_new > 0 and cfg.use_bloom and self.cuckoo is not None:
-                self.cuckoo.add_many(self._t("frontier").read_column_local(fsnap, "url_hash"))
-            elif n_new > 0 and cfg.use_bloom and self.bloom is not None:
-                # feed the bloom from the parquet the append JUST wrote —
-                # a driver-side pyarrow column read, no Spark collect job
-                self.bloom.add_many(self._t("frontier").read_column_local(fsnap, "url_hash"))
+            if n_new > 0 and self.seen is not None:
+                # from the parquet the append JUST wrote: driver filters
+                # read its hash column locally (no Spark job), shards fold
+                # it executor-side
+                self.seen.add_snapshot(self._t("frontier"), fsnap)
             mark_at("bloom_update")
             return n_new
 
@@ -1143,79 +1063,31 @@ class CrawlEngine:
                   for n in ("frontier", "progress", "pages", "metrics",
                             "done", "retry_log", "sessions", "host_stats",
                             "robots_http")}
-        bloom_file = None
-        if self.bloom is not None:
-            bloom_file = f"bloom-r{rnd:05d}.bin"
-            with open(os.path.join(self.store.warehouse, bloom_file), "wb") as f:
-                f.write(self.bloom.to_bytes())
-        ckpt = {"round": rnd, "tables": tables, "bloom": bloom_file}
-        if self.cuckoo is not None:
-            cuckoo_file = f"cuckoo-r{rnd:05d}.bin"
-            with open(os.path.join(self.store.warehouse, cuckoo_file), "wb") as f:
-                f.write(self.cuckoo.to_bytes())
-            ckpt["cuckoo"] = cuckoo_file
-        if self.cuckoo_shards is not None:
-            ckpt["cuckoo_shard_versions"] = {
-                str(k): v for k, v in self.cuckoo_shards.versions.items()}
-        if self.bloom_shards is not None:
-            # the shard manifest is a small {shard: version} dict — blob
-            # files themselves are already durable (versioned, os.replace'd)
-            ckpt["bloom_shard_versions"] = {
-                str(k): v for k, v in self.bloom_shards.versions.items()}
+        ckpt = {"round": rnd, "tables": tables}
+        if self.seen is not None:
+            ckpt.update(self.seen.checkpoint(self.store.warehouse, rnd))
         self.store.write_checkpoint(ckpt)
+        if self.seen is not None:
+            # resume reads only the latest checkpoint; keep one more as margin
+            self.seen.prune(self.store.warehouse, self.store.read_checkpoints()[-2:])
 
     def resume(self) -> list[dict]:
         """Exact resume: roll every table back to the last durable checkpoint
-        (discarding any torn round), reload the bloom, re-enter the loop.
+        (discarding any torn round), reload the seen set, re-enter the loop.
         The resumed run's tables are byte-identical to an uninterrupted one
         (asserted in tests/test_resume.py)."""
         ckpt = self.store.latest_checkpoint()
         if ckpt is None:
             raise RuntimeError("no checkpoint to resume from")
         self.store.rollback_to_checkpoint(ckpt)
-        if ckpt.get("cuckoo_shard_versions") is not None:
-            from ..operators.cuckoo import ShardedCuckooStore
-
-            self.cuckoo_shards = ShardedCuckooStore.for_capacity(
-                os.path.join(self.store.warehouse, "cuckoo_shards"),
-                self.cfg.bloom_shards, self.cfg.bloom_expected_insertions)
-            self.cuckoo_shards.versions = {
-                int(k): v for k, v in ckpt["cuckoo_shard_versions"].items()}
-        elif ckpt.get("cuckoo"):
-            from ..operators.cuckoo import CuckooFilter
-
-            with open(os.path.join(self.store.warehouse, ckpt["cuckoo"]), "rb") as f:
-                self.cuckoo = CuckooFilter.from_bytes(f.read())
-        elif ckpt.get("bloom_shard_versions") is not None:
-            from ..operators.bloom import ShardedBloomStore
-
-            proto = BloomFilter.for_capacity(
-                max(self.cfg.bloom_expected_insertions // self.cfg.bloom_shards, 1),
-                self.cfg.bloom_fpp)
-            self.bloom_shards = ShardedBloomStore(
-                os.path.join(self.store.warehouse, "bloom_shards"),
-                self.cfg.bloom_shards, proto.n_bits, proto.n_hashes,
-                versions={int(k): v for k, v in ckpt["bloom_shard_versions"].items()})
-        elif ckpt.get("bloom"):
-            with open(os.path.join(self.store.warehouse, ckpt["bloom"]), "rb") as f:
-                self.bloom = BloomFilter.from_bytes(f.read())
-        elif self.cfg.use_bloom:
-            fr = self._t("frontier").read(self.spark)
-            if self.cfg.seen_filter == "cuckoo" and self.cfg.bloom_shards > 1:
-                from ..operators.cuckoo import ShardedCuckooStore
-
-                self.cuckoo_shards = ShardedCuckooStore.for_capacity(
-                    os.path.join(self.store.warehouse, "cuckoo_shards"),
-                    self.cfg.bloom_shards, self.cfg.bloom_expected_insertions)
-                self.cuckoo_shards.update(
-                    fr.select("url_hash", self._bloom_shard_col()), "url_hash",
-                    "__shard", version=self._next_seen_version())
-            elif self.cfg.seen_filter == "cuckoo":
-                from ..operators.cuckoo import build_cuckoo
-
-                self.cuckoo = build_cuckoo(fr, "url_hash", self.cfg.bloom_expected_insertions)
-            else:
-                self.bloom = build_bloom(fr, "url_hash", self.cfg.bloom_expected_insertions, self.cfg.bloom_fpp)
+        if self.cfg.use_bloom:
+            self.seen = seen_sets.from_checkpoint(ckpt, self.cfg, self.store.warehouse)
+            if self.seen is None:
+                # a checkpoint written without a seen set: build it over the frontier
+                self.seen = seen_sets.create(self.cfg, self.store.warehouse)
+                fr = self._t("frontier").read(self.spark)
+                if fr is not None:
+                    self.seen.add_frame(fr)
         return self.run()
 
     # ----------------------------------------------------- recrawl eviction
@@ -1243,14 +1115,6 @@ class CrawlEngine:
         acknowledges that degradation explicitly — results stay correct
         (prefilter-only contract) but the filter keeps counting ghosts —
         for one-off evictions on a bloom deployment."""
-        cfg = self.cfg
-        deletable = self.cuckoo is not None or self.cuckoo_shards is not None
-        if cfg.use_bloom and not deletable and not allow_stale_filter:
-            raise RuntimeError(
-                "evict_for_recrawl with seen_filter='bloom': a bloom cannot "
-                "delete fingerprints, so TTL recrawl would only degrade its "
-                "fpp. Use seen_filter='cuckoo', or pass "
-                "allow_stale_filter=True to accept the stale filter.")
         last_rnd = (self.store.latest_checkpoint() or {"round": 0})["round"]
         if urls is None:
             if ttl_rounds is None:
@@ -1266,46 +1130,25 @@ class CrawlEngine:
         fr_t, done_t = self._t("frontier"), self._t("done")
         fr = fr_t.read(self.spark)
         # one fingerprint per evicted FRONTIER ROW (not distinct): the
-        # filter holds one copy per inserted row, cross-session included.
-        # Single-filter mode collects the 8-byte hash column driver-side;
-        # sharded mode deletes executor-side (the driver never sees keys)
+        # filter holds one copy per inserted row, cross-session included
         victim_rows = fr.join(evict, ["session_id", "url"], "left_semi").cache()
-        n_evicted = int(victim_rows.count())
-        if self.cuckoo_shards is None and self.cuckoo is not None:
-            # single-filter mode deletes driver-side (the CuckooFilter is a
-            # driver object) — bounded by cfg.evict_driver_max_rows so a
-            # large-frontier deployment can't silently OOM the driver
-            # (r4 verdict "what's wrong" #2); the sharded store is the
-            # scale path (executor-side deletes, keys never leave the
-            # executors).
-            if n_evicted > cfg.evict_driver_max_rows:
-                raise RuntimeError(
-                    f"evict_for_recrawl: {n_evicted} victim rows exceed "
-                    f"evict_driver_max_rows={cfg.evict_driver_max_rows} for "
-                    "single-filter mode, which materializes victim hashes "
-                    "driver-side. Deploy the sharded seen store "
-                    "(bloom_shards > 1) whose deletes run executor-side, "
-                    "or raise cfg.evict_driver_max_rows if the driver has "
-                    "the memory.")
-            hashes = (victim_rows.select("url_hash").toPandas()["url_hash"]
-                      .dropna().to_numpy(dtype="int64"))
-        if n_evicted:
-            # filter delete FIRST: the sharded delete reads victim rows
-            # from the frontier files the compaction is about to remove
-            if self.cuckoo_shards is not None:
-                self.cuckoo_shards.delete(
-                    victim_rows.select("url_hash", self._bloom_shard_col()),
-                    "url_hash", "__shard", version=self._next_seen_version())
-            elif self.cuckoo is not None:
-                self.cuckoo.delete_many(hashes)
-            fr_t.overwrite_compacted(fr.join(evict, ["session_id", "url"], "left_anti"))
-            done = done_t.read(self.spark)
-            if done is not None:
-                done_t.overwrite_compacted(
-                    done.join(evict, ["session_id", "url"], "left_anti"))
-            self._checkpoint(last_rnd)
-        victim_rows.unpersist()
-        evict.unpersist()
+        try:
+            n_evicted = int(victim_rows.count())
+            if self.seen is not None:
+                # driver-row guard, then the filter delete — BEFORE the
+                # compaction: the sharded delete reads victim rows from the
+                # frontier files the compaction is about to remove
+                self.seen.delete(victim_rows, n_evicted, allow_stale_filter)
+            if n_evicted:
+                fr_t.overwrite_compacted(fr.join(evict, ["session_id", "url"], "left_anti"))
+                done = done_t.read(self.spark)
+                if done is not None:
+                    done_t.overwrite_compacted(
+                        done.join(evict, ["session_id", "url"], "left_anti"))
+                self._checkpoint(last_rnd)
+        finally:
+            victim_rows.unpersist()
+            evict.unpersist()
         return {"evicted": n_evicted, "round": last_rnd}
 
     def reinject_for_recrawl(self, urls: DataFrame,
@@ -1334,24 +1177,7 @@ class CrawlEngine:
             self._discovered_at(F.lit(rnd)).alias("discovered_at"))
         fsnap, n = self._t("frontier").append_counted(
             rows.select(*self._frontier_row_cols()), skip_empty=True)
-        if n > 0 and cfg.use_bloom:
-            if self.cuckoo_shards is not None:
-                self.cuckoo_shards.update(
-                    self._t("frontier").read_snapshot(self.spark, fsnap)
-                        .select("url_hash", self._bloom_shard_col()),
-                    "url_hash", "__shard", version=self._next_seen_version())
-            elif self.cuckoo is not None:
-                self.cuckoo.add_many(self._t("frontier").read_column_local(fsnap, "url_hash"))
-            elif self.bloom_shards is not None:
-                # monotone next version, NOT rnd: the round-end _expand
-                # already committed v{rnd}; folding the reinjected rows
-                # into that same path would mutate a committed version's
-                # bytes under any reader on the checkpoint manifest
-                self.bloom_shards.update(
-                    self._t("frontier").read_snapshot(self.spark, fsnap)
-                        .select("url_hash", self._bloom_shard_col()),
-                    "url_hash", "__shard", version=self._next_seen_version())
-            elif self.bloom is not None:
-                self.bloom.add_many(self._t("frontier").read_column_local(fsnap, "url_hash"))
+        if n > 0 and self.seen is not None:
+            self.seen.add_snapshot(self._t("frontier"), fsnap)
         self._checkpoint(rnd)
         return {**res, "reinjected": int(n)}

@@ -60,6 +60,14 @@ def encode_image(pixels: np.ndarray, fmt: str) -> bytes:
     return header + zlib.compress(payload, level=1)
 
 
+def _inflate(buf: bytes) -> bytes:
+    """zlib.decompress for untrusted bytes: a corrupt stream is a CodecError."""
+    try:
+        return zlib.decompress(buf)
+    except zlib.error as e:
+        raise CodecError(f"corrupt zlib stream: {e}") from None
+
+
 def decode_image(data: bytes) -> tuple[np.ndarray, str]:
     """image bytes -> ((h, w, 3) uint8, fmt). Raises CodecError on junk.
 
@@ -99,7 +107,7 @@ def decode_image(data: bytes) -> tuple[np.ndarray, str]:
     fmt_code, w, h = struct.unpack("<BHH", bytes(data[4:9]))
     if fmt_code not in _FMT_NAMES:
         raise CodecError(f"bad fmt code {fmt_code}")
-    raw = zlib.decompress(bytes(data[9:]))
+    raw = _inflate(bytes(data[9:]))
     if len(raw) != h * w * 3:
         raise CodecError("payload size mismatch")
     return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3), _FMT_NAMES[fmt_code]
@@ -341,7 +349,7 @@ def decode_audio(data: bytes) -> tuple[np.ndarray, int, str]:
     fmt_code, sr, n = struct.unpack("<BII", bytes(data[4:13]))
     if fmt_code not in _AUDIO_NAMES:
         raise CodecError(f"bad audio fmt code {fmt_code}")
-    raw = zlib.decompress(bytes(data[13:]))
+    raw = _inflate(bytes(data[13:]))
     if len(raw) != n * 2:
         raise CodecError("audio payload size mismatch")
     return np.frombuffer(raw, dtype=np.int16), sr, _AUDIO_NAMES[fmt_code]
@@ -717,6 +725,8 @@ def decode_png(data: bytes) -> np.ndarray:
         chunk = data[off + 8:off + 8 + ln]
         off += 12 + ln  # len + type + data + crc
         if typ == b"IHDR":
+            if len(chunk) != 13:
+                raise CodecError("bad png IHDR length")
             w, h, bit_depth, color_type, _comp, _filt, interlace = struct.unpack(
                 ">IIBBBBB", chunk)
         elif typ == b"IDAT":
@@ -730,7 +740,7 @@ def decode_png(data: bytes) -> np.ndarray:
     channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(color_type)
     if channels is None:
         raise CodecError(f"unsupported png color type {color_type}")
-    raw = zlib.decompress(b"".join(idat))
+    raw = _inflate(b"".join(idat))
     stride = w * channels
     if len(raw) != h * (1 + stride):
         raise CodecError("png payload size mismatch")

@@ -6,11 +6,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from distributed_webcrawler_spark.operators.bloom import (
-    BloomFilter,
-    bloom_prefilter_udf,
-    build_bloom,
-)
+from distributed_webcrawler_spark.operators.bloom import BloomFilter, build_bloom
+from distributed_webcrawler_spark.operators.seen import ShardedSeenStore, prefilter_udf
 
 
 def test_no_false_negatives_and_fpp():
@@ -43,13 +40,13 @@ def test_distributed_build_and_prefilter(spark):
     df = spark.range(0, 20_000, 1, 8).select(F.xxhash64("id").alias("h"))
     bf = build_bloom(df, "h", expected_insertions=20_000, fpp=0.01)
     # every inserted hash is found via the pandas-UDF prefilter
-    tagged = df.withColumn("maybe", bloom_prefilter_udf(bf)(F.col("h")))
+    tagged = df.withColumn("maybe", prefilter_udf(bf)(F.col("h")))
     assert tagged.where(~F.col("maybe")).count() == 0
     # union merge across two disjoint builds == build over the union
     df2 = spark.range(20_000, 40_000, 1, 8).select(F.xxhash64("id").alias("h"))
     bf2 = build_bloom(df2, "h", expected_insertions=20_000, fpp=0.01)
     merged = bf.union(bf2)
-    both = df.unionByName(df2).withColumn("maybe", bloom_prefilter_udf(merged)(F.col("h")))
+    both = df.unionByName(df2).withColumn("maybe", prefilter_udf(merged)(F.col("h")))
     assert both.where(~F.col("maybe")).count() == 0
 
 
@@ -64,14 +61,12 @@ def test_sharded_bloom_build_update_prefilter(spark, tmp_path):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from distributed_webcrawler_spark.operators.bloom import ShardedBloomStore
-
     d = str(tmp_path / "shards")
     n_shards = 4
     df = spark.range(5000).select(
         F.xxhash64(F.col("id").cast("string")).alias("h"),
         F.pmod(F.col("id"), F.lit(n_shards)).cast("int").alias("shard"))
-    sb = ShardedBloomStore.for_capacity(d, n_shards, 100_000, 0.01)
+    sb = ShardedSeenStore.for_capacity("bloom", d, n_shards, 100_000, 0.01)
     written = sb.update(df, "h", "shard", version=1)
     assert sorted(written) == list(range(n_shards))
     assert sb.versions == {s: 1 for s in range(n_shards)}

@@ -370,3 +370,41 @@ def test_png_wavefront_banded_tall_narrow_bounded_memory():
     assert np.array_equal(
         C._unfilter_wavefront_banded(fts, raw, w, 3),
         C._unfilter_wavefront(fts, raw, w, 3))
+
+
+def _corruptions(blob: bytes, seed: int, n: int = 200):
+    """n seeded single-byte flips and n seeded truncations of blob."""
+    rng = np.random.default_rng(seed)
+    for _ in range(n):
+        flipped = bytearray(blob)
+        flipped[int(rng.integers(0, len(blob)))] ^= int(rng.integers(1, 256))
+        yield bytes(flipped)
+        yield blob[: int(rng.integers(0, len(blob)))]
+
+
+@pytest.mark.parametrize("fmt", ["dws1", "png", "jpeg", "webp", "dwsa", "wav"])
+def test_seeded_corruptions_fail_only_as_codec_error(fmt):
+    """Every failure to decode corrupted bytes is a CodecError — a zlib.error
+    (or any other exception) escaping the decoder fails a whole Spark task.
+    200 flips + 200 truncations per format."""
+    from distributed_webcrawler_spark.sources import jpeg, webp
+
+    px = codec.synth_pixels_photo(f"fuzz-{fmt}", 24, 20)
+    pcm = codec.synth_pcm(f"fuzz-{fmt}", 800, 8000)
+    blob, decode = {
+        "dws1": (codec.encode_image(px, "png"), codec.decode_image),
+        "png": (codec.encode_png(px), codec.decode_image),
+        "jpeg": (jpeg.encode_jpeg(px, quality=90), codec.decode_image),
+        "webp": (webp.encode_webp_lossless(px), codec.decode_image),
+        "dwsa": (codec.encode_audio(pcm, 8000, "wav"), codec.decode_audio),
+        "wav": (codec.encode_wav(pcm, 8000), codec.decode_audio),
+    }[fmt]
+    escaped = []
+    for bad in _corruptions(blob, seed=sum(map(ord, fmt))):
+        try:
+            decode(bad)
+        except codec.CodecError:
+            pass
+        except Exception as e:  # noqa: BLE001 - any other class is the failure
+            escaped.append(type(e).__name__)
+    assert escaped == []

@@ -6,9 +6,9 @@ busy for the full horizon; prints one JSON line and a per-decade table.
 
 Usage: python tools/bench_endurance.py [n_urls] [rounds] [budget]
 Env:   DWS_ENDURE_RECRAWL=k  — every k rounds evict+reinject the oldest
-       fetched URLs (TTL recrawl loop) under seen_filter="cuckoo" +
-       ShardedCuckooStore (round-3 verdict #5): adds per-phase cuckoo
-       occupancy==frontier checks and reports them with the flat-cost
+       fetched URLs (TTL recrawl loop) under seen_filter="cuckoo" with
+       bloom_shards=8, the sharded cuckoo seen set (operators/seen.py):
+       adds per-phase cuckoo occupancy==frontier checks and reports them with the flat-cost
        decades. Without the env var the original pure-drain bench runs.
 """
 
@@ -78,7 +78,7 @@ def main() -> None:
                     res = eng.reinject_for_recrawl(due)
                     total_reinjected += res["reinjected"]
                     occ_checks.append(bool(
-                        eng.cuckoo_shards.occupancy()
+                        eng.seen.occupancy()
                         == store.table("frontier").total_rows()))
                     due.unpersist()
         decades = {}
