@@ -5310,10 +5310,10 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the oracle row bounded). Plan: tokenize in-row (regexp, no UDF),
     ONE (term, doc_id) count agg, then df/tf_total stats and the capped
     head as two term-keyed aggs joined on term. The head pick reuses the
-    frontier's rank-window top-k (operators/topk.py); stopword-grade hot
-    terms are the salted-variant case the scheduler already handles
-    (topk_per_group_salted), and posting assembly collect_lists at most
-    the capped 10 rows per term — never the full df."""
+    frontier's rank-window top-k (operators/topk.py), whose map-side
+    partial top-k already bounds stopword-grade hot terms, and posting
+    assembly collect_lists at most the capped 10 rows per term — never
+    the full df."""
     from distributed_webcrawler_spark.operators import topk
 
     docs = _t(spark, sf_dir, "documents")

@@ -10,7 +10,8 @@ that engine Spark-first:
   managed by :mod:`.sources.store` (snapshot manifests -> ACID-ish commits,
   time travel, exact checkpoint resume; swap for Iceberg on a real cluster),
 - each crawl round is ONE Spark batch job (rank windows + anti-joins +
-  broadcast robots join + salted fetch join + Arrow-batched decode),
+  broadcast robots join + fetch join + Arrow-batched decode of each
+  distinct payload),
 - URL canonicalization / hashing / robots evaluation are vectorized
   (built-in functions where possible, pandas UDFs over Arrow batches else),
 - the URL-seen test is a per-partition Bloom filter merged via treeAggregate

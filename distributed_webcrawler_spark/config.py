@@ -71,12 +71,13 @@ class CrawlConfig:
     allowed_domains: list[str] = field(default_factory=list)
     disallowed_url_prefixes: list[str] = field(default_factory=list)
 
-    # Store fetched payload bytes INLINE in the pages table (the reference
-    # keeps content/rawHtml on the page entity, CrawledPageEntity.java:20-37).
-    # False = store only image_id as the blob reference: at the 10^10-URL
-    # tier inlining duplicates petabytes the payload store already holds,
-    # and the copy dominates the round's write+Arrow traffic. Decode (and
-    # the PSNR fidelity check it feeds) runs either way.
+    # Copy each fetched payload's bytes INLINE into its pages row (the
+    # reference keeps content/rawHtml on the page entity,
+    # CrawledPageEntity.java:20-37). False = pages hold only image_id as
+    # the blob reference: at the 10^10-URL tier inlining duplicates
+    # petabytes the payload store already holds. The decode plan is the
+    # same either way (each distinct payload decoded once per round); this
+    # flag only decides whether the blob is copied into pages.
     store_page_bytes: bool = True
 
     # engine mechanics
@@ -120,24 +121,17 @@ class CrawlConfig:
     http_rewrite_base: str | None = None
     http_pool_per_task: int = 16    # concurrent GETs per Arrow batch
     n_host_buckets: int = 64        # frontier partitioning key fan-out
-    # salting factor for the LEGACY two-phase salted rank operators
-    # (operators/topk.py topk_per_group_salted / _budget_salted). The
-    # default schedule path no longer salts: Spark 3.5+'s
-    # InferWindowGroupLimit makes the plain literal-k rank map-side
-    # partial (measured 1.5-1.8x faster under a 50%-hot host,
-    # tools/bench_skew.py); these knobs matter only on engines without
-    # that rewrite.
-    hot_host_salts: int = 8
-    hot_host_threshold: int = 5000
     # fetch/payload join strategy — the regime decides the right plan:
     #   "broadcast": per-round scheduled set ≪ web graph (the production
     #       10^10-tier regime: politeness bounds the round to ~budget×hosts
-    #       rows) — broadcast the scheduled side so the huge web_graph /
-    #       payload tables NEVER shuffle (hit/miss union shape, see _fetch).
+    #       rows) — broadcast the scheduled rows into the web_graph scan
+    #       (hit/miss union shape, see _fetch) and the round's image_ids
+    #       into the payload scan, so neither huge table ever shuffles.
     #   "shuffle": scheduled set is a sizable fraction of the corpus (drain
     #       benchmarks, backfills) — broadcast hash-table builds are serial
-    #       and would dominate; shuffle-hash both sides instead, which is
-    #       exactly the plan a cost-based optimizer picks given real stats.
+    #       and would dominate; shuffle-hash the fetch join and the image_id
+    #       semi join instead, which is exactly the plan a cost-based
+    #       optimizer picks given real stats.
     fetch_join_strategy: str = "broadcast"
 
     # URL validity regex — EXACTLY the reference's (BasicCrawler.java:37-39):

@@ -43,17 +43,6 @@ def shingles(text_col: str, k: int, max_chars: int) -> Column:
     )
 
 
-def shingles_sql(text_expr: str, k: int, max_chars: int, alias_i: str = "i") -> str:
-    """DuckDB twin fragment: use inside
-    ``FROM docs, generate_series(1, greatest(length(t)-k+1, 0)) g(i)``
-    with the shingle being ``substr(t, i, k)``."""
-    t = f"substr({text_expr}, 1, {max_chars})"
-    return (
-        f"generate_series(1, greatest(length({t}) - {k} + 1, 0)) g({alias_i})",
-        f"substr({t}, {alias_i}, {k})",
-    )
-
-
 def minhash_min_expr(shingle_col: str, seed: int) -> Column:
     """One MinHash component: the lexicographic MIN of md5('<seed>:'||shingle)
     over the doc's shingle set. A string-min over an (approx) random

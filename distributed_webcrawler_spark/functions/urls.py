@@ -20,7 +20,6 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType
 
 VALID_URL_REGEX = r"^https?://[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}(/.*)?$"
 
@@ -226,45 +225,3 @@ def resolve_and_canonicalize_udf(reference_compat: bool):
         return resolve_canonicalize_batch(base, href)
 
     return _fused
-
-
-def resolve_links_udf(keep_fragment: bool = True):
-    """C2 — (base_url, href) -> absolute URL, RFC 3986 resolution exactly as
-    Jsoup's ``abs:href`` (fragments kept by default, matching the reference).
-    Invalid/unresolvable hrefs -> null."""
-
-    from pyspark.sql.types import StringType
-
-    @pandas_udf(StringType())
-    def _resolve(base: pd.Series, href: pd.Series) -> pd.Series:
-        def one(b, h):
-            if h is None or b is None:
-                return None
-            try:
-                absu = urljoin(b, h.strip())
-            except ValueError:
-                return None
-            if not keep_fragment:
-                absu = absu.split("#", 1)[0]
-            return absu
-
-        return pd.Series([one(b, h) for b, h in zip(base, href)])
-
-    return _resolve
-
-
-@pandas_udf(LongType())
-def xxh64_pandas(urls: pd.Series) -> pd.Series:
-    """Pandas-UDF 64-bit hash variant kept for pipelines that already run in
-    Python (north_rule mentions vectorized 64-bit hashing); built-in
-    F.xxhash64 is preferred in the hot path. Uses blake2b-derived 64 bits —
-    stable across workers/versions (not seeded by PYTHONHASHSEED)."""
-    import hashlib
-
-    def h(u):
-        if u is None:
-            return None
-        v = int.from_bytes(hashlib.blake2b(u.encode(), digest_size=8).digest(), "little")
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    return urls.map(h)

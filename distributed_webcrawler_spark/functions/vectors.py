@@ -59,8 +59,3 @@ def cosine_arrow(a: Column, b: Column, decimals: int = 6) -> Column:
         return pd.Series(np.round(num / den, decimals))
 
     return _cos(a, b)
-
-
-def cosine_sql(a: str, b: str, decimals: int = 6) -> str:
-    """DuckDB twin (list_cosine_similarity computes the same quantity)."""
-    return f"round(list_cosine_similarity({a}, {b}), {decimals})"

@@ -37,11 +37,9 @@ def topk_per_group(df: DataFrame, group_cols: list[str], order_cols: list[Column
     exchange plus a final pass after — so at most k rows per (group, input
     partition) ever shuffle and a Zipf-hot group cannot pile its whole
     pending set into one window task. That makes the plain window both the
-    least-shuffle AND the skew-safe plan; measured on a 50%-hot-host
-    80M-row frontier it beats the two-phase salted rank by ~1.5x
-    (tools/bench_skew.py; BENCH.md "Skewed-host salted window"). A COLUMN
-    k disables the rewrite — use :func:`topk_per_group_budget`, which
-    smuggles a literal bound back in."""
+    least-shuffle AND the skew-safe plan. A COLUMN k disables the rewrite
+    — use :func:`topk_per_group_budget`, which smuggles a literal bound
+    back in."""
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
     ranked = df.withColumn(rank_col, F.row_number().over(w))
     k_expr = F.lit(k) if isinstance(k, int) else k
@@ -62,9 +60,11 @@ def topk_per_group_budget(df: DataFrame, group_cols: list[str],
     per group (verified: 2 WindowGroupLimit nodes in the executed plan),
     so the hot-host partition receives at most max_budget rows per input
     partition; the column conjunct then applies the exact per-key cap.
-    Replaces :func:`topk_per_group_budget_salted`'s second window+exchange
-    with zero extra passes. Budgets MUST be unique per key (same contract
-    as the salted variant)."""
+    Budgets MUST be unique per key — a duplicate budget row would duplicate
+    every joined row straight through the rank filter
+    (robots_fn.crawl_delay_budgets enforces this with a min-per-host
+    aggregate); one row per key means the join broadcasts at any corpus
+    size."""
     joined = df.join(F.broadcast(budgets), key_col, "left").withColumn(
         "__b", F.coalesce(F.col("budget"), F.lit(k_default))).drop("budget")
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
@@ -125,59 +125,6 @@ def global_row_number(df: DataFrame, order_cols: list[Column], seq_col: str = "s
         .drop("__pid", "__offset")
     )
     return out
-
-
-def topk_per_group_salted(df: DataFrame, group_cols: list[str], order_cols: list[Column],
-                          k: int, n_salts: int, salt_source: str = "url",
-                          rank_col: str = "rk") -> DataFrame:
-    """Skew-safe per-group top-k (north_rule: "salt hot hosts").
-
-    A Zipf-hot host puts 50%+ of pending rows into ONE window partition; a
-    plain rank window then runs single-threaded on that partition. Two-phase
-    fix: (1) rank within (group, salt) and keep k per shard — the hot
-    group's rows spread over n_salts tasks; (2) re-rank the <= k*n_salts
-    survivors per group and keep k. Exact: the true per-group top-k under a
-    total order is contained in the union of per-shard top-k.
-
-    The salt is DETERMINISTIC (hash of ``salt_source``), keeping reruns and
-    resumed runs byte-identical.
-    """
-    salted = df.withColumn("__salt", F.pmod(F.xxhash64(F.col(salt_source)), F.lit(n_salts)))
-    w1 = Window.partitionBy(*group_cols, "__salt").orderBy(*order_cols)
-    survivors = (
-        salted.withColumn("__rk1", F.row_number().over(w1))
-        .where(F.col("__rk1") <= k)
-        .drop("__rk1", "__salt")
-    )
-    return topk_per_group(survivors, group_cols, order_cols, k, rank_col)
-
-
-def topk_per_group_budget_salted(df: DataFrame, group_cols: list[str],
-                                 order_cols: list[Column], budgets: DataFrame,
-                                 key_col: str, k_default: int, n_salts: int,
-                                 salt_source: str = "url",
-                                 rank_col: str = "rk") -> DataFrame:
-    """Variable-cap variant of :func:`topk_per_group_salted`: each group's
-    k comes from the tiny ``budgets`` table (``key_col`` -> ``budget``),
-    falling back to ``k_default`` for keys with no row (e.g. hosts with no
-    robots.txt). Budgets MUST be unique per key — a duplicate budget row
-    would duplicate every joined frontier row straight through the rank
-    filter (robots_fn.crawl_delay_budgets enforces this with a min-per-host
-    aggregate). One row per key means the join BROADCASTS at any corpus
-    size; exactness argument is unchanged (per-shard top-b of a group
-    contains its global top-b for that group's own b)."""
-    joined = df.join(F.broadcast(budgets), key_col, "left").withColumn(
-        "__b", F.coalesce(F.col("budget"), F.lit(k_default))).drop("budget")
-    salted = joined.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(salt_source)), F.lit(n_salts)))
-    w1 = Window.partitionBy(*group_cols, "__salt").orderBy(*order_cols)
-    survivors = (
-        salted.withColumn("__rk1", F.row_number().over(w1))
-        .where(F.col("__rk1") <= F.col("__b"))
-        .drop("__rk1", "__salt")
-    )
-    return topk_per_group(survivors, group_cols, order_cols,
-                          F.col("__b"), rank_col).drop("__b")
 
 
 def grouped_row_number(df: DataFrame, group_cols: list[str],

@@ -27,9 +27,11 @@ Scale design notes:
 - pending/scheduled shuffles on `host` once, and the per-host rank ships
   only <= budget rows per input partition into that exchange (Catalyst's
   InferWindowGroupLimit map-side partial top-k — the skew handling, see
-  _schedule + tools/bench_skew.py); the robots join is broadcast; the
-  fetch join keys on `url` (unique per row — host skew cannot reach it)
-  with AQE skew splitting as backstop,
+  _schedule); the robots join is broadcast; the fetch join keys on `url`
+  (unique per row — host skew cannot reach it) with AQE skew splitting as
+  backstop,
+- each distinct payload of a round is decoded once, whatever the page
+  storage mode (_decode_pages),
 - the seen anti-join is prefiltered by a bloom or cuckoo seen set
   (operators/seen.py): at fpp 0.01 ~99% of truly-new candidates skip the
   frontier-sized join entirely (J1 scale path),
@@ -45,7 +47,6 @@ import os
 import time
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -57,96 +58,6 @@ from ..operators import topk
 from ..operators import seen as seen_sets
 from ..sources import codec
 from ..sources.store import SnapshotStore
-
-PAGES_SCHEMA = (
-    "session_id string, round int, sched_seq int, url string, url_hash long, host string, "
-    "depth int, parent_url string, status_code int, error_message string, image_id string, "
-    "caption string, bytes binary, fmt string, content_length long, decoded_w int, "
-    "decoded_h int, phash long, crawl_duration_ms long, partition_id int"
-)
-
-
-def _fetch_decode_fn(store_bytes: bool):
-    """mapInPandas body factory: per Arrow batch, resolve fetch outcome +
-    decode the image payload. The decode is the single PIL-swap point
-    (sources/codec). With ``store_bytes=False`` the decoded/validated blob
-    is NOT echoed into the output rows (pages reference it by image_id) —
-    at the 10^10 tier inlining would duplicate the payload store and the
-    copy dominates Arrow return traffic + the pages write."""
-
-    def _fetch_decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for pdf in it:
-            n = len(pdf)
-            # status 0 = connection-level failure (BasicCrawler.java:113,129
-            # maps interrupt/IO exceptions to 0); one canonical message for
-            # both "known-dead" (join mode) and transport-error (http mode)
-            # so live-fetch output is byte-identical to join-mode.
-            # Everything except the per-image decode is vectorized: the
-            # status/error/null-propagation columns are whole-array ops and
-            # the python loop below touches ONLY fetched rows with payloads.
-            status = pd.to_numeric(pdf["web_status"], errors="coerce").fillna(0).astype("int64")
-            st = status.to_numpy()
-            ok = st == 200
-            err = np.full(n, None, dtype=object)
-            err[st == 0] = "connection failed"
-            other = ~ok & (st != 0)
-            if other.any():
-                err[other] = [f"HTTP {s}" for s in st[other]]
-            caption = np.where(ok, pdf["caption"].to_numpy(dtype=object), None)
-            # a failed fetch has no payload (oracle sim nulls it too);
-            # keeps live-http output byte-identical to join mode
-            image_id = np.where(ok, pdf["image_id"].to_numpy(dtype=object), None)
-            fmt = np.where(ok, pdf["fmt"].to_numpy(dtype=object), None)
-            pb = pdf["pbytes"].to_numpy(dtype=object)
-            dw = np.full(n, None, dtype=object)
-            dh = np.full(n, None, dtype=object)
-            ph = np.full(n, None, dtype=object)
-            clen = np.full(n, None, dtype=object)
-            blob_out = np.full(n, None, dtype=object)
-            for i in np.flatnonzero(ok):
-                by = pb[i]
-                if by is None or (isinstance(by, float) and pd.isna(by)):
-                    continue
-                blob = bytes(by)
-                clen[i] = len(blob)
-                if store_bytes:
-                    blob_out[i] = blob
-                try:
-                    px, _fmt = codec.decode_image(blob)
-                    dh[i], dw[i] = px.shape[0], px.shape[1]
-                    ph[i] = codec.phash64(px)
-                except codec.CodecError as e:
-                    err[i] = f"decode error: {e}"
-            # NEVER let pandas infer int columns that can hold None: float64
-            # coercion silently rounds 64-bit phash values (see _typed_pdf)
-            i64 = lambda v: pd.array(v, dtype="Int64")  # noqa: E731
-            yield pd.DataFrame({
-                "session_id": pdf["session_id"].to_numpy(dtype=object),
-                "round": i64(pdf["round"]),
-                "sched_seq": i64(pdf["sched_seq"]),
-                "url": pdf["url"].to_numpy(dtype=object),
-                "url_hash": i64(pdf["url_hash"]),
-                "host": pdf["host"].to_numpy(dtype=object),
-                "depth": i64(pdf["depth"]),
-                "parent_url": pdf["parent_url"].to_numpy(dtype=object),
-                "status_code": i64(status),
-                "error_message": err,
-                "image_id": image_id,
-                "caption": caption,
-                "bytes": blob_out,
-                "fmt": fmt,
-                "content_length": i64(clen),
-                "decoded_w": i64(dw),
-                "decoded_h": i64(dh),
-                "phash": i64(ph),
-                "crawl_duration_ms": i64(np.zeros(n, dtype=np.int64)),
-                "partition_id": i64(np.full(n, pid, dtype=np.int64)),
-            })
-
-    return _fetch_decode
 
 
 def _typed_pdf(rows: list[tuple], names: list[str], int_cols: tuple) -> pd.DataFrame:
@@ -251,6 +162,22 @@ class CrawlEngine:
         return ["session_id", "url", "url_hash", "host", "host_bucket", "depth",
                 "priority", "parent_url", "discovered_round", "discovered_at"]
 
+    def _seed_rows(self, keys: DataFrame, rnd: int) -> DataFrame:
+        """Seed-shaped frontier rows (depth 0, priority 1.0, no parent)
+        discovered at round ``rnd`` for (session_id, url) keys: injected
+        seeds and recrawl re-injections share this shape."""
+        host = U.url_host(F.col("url"))
+        return keys.select(
+            "session_id", "url",
+            U.url_hash(F.col("url")).alias("url_hash"),
+            host.alias("host"),
+            U.host_bucket(host, self.cfg.n_host_buckets).alias("host_bucket"),
+            F.lit(0).alias("depth"),
+            F.lit(1.0).alias("priority"),
+            F.lit(None).cast("string").alias("parent_url"),
+            F.lit(rnd).alias("discovered_round"),
+            self._discovered_at(F.lit(rnd)).alias("discovered_at"))
+
     # ------------------------------------------------------------ session
     def start_session(self, seeds: DataFrame, session_id: str | None = None) -> None:
         """Seed injection (S1/S2): depth 0, priority 1.0, round 0. Seeds
@@ -264,18 +191,7 @@ class CrawlEngine:
         if not cfg.reference_compat:
             s = s.withColumn("url", U.canonicalize_urls(keep_fragment=False)(F.col("url")))
         s = s.groupBy("url").agg(F.min("seq").alias("seq"))  # first seed wins
-        rows = s.select(
-            F.lit(session_id).alias("session_id"),
-            F.col("url"),
-            U.url_hash(F.col("url")).alias("url_hash"),
-            U.url_host(F.col("url")).alias("host"),
-            U.host_bucket(U.url_host(F.col("url")), cfg.n_host_buckets).alias("host_bucket"),
-            F.lit(0).alias("depth"),
-            F.lit(1.0).alias("priority"),
-            F.lit(None).cast("string").alias("parent_url"),
-            F.lit(0).alias("discovered_round"),
-            self._discovered_at(F.lit(0)).alias("discovered_at"),
-        )
+        rows = self._seed_rows(s.select(F.lit(session_id).alias("session_id"), "url"), 0)
         fsnap, n_seeds = self._t("frontier").append_counted(rows, skip_empty=True)
         self._set_session_status(session_id, "RUNNING")
         if cfg.use_bloom and self.seen is None:
@@ -405,20 +321,27 @@ class CrawlEngine:
         return {sid for sid, (_, st) in latest.items() if st in ("PAUSED", "STOPPED")}
 
     # ------------------------------------------------------------- rounds
-    def _tripped_hosts(self, rnd: int) -> DataFrame | None:
-        """Hosts whose failure rate over the last cb_window_rounds trips the
-        circuit breaker — excluded from this round's scheduling; they
-        re-enter automatically once the window slides past the bad rounds.
-        The host_stats table is one row per (round, host): tiny (host
-        cardinality × window), so the agg and the anti-join's broadcast are
-        both bounded regardless of corpus size."""
-        cfg = self.cfg
+    def _host_window_stats(self, rnd: int) -> DataFrame | None:
+        """Per-host attempts ``a`` and failures ``f`` summed over the last
+        cb_window_rounds of host_stats — the sliding window both the circuit
+        breaker and the adaptive budgets read. host_stats is one row per
+        (round, host): tiny (host cardinality × window), so this agg and
+        its consumers' broadcasts are bounded regardless of corpus size."""
         hs = self._t("host_stats").read(self.spark)
         if hs is None:
             return None
-        w = hs.where(F.col("round") >= rnd - cfg.cb_window_rounds)
-        agg = w.groupBy("host").agg(F.sum("attempts").alias("a"),
-                                    F.sum("failures").alias("f"))
+        return (hs.where(F.col("round") >= rnd - self.cfg.cb_window_rounds)
+                .groupBy("host").agg(F.sum("attempts").alias("a"),
+                                     F.sum("failures").alias("f")))
+
+    def _tripped_hosts(self, rnd: int) -> DataFrame | None:
+        """Hosts whose failure rate over the window trips the circuit
+        breaker — excluded from this round's scheduling; they re-enter
+        automatically once the window slides past the bad rounds."""
+        cfg = self.cfg
+        agg = self._host_window_stats(rnd)
+        if agg is None:
+            return None
         return (agg.where((F.col("a") >= cfg.cb_min_attempts)
                           & (F.col("f") / F.col("a") > cfg.cb_max_fail_rate))
                 .select("host"))
@@ -426,18 +349,14 @@ class CrawlEngine:
     def _adaptive_budgets(self, rnd: int) -> DataFrame | None:
         """Graded per-host budgets from observed success rates — the analog
         dial between full budget and the breaker's open circuit: budget_h =
-        max(adaptive_min_budget, ceil(base * success_rate_h)) over the same
-        sliding host_stats window the breaker reads. Hosts below the
-        attempt floor keep the full budget (no evidence, no throttle).
-        The table is one row per host with enough recent attempts — tiny,
-        and the scheduler broadcasts it."""
+        max(adaptive_min_budget, ceil(base * success_rate_h)) over the
+        breaker's window. Hosts below the attempt floor keep the full
+        budget (no evidence, no throttle). One row per host with enough
+        recent attempts — tiny, and the scheduler broadcasts it."""
         cfg = self.cfg
-        hs = self._t("host_stats").read(self.spark)
-        if hs is None:
+        agg = self._host_window_stats(rnd)
+        if agg is None:
             return None
-        w = hs.where(F.col("round") >= rnd - cfg.cb_window_rounds)
-        agg = w.groupBy("host").agg(F.sum("attempts").alias("a"),
-                                    F.sum("failures").alias("f"))
         return (agg.where(F.col("a") >= cfg.cb_min_attempts)
                 .select("host",
                         F.greatest(
@@ -510,10 +429,7 @@ class CrawlEngine:
             # Skew handling is Catalyst's InferWindowGroupLimit: the LITERAL
             # rank bound becomes a map-side partial top-k per host BEFORE
             # the exchange, so a Zipf-hot host ships <= k rows per input
-            # partition instead of its whole pending set — measured ~1.5x
-            # faster than the two-phase salted rank it replaces on a
-            # 50%-hot-host frontier (tools/bench_skew.py; the salted
-            # operators remain for engines without the rewrite).
+            # partition instead of its whole pending set.
             if budgets is not None:
                 # per-host Crawl-delay caps: variable k, no constant-fold
                 # shortcut (a host's budget may be below any row bound);
@@ -704,27 +620,34 @@ class CrawlEngine:
                           pool=self.cfg.http_pool_per_task,
                           user_agent=self.cfg.user_agent), schema=schema)
 
-    def _decode_pages_dedup(self, fetched: DataFrame) -> DataFrame:
-        """S5/C7, blob-reference mode (store_page_bytes=False): decode each
-        DISTINCT payload exactly once, then join metadata-width stats back
-        to the scheduled rows.
+    def _decode_pages(self, fetched: DataFrame) -> DataFrame:
+        """S5/C7: decode each DISTINCT payload of the round exactly once,
+        then join metadata-width stats back to the scheduled rows.
 
-        Why this is the scale plan: the naive join attaches the blob to
-        every scheduled row BEFORE decode, so each payload's bytes fan out
-        once per referencing URL — join output, Arrow serialization, and
-        worker transfer all carry #urls x blob_size. Measured on this box
-        (12M-url fixture, tools/diag_round.py): the decode stage burned
-        211 JVM-CPU-s at local[16] but 898 at local[32] — pure memory-bus
-        saturation from blob memcpy, the single biggest anti-scaling term
-        in the round. Here bytes NEVER fan out and never shuffle: the
-        payload table is semi-join-pruned to the round's distinct
-        image_ids (ids broadcast — bounded by the politeness budget),
-        decoded in place on its own scan partitions, and only (image_id,
-        w, h, phash, caption, fmt, len, err) rows — a few hundred bits
-        each — travel to the stats join (AQE broadcasts them when small).
-        Row assembly is pure Column exprs: no per-row Python anywhere.
+        Why this is the scale plan: joining the blob to every scheduled row
+        BEFORE decode fans each payload's bytes out once per referencing
+        URL — join output, Arrow serialization, and worker transfer all
+        carry #urls x blob_size. Measured on a 12M-url fixture
+        (tools/diag_round.py), that decode stage burned 211 JVM-CPU-s at
+        local[16] but 898 at local[32] — pure memory-bus saturation from
+        blob memcpy, the single biggest anti-scaling term in the round.
+        Here bytes never fan out before decode: the payload table is
+        semi-join-pruned to the round's distinct image_ids (ids broadcast —
+        bounded by the politeness budget — or shuffle-hash in the drain
+        regime), decoded once per distinct image,
+        and only (image_id, w, h, phash, caption, fmt, len, err) rows — a
+        few hundred bits each — travel to the stats join (AQE broadcasts
+        them when small). Row assembly is pure Column exprs: no per-row
+        Python anywhere.
+
+        ``store_page_bytes`` only decides whether the blob is copied into
+        pages: when set, the decode echoes it once per distinct image as
+        ``pblob`` and the stats join copies it into every 200 row that
+        references the image; when unset ``pblob`` is always null, so the
+        Arrow return traffic does not grow.
         """
         cfg = self.cfg
+        store_bytes = cfg.store_page_bytes
         slim = fetched.select(
             "session_id", "round", "sched_seq", "url", "url_hash", "host", "depth",
             "parent_url", "web_status",
@@ -757,14 +680,14 @@ class CrawlEngine:
                             derr = f"decode error: {e}"
                     rows.append((iid, cap, fmt,
                                  len(blob) if blob is not None else None,
-                                 dw, dh, ph, derr))
+                                 dw, dh, ph, derr, blob if store_bytes else None))
                 yield _typed_pdf(rows, [
-                    "image_id", "pcaption", "pfmt", "plen", "dw", "dh", "dphash", "derr"],
-                    int_cols=("plen", "dw", "dh", "dphash"))
+                    "image_id", "pcaption", "pfmt", "plen", "dw", "dh", "dphash", "derr",
+                    "pblob"], int_cols=("plen", "dw", "dh", "dphash"))
 
         stats = to_decode.mapInPandas(_decode_unique, schema=(
             "image_id string, pcaption string, pfmt string, plen long, "
-            "dw int, dh int, dphash long, derr string"))
+            "dw int, dh int, dphash long, derr string, pblob binary"))
         joined = slim.join(stats, "image_id", "left")
         st = F.coalesce(F.col("web_status"), F.lit(0)).cast("int")
         return joined.select(
@@ -773,13 +696,16 @@ class CrawlEngine:
             F.col("url_hash").cast("long").alias("url_hash"), F.col("host"),
             F.col("depth").cast("int").alias("depth"), F.col("parent_url"),
             st.alias("status_code"),
+            # status 0 = connection-level failure (BasicCrawler.java:113,129
+            # maps interrupt/IO exceptions to 0): one message for known-dead
+            # links (join mode) and transport errors (http mode)
             F.when(st == 200, F.col("derr"))
              .otherwise(F.when(st == 0, F.lit("connection failed"))
                         .otherwise(F.concat(F.lit("HTTP "), st.cast("string"))))
              .alias("error_message"),
             F.col("image_id"),
             F.when(st == 200, F.col("pcaption")).alias("caption"),
-            F.lit(None).cast("binary").alias("bytes"),
+            F.when(st == 200, F.col("pblob")).alias("bytes"),
             F.when(st == 200, F.col("pfmt")).alias("fmt"),
             F.col("plen").cast("long").alias("content_length"),
             F.col("dw").cast("int").alias("decoded_w"),
@@ -788,44 +714,6 @@ class CrawlEngine:
             F.lit(0).cast("long").alias("crawl_duration_ms"),
             F.spark_partition_id().alias("partition_id"),
         )
-
-    def _decode_pages(self, fetched: DataFrame) -> DataFrame:
-        """S5/C7: attach payload bytes and decode in Arrow batches.
-
-        Bytes are STATIONARY: the slim scheduled rows (bounded by the
-        politeness budget) are broadcast INTO the payload scan — the same
-        hit/miss shape as the fetch join (J4) — so image bytes are neither
-        shuffled nor broadcast. At 10^10-URL scale the payload side is
-        petabytes; broadcasting it (the naive direction) is impossible, and
-        shuffling it would melt the network. Decode parallelism follows the
-        payload scan partitioning (`spark.sql.files.maxPartitionBytes`
-        sizes it). Scheduled rows with no payload (dead link / no image)
-        come back through the miss branch as status-coded page rows; the
-        miss anti-join re-reads only the pruned image_id column."""
-        if not self.cfg.store_page_bytes:
-            # blob-reference mode: decode distinct payloads once, join stats
-            # (bytes never fan out per URL — see _decode_pages_dedup)
-            return self._decode_pages_dedup(fetched)
-        pay = self.payloads.select(
-            "image_id", F.col("bytes").alias("pbytes"), F.col("caption"), F.col("fmt"))
-        slim = fetched.select(
-            "session_id", "round", "sched_seq", "url", "url_hash", "host", "depth",
-            "parent_url", "web_status", "image_id")
-        decode = _fetch_decode_fn(self.cfg.store_page_bytes)
-        if self.cfg.fetch_join_strategy == "shuffle":
-            # no hint: Catalyst/AQE picks — it auto-broadcasts the payload
-            # pool when it is small (keeps bytes out of the shuffle) and
-            # falls back to a shuffled hash join when it is not
-            joined = slim.join(pay, "image_id", "left")
-            return joined.mapInPandas(decode, schema=PAGES_SCHEMA)
-        hit = pay.join(F.broadcast(slim), "image_id")
-        miss = (
-            slim.join(F.broadcast(hit.select("url")), "url", "left_anti")
-            .withColumn("pbytes", F.lit(None).cast("binary"))
-            .withColumn("caption", F.lit(None).cast("string"))
-            .withColumn("fmt", F.lit(None).cast("string"))
-        )
-        return hit.unionByName(miss).mapInPandas(decode, schema=PAGES_SCHEMA)
 
     def _expand(self, fetched: DataFrame, rnd: int) -> DataFrame:
         """C1/C2/C4/C5 + J1: explode out_links of ok-pages under the depth
@@ -1164,19 +1052,8 @@ class CrawlEngine:
         re-add is an idempotent no-op over the ghost fingerprint."""
         res = self.evict_for_recrawl(urls=urls, allow_stale_filter=allow_stale_filter)
         rnd = res["round"]
-        cfg = self.cfg
-        rows = urls.select("session_id", "url").distinct().select(
-            "session_id", "url",
-            U.url_hash(F.col("url")).alias("url_hash"),
-            U.url_host(F.col("url")).alias("host"),
-            U.host_bucket(U.url_host(F.col("url")), cfg.n_host_buckets).alias("host_bucket"),
-            F.lit(0).alias("depth"),
-            F.lit(1.0).alias("priority"),
-            F.lit(None).cast("string").alias("parent_url"),
-            F.lit(rnd).alias("discovered_round"),
-            self._discovered_at(F.lit(rnd)).alias("discovered_at"))
-        fsnap, n = self._t("frontier").append_counted(
-            rows.select(*self._frontier_row_cols()), skip_empty=True)
+        rows = self._seed_rows(urls.select("session_id", "url").distinct(), rnd)
+        fsnap, n = self._t("frontier").append_counted(rows, skip_empty=True)
         if n > 0 and self.seen is not None:
             self.seen.add_snapshot(self._t("frontier"), fsnap)
         self._checkpoint(rnd)

@@ -64,8 +64,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    - AQE on: runtime coalescing + skew-join splitting complements our
-      explicit hot-host salting (SURVEY.md §4.2).
+    - AQE on: runtime coalescing + skew-join splitting (SURVEY.md §4.2).
     - Arrow on: every Python-side UDF in this engine is a pandas UDF /
       mapInPandas over Arrow batches; no row-at-a-time Python anywhere.
     - shuffle partitions default to 2x cores locally; on a real cluster this

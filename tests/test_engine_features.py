@@ -102,24 +102,38 @@ def test_fetch_join_strategy_shuffle_matches_broadcast(spark, fixture_dir, wareh
 
 
 def test_store_page_bytes_off_keeps_decode_and_reference(spark, fixture_dir, warehouse):
-    """store_page_bytes=False: pages carry NO inline blob (10^10-tier mode —
-    the payload store already holds the bytes, keyed by image_id) but the
-    decode still ran: decoded_w/h + phash + content_length populated, and
-    image_id still references the payload row."""
-    cfg = CrawlConfig(max_depth=0, budget_per_host_per_round=10_000,
-                      max_rounds=1, use_bloom=False, respect_robots=False,
-                      store_page_bytes=False)
+    """Both page-storage modes run the one decode plan: the same crawl with
+    store_page_bytes on and off writes the same pages except `bytes` (and
+    the plan-dependent partition_id / crawl_duration_ms). Off-mode pages
+    carry NO inline blob (10^10-tier mode — the payload store already holds
+    the bytes, keyed by image_id) but the decode still ran and image_id
+    still references the payload row; on-mode bytes are exactly the
+    payload blob of the row's image_id."""
     wg = spark.read.parquet(f"{fixture_dir}/web_graph")
     pay = spark.read.parquet(f"{fixture_dir}/payloads")
-    store = SnapshotStore(warehouse)
-    eng = CrawlEngine(spark, store, cfg, wg, pay, None)
-    seeds = wg.select("url", F.monotonically_increasing_id().cast("int").alias("seq")).limit(100)
-    eng.start_session(seeds)
-    eng.run()
+    seeds = spark.createDataFrame(
+        [(r.url, i) for i, r in enumerate(wg.select("url").limit(100).collect())],
+        "url string, seq int")
+    pages = {}
+    for inline in (True, False):
+        cfg = CrawlConfig(max_depth=0, budget_per_host_per_round=10_000,
+                          max_rounds=1, use_bloom=False, respect_robots=False,
+                          store_page_bytes=inline)
+        store = SnapshotStore(f"{warehouse}/inline-{inline}")
+        eng = CrawlEngine(spark, store, cfg, wg, pay, None)
+        eng.start_session(seeds)
+        eng.run()
+        pages[inline] = store.table("pages").read(spark)
+    on, off = pages[True], pages[False]
 
-    pages = store.table("pages").read(spark)
-    assert pages.where(F.col("bytes").isNotNull()).count() == 0
-    ok = pages.where((F.col("status_code") == 200) & F.col("image_id").isNotNull())
+    cols = [c for c in off.columns
+            if c not in ("bytes", "partition_id", "crawl_duration_ms")]
+    rows_on = sorted(map(repr, on.select(*cols).collect()))
+    assert rows_on == sorted(map(repr, off.select(*cols).collect()))
+    assert len(rows_on) == 100
+
+    assert off.where(F.col("bytes").isNotNull()).count() == 0
+    ok = off.where((F.col("status_code") == 200) & F.col("image_id").isNotNull())
     n_ok = ok.count()
     assert n_ok > 0
     decoded = ok.where(F.col("phash").isNotNull() & F.col("decoded_w").isNotNull()
@@ -128,6 +142,14 @@ def test_store_page_bytes_off_keeps_decode_and_reference(spark, fixture_dir, war
     # the reference resolves: joining back to payloads recovers every blob
     joined = ok.select("image_id").join(pay, "image_id").count()
     assert joined == n_ok
+
+    # on-mode: every 200 row with a payload carries exactly that blob, and
+    # no other row carries bytes
+    with_payload = (on.where(F.col("status_code") == 200)
+                    .join(pay.select("image_id", F.col("bytes").alias("pbytes")), "image_id"))
+    assert with_payload.count() == n_ok
+    assert with_payload.where(~F.col("bytes").eqNullSafe(F.col("pbytes"))).count() == 0
+    assert on.where(F.col("bytes").isNotNull()).count() == n_ok
 
 
 def test_stop_pause_resume_session(spark, fixture_dir, warehouse):

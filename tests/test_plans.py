@@ -12,6 +12,8 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -109,6 +111,36 @@ def test_fetch_join_broadcasts_scheduled_side(spark, fixture_dir, warehouse):
     assert "LeftAnti" in plan
     assert "SortMergeJoin" not in plan  # web_graph side must not shuffle
     assert "RightOuter" not in plan and "LeftOuter" not in plan
+    for c in eng._round_caches:
+        c.unpersist()
+
+
+def test_pages_plan_decodes_each_distinct_image_once(spark, fixture_dir, warehouse):
+    """One decode plan for both page-storage modes: the pages plan holds
+    exactly ONE Python map node, and its input is the payload scan
+    left-semi-joined to the round's image_ids — decode runs once per
+    distinct image, never once per scheduled URL."""
+    from distributed_webcrawler_spark import CrawlConfig
+    from distributed_webcrawler_spark.plans.engine import CrawlEngine
+    from distributed_webcrawler_spark.sources.store import SnapshotStore
+
+    wg = spark.read.parquet(f"{fixture_dir}/web_graph")
+    pay = spark.read.parquet(f"{fixture_dir}/payloads")
+    seeds = spark.read.parquet(f"{fixture_dir}/seeds")
+    eng = CrawlEngine(spark, SnapshotStore(warehouse),
+                      CrawlConfig(budget_per_host_per_round=3), wg, pay, None)
+    eng.start_session(seeds)
+    sched, _n = eng._schedule(eng.pending(), 1)
+    fetched = eng._fetch(sched)
+    for inline in (True, False):
+        eng.cfg.store_page_bytes = inline
+        lines = _plan(eng._decode_pages(fetched)).splitlines()
+        py = [i for i, ln in enumerate(lines)
+              if "MapInPandas" in ln or "EvalPython" in ln or "MapInArrow" in ln]
+        assert len(py) == 1 and "MapInPandas" in lines[py[0]], lines
+        # first join below the map node: the payload scan semi-joined to ids
+        below = next(ln for ln in lines[py[0] + 1:] if "Join" in ln)
+        assert re.search(r"\[image_id#\d+\], \[image_id#\d+\], LeftSemi", below), below
     for c in eng._round_caches:
         c.unpersist()
 
@@ -220,11 +252,9 @@ def test_schedule_rank_is_window_group_limit(spark):
     """The engine's per-host rank must plan with Catalyst's
     InferWindowGroupLimit rewrite — TWO WindowGroupLimit nodes (map-side
     Partial before the exchange, Final after): that partial top-k IS the
-    skew handling (a hot host ships <= k rows per input partition), and
-    it's why the schedule no longer pays the two-phase salted rank
-    (tools/bench_skew.py: plain beats salted 1.5x on a 50%-hot-host
-    frontier). Guards against a regression to a column-only rank filter,
-    which silently disables the rewrite."""
+    skew handling (a hot host ships <= k rows per input partition).
+    Guards against a regression to a column-only rank filter, which
+    silently disables the rewrite."""
     from pyspark.sql import functions as F
 
     from distributed_webcrawler_spark.operators.topk import (

@@ -1,56 +1,20 @@
-"""Skew machinery: salted two-phase top-k is EXACTLY equal to the plain
-window on Zipf-skewed data; salted_join matches a plain join."""
+"""Skew: the single-window variable-cap rank stays exact when one host
+holds half the frontier."""
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from distributed_webcrawler_spark.operators.skew import find_hot_keys, salted_join
-from distributed_webcrawler_spark.operators.topk import (
-    tie_break_cols,
-    topk_per_group,
-    topk_per_group_salted,
-)
+from distributed_webcrawler_spark.operators.topk import tie_break_cols, topk_per_group_budget
 
 
-def _skewed_frontier(spark):
-    # host0 gets ~70% of rows (worst-case Zipf head)
-    return spark.range(0, 20_000).select(
-        F.when(F.col("id") % 10 < 7, "host0").otherwise(
-            F.concat(F.lit("host"), (F.col("id") % 10).cast("string"))).alias("host"),
-        F.concat(F.lit("https://h/p/"), F.col("id").cast("string")).alias("url"),
-        (F.pmod(F.col("id") * 37, 10) / 10.0 + 0.05).alias("priority"),
-        F.timestamp_seconds(F.col("id") % 5).alias("discovered_at"),
-    )
-
-
-def test_salted_topk_exact(spark):
-    df = _skewed_frontier(spark)
-    order = tie_break_cols()
-    plain = topk_per_group(df, ["host"], order, 25).select("host", "url", "rk")
-    salted = topk_per_group_salted(df, ["host"], order, 25, n_salts=8).select("host", "url", "rk")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_join_matches_plain_join(spark):
-    left = _skewed_frontier(spark)
-    right = spark.createDataFrame(
-        [(f"host{i}", f"rules-{i}") for i in range(10)], "host string, rules string")
-    hot = find_hot_keys(left, "host", threshold=5_000)
-    assert {r.host for r in hot.collect()} == {"host0"}
-    plain = left.join(right, "host").select("url", "rules")
-    salted = salted_join(left, right, "host", hot, n_salts=8, salt_source="url") \
-        .select("url", "rules")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_budget_salted_topk_exact_on_pathological_host(spark):
+def test_budget_topk_exact_on_pathological_host(spark):
     """The Gini≈1 case q_frontier_gini detects: ONE host holds 50% of the
-    frontier. topk_per_group_budget_salted (variable per-host caps) must
-    be permutation-identical to the unsalted variable-cap rank — same
+    frontier. topk_per_group_budget (variable per-host caps, literal
+    max-budget conjunct for the WindowGroupLimit rewrite) must be
+    permutation-identical to the plain variable-cap rank window — same
     (host, url, rk) set — under that skew, including budget fallbacks."""
-    from distributed_webcrawler_spark.operators.topk import topk_per_group_budget_salted
-
     df = spark.range(0, 40_000).select(
         F.when(F.col("id") % 2 == 0, "hot.example.com").otherwise(
             F.concat(F.lit("h"), (F.col("id") % 97).cast("string"))).alias("host"),
@@ -61,11 +25,7 @@ def test_budget_salted_topk_exact_on_pathological_host(spark):
     budgets = spark.createDataFrame(
         [("hot.example.com", 40), ("h1", 3), ("h2", 1)], "host string, budget int")
     order = tie_break_cols()
-    got = topk_per_group_budget_salted(
-        df, ["host"], order, budgets, "host", k_default=5, n_salts=8)
-    # unsalted reference: plain window with the same variable cap
-    from pyspark.sql import Window
-
+    got = topk_per_group_budget(df, ["host"], order, budgets, "host", 5, max_budget=40)
     joined = (df.join(F.broadcast(budgets), "host", "left")
               .withColumn("__b", F.coalesce(F.col("budget"), F.lit(5))))
     w = Window.partitionBy("host").orderBy(*order)
@@ -76,31 +36,3 @@ def test_budget_salted_topk_exact_on_pathological_host(spark):
     assert g == e and len(g) > 0
     # the hot host actually hit its larger budget
     assert sum(1 for h, _, _ in g if h == "hot.example.com") == 40
-
-
-def test_budget_grouplimit_variant_matches_salted(spark):
-    """topk_per_group_budget (single window, literal max-budget conjunct
-    for the WindowGroupLimit rewrite) is permutation-identical to the
-    two-phase salted variant on the pathological 50%-hot-host frame."""
-    from distributed_webcrawler_spark.operators.topk import (
-        topk_per_group_budget,
-        topk_per_group_budget_salted,
-    )
-
-    df = spark.range(0, 40_000).select(
-        F.when(F.col("id") % 2 == 0, "hot.example.com").otherwise(
-            F.concat(F.lit("h"), (F.col("id") % 97).cast("string"))).alias("host"),
-        F.concat(F.lit("https://h/p/"), F.col("id").cast("string")).alias("url"),
-        (F.pmod(F.col("id") * 37, 1000) / 1000.0).alias("priority"),
-        F.timestamp_seconds(F.col("id") % 7).alias("discovered_at"),
-    )
-    budgets = spark.createDataFrame(
-        [("hot.example.com", 40), ("h1", 3), ("h2", 1)], "host string, budget int")
-    order = tie_break_cols()
-    a = topk_per_group_budget(df, ["host"], order, budgets, "host", 5,
-                              max_budget=40)
-    b = topk_per_group_budget_salted(df, ["host"], order, budgets, "host", 5,
-                                     n_salts=8)
-    ra = sorted(tuple(r) for r in a.select("host", "url", "rk").collect())
-    rb = sorted(tuple(r) for r in b.select("host", "url", "rk").collect())
-    assert ra == rb and len(ra) > 0
