@@ -8,10 +8,12 @@ Mirrors BasicCrawler.java:225-287 exactly:
 - null path is treated as "/" (:269),
 - empty rule values are skipped (:255, 260).
 
-Execution shape: robots is a tiny per-host table -> parse once per round
-with a pandas UDF, broadcast-join onto the scheduled frontier slice by
-host, evaluate the prefix rules vectorized on Arrow batches. The reference
-instead keeps an unbounded per-worker HashMap cache (BasicCrawler.java:41).
+Execution shape: robots is a tiny per-host table -> parse it once with a
+pandas UDF, broadcast-join it onto the scheduled frontier slice by host,
+and evaluate the prefix rules as a native Column expression (higher-order
+``exists`` over the rule arrays), so the gate runs JVM-side with no Python
+worker between schedule and fetch. The reference instead keeps an
+unbounded per-worker HashMap cache (BasicCrawler.java:41).
 """
 
 from __future__ import annotations
@@ -104,16 +106,6 @@ def parse_robots_udf(texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"allow": [r[0] for r in rows], "disallow": [r[1] for r in rows]})
 
 
-@pandas_udf(T.BooleanType())
-def robots_allowed_udf(paths: pd.Series, allows: pd.Series, disallows: pd.Series) -> pd.Series:
-    out = []
-    for p, a, d in zip(paths, allows, disallows):
-        a = list(a) if a is not None else []
-        d = list(d) if d is not None else []
-        out.append(robots_is_allowed(p, a, d))
-    return pd.Series(out)
-
-
 def parse_robots_table(robots_df: DataFrame) -> DataFrame:
     """(host, robots_txt) -> (host, allow: array, disallow: array)."""
     parsed = robots_df.select(
@@ -158,19 +150,21 @@ def crawl_delay_budgets(robots_df: DataFrame, round_window_s: int,
 
 
 def gate_by_robots(scheduled: DataFrame, robots_rules: DataFrame, path_col: Column) -> DataFrame:
-    """Broadcast-join the (small) parsed rules table, evaluate the gate, and
-    tag each row with robots_allowed:boolean. Hosts with no robots row are
-    allowed (reference: unfetchable robots => allow-all)."""
+    """Broadcast-join the (small) parsed rules table and tag each row with
+    robots_allowed:boolean — :func:`robots_is_allowed` as a native
+    expression: a null path reads as "/", Allow prefixes are checked first
+    and win, rules are literal prefixes ('*', '$', '%', '_' carry no
+    wildcard meaning). A host with no robots row has null rule arrays;
+    ``exists`` over null is null, which no CASE branch takes, so null rules
+    read as empty and the row is allowed (reference: unfetchable robots =>
+    allow-all)."""
+    path = F.coalesce(path_col, F.lit("/"))
     joined = scheduled.join(F.broadcast(robots_rules), on="host", how="left")
     return joined.withColumn(
         "robots_allowed",
-        F.when(F.col("allow").isNull() & F.col("disallow").isNull(), F.lit(True)).otherwise(
-            robots_allowed_udf(
-                path_col,
-                F.coalesce(F.col("allow"), F.array()),
-                F.coalesce(F.col("disallow"), F.array()),
-            )
-        ),
+        F.when(F.exists("allow", lambda a: path.startswith(a)), F.lit(True))
+        .when(F.exists("disallow", lambda d: path.startswith(d)), F.lit(False))
+        .otherwise(F.lit(True)),
     ).drop("allow", "disallow")
 
 

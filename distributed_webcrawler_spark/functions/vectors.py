@@ -46,16 +46,24 @@ def cosine_arrow(a: Column, b: Column, decimals: int = 6) -> Column:
     round washes out summation-order ulps exactly as it does between the
     JVM and DuckDB (the ivf_assign_broadcast precedent). Keep plain
     `cosine` where the pair count is small — a Python worker round-trip
-    isn't free."""
+    isn't free. A null vector, a ragged pair or a null component yields
+    null, as the HOF form's zip_with does."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        x = np.asarray(va.tolist(), dtype=np.float64)
-        y = np.asarray(vb.tolist(), dtype=np.float64)
-        num = (x * y).sum(axis=1)
-        den = np.sqrt((x * x).sum(axis=1)) * np.sqrt((y * y).sum(axis=1))
-        return pd.Series(np.round(num / den, decimals))
+        out = np.full(len(va), np.nan)  # NaN leaves the UDF as null
+        by_dim: dict[int, list[int]] = {}
+        for i, (a, b) in enumerate(zip(va, vb)):
+            if a is not None and b is not None and len(a) == len(b):
+                by_dim.setdefault(len(a), []).append(i)
+        for dim, rows in by_dim.items():
+            x = np.asarray([va.iat[i] for i in rows], dtype=np.float64).reshape(len(rows), dim)
+            y = np.asarray([vb.iat[i] for i in rows], dtype=np.float64).reshape(len(rows), dim)
+            num = (x * y).sum(axis=1)
+            den = np.sqrt((x * x).sum(axis=1)) * np.sqrt((y * y).sum(axis=1))
+            out[rows] = np.round(num / den, decimals)
+        return pd.Series(out)
 
     return _cos(a, b)

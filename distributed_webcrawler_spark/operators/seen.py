@@ -61,7 +61,12 @@ def create(cfg, warehouse: str):
     """An empty seen set of the kind and size ``cfg`` asks for."""
     validate(cfg)
     if cfg.bloom_shards > 1:
-        return _sharded(cfg, warehouse, cfg.seen_filter)
+        store = _sharded(cfg, warehouse, cfg.seen_filter)
+        # a fresh store over a directory that already holds blobs (a new
+        # engine's start_session on an existing warehouse) starts above
+        # them: no blob an older checkpoint names is rewritten
+        store.version_floor = store.highest_version_on_disk()
+        return store
     return DriverSeenSet(
         _empty_filter(cfg.seen_filter, _capacity(cfg.seen_filter, cfg.bloom_expected_insertions),
                       cfg.bloom_fpp),
@@ -221,6 +226,10 @@ def _blob_path(directory: str, kind: str, shard: int, version: int) -> str:
     return os.path.join(directory, f"{_SHARD_PREFIX[kind]}-{shard:05d}-v{version:08d}.bin")
 
 
+def _blob_pattern(kind: str) -> re.Pattern:
+    return re.compile(rf"{_SHARD_PREFIX[kind]}-(\d{{5}})-v(\d{{8}})\.bin")
+
+
 def _read_blob(directory: str, kind: str, shard: int, version: int):
     with open(_blob_path(directory, kind, shard, version), "rb") as f:
         return _FILTERS[kind].from_bytes(f.read())
@@ -250,6 +259,8 @@ class ShardedSeenStore:
         self.fpp = fpp
         # a shard absent here has no filter yet: every key reads "definitely new"
         self.versions: dict[int, int] = {}
+        # versions at or below this may exist on disk from an earlier store
+        self.version_floor = 0
         os.makedirs(directory, exist_ok=True)
 
     @classmethod
@@ -267,7 +278,7 @@ class ShardedSeenStore:
         between rounds. A resumed re-run of a torn round recomputes the
         same max(checkpointed versions)+1 over the same data, so it
         rewrites only files no checkpoint names."""
-        return max(self.versions.values(), default=0) + 1
+        return max(self.versions.values(), default=self.version_floor) + 1
 
     # -- the seen-set interface ---------------------------------------------
     def prefilter(self) -> Column:
@@ -379,8 +390,13 @@ class ShardedSeenStore:
     def prune_versions(self, *manifests: dict) -> None:
         """Delete every blob file none of the {shard: version} manifests names."""
         keep = {(int(s), int(v)) for m in manifests for s, v in m.items()}
-        pat = re.compile(rf"{_SHARD_PREFIX[self.kind]}-(\d{{5}})-v(\d{{8}})\.bin")
+        pat = _blob_pattern(self.kind)
         for f in os.listdir(self.directory):
             m = pat.fullmatch(f)
             if m and (int(m[1]), int(m[2])) not in keep:
                 os.unlink(os.path.join(self.directory, f))
+
+    def highest_version_on_disk(self) -> int:
+        pat = _blob_pattern(self.kind)
+        return max((int(m[2]) for f in os.listdir(self.directory) if (m := pat.fullmatch(f))),
+                   default=0)

@@ -4,7 +4,7 @@ One crawl round = ONE Spark job (SURVEY.md §3.2 Spark equivalent):
 
     pending = frontier ANTI-JOIN progress            (claim set, F3/J2)
     scheduled = rank window per host under budget    (W1/W4; compat: global ZREVRANGE order)
-    gate by robots (broadcast join + Arrow UDF)      (J3/F4/C9)
+    gate by robots (broadcast join, native prefix)   (J3/F4/C9)
     fetch = join web_graph, join payloads, decode    (J4/S5/C7, Arrow batches)
     append pages; expand links -> canonicalize ->    (S7/C1/C2/C4/C5)
     first-wins in-round dedup -> seen prefilter ->
@@ -797,10 +797,11 @@ class CrawlEngine:
             self._clear_round_caches()
             self.last_stage_secs = stages
             return {"round": rnd, "scheduled": 0}
-        sched = sched.cache()
-        self._round_caches.append(sched)
-
-        gated = self._gate_robots(sched, rnd)
+        # cache the GATED frame: the fetch, the blocked pages and the
+        # progress branch all filter this one frame, so the robots rules
+        # are joined and evaluated once per round, not once per consumer
+        gated = self._gate_robots(sched, rnd).cache()
+        self._round_caches.append(gated)
         blocked = gated.where(~F.col("robots_allowed"))
         allowed = gated.where(F.col("robots_allowed")).drop("robots_allowed")
 
@@ -836,7 +837,7 @@ class CrawlEngine:
         # the same cached `fetched`; serialized they leave the executor pool
         # idle through every stage tail and driver commit. Spark's per-block
         # loading locks make the concurrent first touch of the `fetched` /
-        # `sched` caches compute each partition exactly once, and local[N]
+        # `gated` caches compute each partition exactly once, and local[N]
         # caps concurrent tasks at N, so overlap never oversubscribes the
         # pinned cores — it only fills slots another branch left idle.
         # Snapshot ids, table contents, and checkpoint payloads are

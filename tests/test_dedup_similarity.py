@@ -288,6 +288,23 @@ def test_cosine_arrow_matches_hof(spark):
         assert abs(r.hof - r.arrow) < 1e-9, (r.hof, r.arrow)
 
 
+def test_cosine_arrow_null_and_ragged_rows_match_hof(spark):
+    """A null vector, a ragged pair or a null component yields null in
+    both forms instead of failing the Python worker; normal rows in the
+    same batch keep their value."""
+    from distributed_webcrawler_spark.functions.vectors import cosine, cosine_arrow
+
+    rows = [(1, [1.0, 2.0], [2.0, 1.0]), (2, None, [1.0, 0.0]), (3, [1.0, 0.0], None),
+            (4, [1.0, 2.0, 3.0], [1.0, 2.0]), (5, [1.0, None], [1.0, 1.0]),
+            (6, [3.0], [2.0]), (7, [0.5, -1.0, 2.0], [1.0, 1.0, 1.0])]
+    df = spark.createDataFrame(rows, "id long, a array<float>, b array<float>")
+    out = df.select(
+        "id", cosine(F.col("a"), F.col("b")).alias("hof"),
+        cosine_arrow(F.col("a"), F.col("b")).alias("arrow")).orderBy("id").collect()
+    assert [r.hof for r in out] == [r.arrow for r in out]
+    assert [r.id for r in out if r.arrow is None] == [2, 3, 4, 5]
+
+
 def test_semdedup_pairs_singleton_cell_empty(spark):
     """A cell with fewer than two members emits no pairs and the schema
     survives (the applyInPandas empty-frame branch)."""

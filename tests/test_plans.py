@@ -7,7 +7,8 @@
   global sort feeding a per-group rank,
 - the engine's scheduling path contains no `Window.orderBy()` without
   partitioning (the one-task trap), asserted via the sched_seq mechanism,
-- hot-path expressions run inside WholeStageCodegen.
+- hot-path expressions run inside WholeStageCodegen,
+- the robots gate evaluates with no Python worker (no EvalPython node).
 """
 
 from __future__ import annotations
@@ -113,6 +114,25 @@ def test_fetch_join_broadcasts_scheduled_side(spark, fixture_dir, warehouse):
     assert "RightOuter" not in plan and "LeftOuter" not in plan
     for c in eng._round_caches:
         c.unpersist()
+
+
+def test_robots_gate_runs_without_python(spark):
+    """The robots gate is a native expression over the broadcast rules: no
+    EvalPython node between schedule and fetch. The rules come from
+    createDataFrame: the engine's cached parse_robots_table prints its
+    parse UDF inside the InMemoryRelation, which says nothing about the
+    gate."""
+    from distributed_webcrawler_spark.functions import urls as U
+    from distributed_webcrawler_spark.functions.robots_fn import gate_by_robots
+
+    rules = spark.createDataFrame(
+        [("a.test", ["/ok"], ["/"])], "host string, allow array<string>, disallow array<string>")
+    sched = spark.createDataFrame(
+        [("a.test", "https://a.test/ok/1"), ("b.test", "https://b.test/x")],
+        "host string, url string")
+    plan = _plan(gate_by_robots(sched, rules, U.url_path(F.col("url"))))
+    assert "EvalPython" not in plan, plan
+    assert "BroadcastHashJoin" in plan, plan
 
 
 def test_pages_plan_decodes_each_distinct_image_once(spark, fixture_dir, warehouse):

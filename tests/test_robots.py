@@ -74,6 +74,68 @@ def test_gate_by_robots_broadcast(spark):
     }
 
 
+def test_gate_by_robots_matches_reference_row_by_row(spark):
+    """The native gate equals robots_is_allowed on 600 seeded rows,
+    checked in one collect: null, empty and rule-equal paths, hosts with no
+    robots row, empty and null rule lists, non-ASCII text, and rules with
+    '*', '$', '%', '_' that must match as literal prefixes."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from distributed_webcrawler_spark.functions.robots_fn import gate_by_robots
+
+    rng = random.Random(20)
+    alphabet = ["/", "a", "b", "é", "日", "*", "$", "%", "_", "\\", ".", "?"]
+
+    def text(lo: int, hi: int) -> str:
+        return "".join(rng.choice(alphabet) for _ in range(rng.randint(lo, hi)))
+
+    rules = {}
+    for h in range(24):  # hosts h24..h29 have no robots row
+        lists = [["/" + text(0, 3) for _ in range(rng.randint(0, 3))] for _ in "ad"]
+        if h % 6 == 0:
+            lists[0] = []
+        if h % 6 == 1:
+            lists[1] = []
+        if h % 6 == 2:
+            lists[rng.randint(0, 1)] = None
+        rules[f"h{h}"] = tuple(lists)
+    rules["h1"] = (["/a*"], ["/"])       # '*' is no wildcard: "/ab" is blocked
+    rules["h7"] = (["/%_"], ["/a$"])     # '$' is no anchor: "/a$b" is blocked
+
+    rows = [("h1", "/ab"), ("h1", "/a*b"), ("h7", "/a$b"), ("h7", "/a"), ("h7", "/%_x"),
+            ("h7", "/x_"), ("h3", None), ("h3", ""), ("h27", None), ("h27", "/x")]
+    for h, (allow, disallow) in sorted(rules.items()):
+        rows += [(h, r) for r in (allow or []) + (disallow or [])]  # path == rule
+    while len(rows) < 600:
+        h = f"h{rng.randint(0, 29)}"
+        pick = rng.random()
+        if pick < 0.05:
+            path = None
+        elif pick < 0.5 and h in rules and any(rules[h]):
+            base = rng.choice([r for lst in rules[h] if lst for r in lst])
+            path = base + text(0, 3)
+        else:
+            path = "/" + text(0, 5)
+        rows.append((h, path))
+
+    rules_df = spark.createDataFrame(
+        [(h, a, d) for h, (a, d) in rules.items()],
+        "host string, allow array<string>, disallow array<string>")
+    sched = spark.createDataFrame([(i, h, p) for i, (h, p) in enumerate(rows)],
+                                  "id int, host string, path string")
+    got = {r.id: r.robots_allowed
+           for r in gate_by_robots(sched, rules_df, F.col("path")).collect()}
+    assert len(got) == len(rows) >= 500
+    for i, (h, p) in enumerate(rows):
+        allow, disallow = rules.get(h, (None, None))
+        want = robots_is_allowed(p, allow or [], disallow or [])
+        assert got[i] is want, (h, p, allow, disallow)
+    assert not got[0] and not got[2]  # literal '*' and '$'
+    assert set(got.values()) == {True, False}
+
+
 class TestCrawlDelay:
     """Group-aware Crawl-delay extraction + budget semantics."""
 

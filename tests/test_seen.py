@@ -127,3 +127,24 @@ def test_restore_from_legacy_checkpoint(spark, fixture_dir, tmp_path, legacy_key
     fr = store.table("frontier").read(spark)
     assert fr.count() == 40
     assert fr.where(~eng.seen.prefilter()).count() == 0
+
+
+@pytest.mark.parametrize("seen_set", sorted(SEEN_SETS))
+def test_fresh_engine_on_existing_warehouse_keeps_checkpointed_files(spark, fixture_dir,
+                                                                     tmp_path, seen_set):
+    """Two fresh engines (no resume) seed sessions on one warehouse. The
+    second one's seen set must start above the files already on disk: no
+    file an existing checkpoint names may change bytes."""
+    wh = str(tmp_path / "wh")
+    seeds = _seeds(spark, fixture_dir, 80)
+    _engine(spark, fixture_dir, wh, **SEEN_SETS[seen_set]).start_session(
+        seeds.where("seq < 40"), session_id="s1")
+    named = set().union(*(_named(c) for c in SnapshotStore(wh).read_checkpoints()))
+    before = {f: open(os.path.join(wh, f), "rb").read() for f in named}
+    assert before
+
+    _engine(spark, fixture_dir, wh, **SEEN_SETS[seen_set]).start_session(
+        seeds.where("seq >= 40"), session_id="s2")
+    after = {f: open(os.path.join(wh, f), "rb").read() for f in named}
+    assert after == before
+    assert _named(SnapshotStore(wh).read_checkpoints()[-1]).isdisjoint(named)
