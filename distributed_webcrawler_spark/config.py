@@ -32,12 +32,15 @@ class CrawlConfig:
     # hosts without a robots row keep budget_per_host_per_round.
     crawl_delay_budgets: bool = False
     round_window_s: int = 60
-    # per-host error circuit breaker: hosts whose fetch failure rate over
+    # per-host error circuit breaker: a host whose fetch failure rate over
     # the last cb_window_rounds exceeds cb_max_fail_rate (with at least
-    # cb_min_attempts attempts in the window) are excluded from scheduling
-    # until the window slides past the bad rounds. Failure = connection
-    # error (status 0) or HTTP error; robots 403 rows never count (they are
-    # never fetched).
+    # cb_min_attempts attempts in the window) gets a budget cap of 0 until
+    # the window slides past the bad rounds. Failure = connection error
+    # (status 0) or HTTP error; robots 403 rows never count (they are
+    # never fetched). The breaker, adaptive_budget and crawl_delay_budgets
+    # caps form one per-host cap table (CrawlEngine._host_caps) that only
+    # the clean-mode scheduler applies: reference_compat applies none of
+    # them (the reference has no breaker either).
     circuit_breaker: bool = False
     cb_window_rounds: int = 3
     cb_min_attempts: int = 8
@@ -47,8 +50,9 @@ class CrawlConfig:
     # ceil(budget_per_host_per_round * success_rate_h)) over the same
     # cb_window_rounds/cb_min_attempts host_stats window. Hosts without
     # enough attempts keep the full budget; composes with crawl-delay caps
-    # by taking the smaller cap. Requires host_stats collection, so it
-    # implies the same per-round stats append the circuit breaker uses.
+    # by taking the smaller cap, and a breaker trip (cap 0) wins. Requires
+    # host_stats collection, so it implies the same per-round stats append
+    # the circuit breaker uses.
     adaptive_budget: bool = False
     adaptive_min_budget: int = 1
     respect_robots: bool = True
@@ -134,11 +138,3 @@ class CrawlConfig:
     #       optimizer picks given real stats.
     fetch_join_strategy: str = "broadcast"
 
-    # URL validity regex — EXACTLY the reference's (BasicCrawler.java:37-39):
-    # rejects ports, IP-literal-with-port, userinfo, localhost (no dot+TLD).
-    url_regex: str = r"^https?://[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}(/.*)?$"
-
-    def child_priority_expr_doc(self) -> str:
-        """priority(child) = max(0.1, 1.0 - parent_depth*0.1)
-        (CrawlerManager.java:215)."""
-        return "greatest(0.1, 1.0 - depth*0.1)"

@@ -31,8 +31,10 @@ def norm(a: Column) -> Column:
 def cosine(a: Column, b: Column, decimals: int = 6) -> Column:
     """Cosine similarity rounded to ``decimals`` — rounding makes the value
     hash-stable against engine-specific float summation order (the DuckDB
-    oracle rounds identically)."""
-    return F.round(dot(a, b) / (norm(a) * norm(b)), decimals)
+    oracle rounds identically). A zero-norm or empty vector yields null,
+    as in :func:`cosine_arrow`, instead of an ANSI divide-by-zero that
+    fails the whole query."""
+    return F.round(F.try_divide(dot(a, b), norm(a) * norm(b)), decimals)
 
 
 def cosine_arrow(a: Column, b: Column, decimals: int = 6) -> Column:

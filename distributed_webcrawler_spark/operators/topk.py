@@ -54,8 +54,8 @@ def topk_per_group_budget(df: DataFrame, group_cols: list[str],
     broadcast ``budgets`` table, ``k_default`` fallback) in ONE window,
     WindowGroupLimit-shaped: the filter is the conjunction
     ``rank <= max_budget AND rank <= budget`` where ``max_budget`` is a
-    LITERAL upper bound over all budgets (callers compute it from the
-    budgets table — one tiny agg over a per-host dimension). Catalyst
+    LITERAL upper bound over all budgets (the engine takes it from its
+    config, so no job computes it). Catalyst
     extracts the literal conjunct into a map-side partial top-max_budget
     per group (verified: 2 WindowGroupLimit nodes in the executed plan),
     so the hot-host partition receives at most max_budget rows per input

@@ -48,7 +48,7 @@ import time
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
@@ -334,75 +334,84 @@ class CrawlEngine:
                 .groupBy("host").agg(F.sum("attempts").alias("a"),
                                      F.sum("failures").alias("f")))
 
-    def _tripped_hosts(self, rnd: int) -> DataFrame | None:
-        """Hosts whose failure rate over the window trips the circuit
-        breaker — excluded from this round's scheduling; they re-enter
-        automatically once the window slides past the bad rounds."""
+    def _tripped(self) -> Column:
+        """The circuit breaker's condition over a window-stats row: enough
+        recent attempts, and a failure rate strictly above the bound."""
         cfg = self.cfg
-        agg = self._host_window_stats(rnd)
-        if agg is None:
-            return None
-        return (agg.where((F.col("a") >= cfg.cb_min_attempts)
-                          & (F.col("f") / F.col("a") > cfg.cb_max_fail_rate))
-                .select("host"))
+        return ((F.col("a") >= cfg.cb_min_attempts)
+                & (F.col("f") / F.col("a") > cfg.cb_max_fail_rate))
 
-    def _adaptive_budgets(self, rnd: int) -> DataFrame | None:
-        """Graded per-host budgets from observed success rates — the analog
-        dial between full budget and the breaker's open circuit: budget_h =
-        max(adaptive_min_budget, ceil(base * success_rate_h)) over the
-        breaker's window. Hosts below the attempt floor keep the full
-        budget (no evidence, no throttle). One row per host with enough
-        recent attempts — tiny, and the scheduler broadcasts it."""
+    def _host_caps(self, rnd: int) -> DataFrame | None:
+        """The round's per-host budget caps: one (host, budget) row per
+        capped host, or None when nothing caps any host. A tripped host
+        gets cap 0 (the rank filter drops its rows until the window slides
+        past its bad rounds); otherwise the adaptive budget is
+        max(adaptive_min_budget, ceil(B * success_rate_h)). Both read the
+        one host_stats window and need cb_min_attempts attempts there (no
+        evidence, no cap). Crawl-delay caps merge by the smaller cap per
+        host. One row per host, so the scheduler broadcasts the frame."""
         cfg = self.cfg
-        agg = self._host_window_stats(rnd)
-        if agg is None:
+        caps = None
+        if cfg.circuit_breaker or cfg.adaptive_budget:
+            agg = self._host_window_stats(rnd)
+            if agg is not None:
+                adaptive = (F.greatest(
+                    F.lit(cfg.adaptive_min_budget),
+                    F.ceil(F.lit(cfg.budget_per_host_per_round)
+                           * (F.col("a") - F.col("f")) / F.col("a")))
+                    if cfg.adaptive_budget else F.lit(None))
+                budget = (F.when(self._tripped(), 0).otherwise(adaptive)
+                          if cfg.circuit_breaker else adaptive)
+                caps = (agg.where(F.col("a") >= cfg.cb_min_attempts)
+                        .select("host", budget.cast("int").alias("budget"))
+                        .where(F.col("budget").isNotNull()))
+        if self.host_budgets is not None:
+            caps = (self.host_budgets if caps is None
+                    else (caps.unionByName(self.host_budgets)
+                          .groupBy("host").agg(F.min("budget").alias("budget"))))
+        return caps
+
+    def _retry_waiting(self, rnd: int) -> DataFrame | None:
+        """(session_id, url) keys inside their retry backoff hold at round
+        ``rnd``, or None without retry backoff or retry_log rows. Attempt
+        k failed in round r is eligible again at r + 2^(k-1); the latest
+        attempt row per key carries the max fail_round too (both are
+        monotone per key). The retry_log only holds still-retryable keys,
+        so this frame is small, but it grows with failure volume."""
+        cfg = self.cfg
+        if not (cfg.max_retries > 0 and cfg.retry_backoff):
             return None
-        return (agg.where(F.col("a") >= cfg.cb_min_attempts)
-                .select("host",
-                        F.greatest(
-                            F.lit(cfg.adaptive_min_budget),
-                            F.ceil(F.lit(cfg.budget_per_host_per_round)
-                                   * (F.col("a") - F.col("f")) / F.col("a")))
-                        .cast("int").alias("budget")))
+        rl = self._t("retry_log").read(self.spark)
+        if rl is None:
+            return None
+        latest = (rl.groupBy("session_id", "url")
+                  .agg(F.max("attempts").alias("attempts"),
+                       F.max("fail_round").alias("fail_round")))
+        return (latest.where(F.expr("fail_round + shiftleft(1, attempts - 1)") > rnd)
+                .select("session_id", "url"))
+
+    def _held(self, rnd: int) -> bool:
+        """Whether an empty round ``rnd`` only HOLDS work back rather than
+        ending the crawl: a host the breaker has tripped (its URLs re-enter
+        once the window slides) or a retry inside its backoff hold (it
+        re-enters when its round arrives). Asked only after a round
+        scheduled nothing; existence probes, never full counts."""
+        cfg = self.cfg
+        probes = [self._retry_waiting(rnd)]
+        if cfg.circuit_breaker and not cfg.reference_compat:
+            agg = self._host_window_stats(rnd)
+            probes.append(agg.where(self._tripped()) if agg is not None else None)
+        return any(df.limit(1).count() > 0 for df in probes if df is not None)
 
     def _schedule(self, pending: DataFrame, rnd: int) -> tuple[DataFrame, int]:
         cfg = self.cfg
         order = topk.tie_break_cols()
-        self._last_tripped = []
-        if cfg.circuit_breaker:
-            tripped = self._tripped_hosts(rnd)
-            if tripped is not None:
-                # host cardinality is bounded, so the tripped set collects
-                # to a small driver list: run() needs to KNOW whether a host
-                # was excluded (an all-tripped empty round must not end the
-                # crawl — the window slides and the host re-enters), and the
-                # isin filter keeps the plan free of an extra join
-                self._last_tripped = sorted(r.host for r in tripped.collect())
-                if self._last_tripped:
-                    pending = pending.where(~F.col("host").isin(self._last_tripped))
-        self._backoff_waiting = False
-        if cfg.max_retries > 0 and cfg.retry_backoff:
-            rl = self._t("retry_log").read(self.spark)
-            if rl is not None:
-                # eligible-again round for attempt k failed in round r is
-                # r + 2^(k-1); the latest attempt row per key carries the max
-                # fail_round too (both are monotone per key). The retry_log
-                # only holds still-retryable keys, so `waiting` is small —
-                # but it grows with failure volume, so the anti-join gets the
-                # same shuffle_hash pin as the `done` anti-join (no driver
-                # collect, no auto-broadcast stall).
-                latest = (rl.groupBy("session_id", "url")
-                          .agg(F.max("attempts").alias("attempts"),
-                               F.max("fail_round").alias("fail_round")))
-                waiting = (latest.where(
-                    F.expr("fail_round + shiftleft(1, attempts - 1)") > rnd)
-                    .select("session_id", "url"))
-                # run() must know an empty round is a backoff hold, not
-                # completion; existence probe, never a full count
-                self._backoff_waiting = waiting.limit(1).count() > 0
-                if self._backoff_waiting:
-                    pending = pending.join(waiting.hint("shuffle_hash"),
-                                           ["session_id", "url"], "left_anti")
+        waiting = self._retry_waiting(rnd)
+        if waiting is not None:
+            # same shuffle_hash pin as the `done` anti-join (no driver
+            # collect, no auto-broadcast stall)
+            pending = pending.join(waiting.hint("shuffle_hash"),
+                                   ["session_id", "url"], "left_anti")
         if cfg.reference_compat:
             # W2 round-robin across sessions: quota = batchSize / numSessions
             # per session queue (URLFrontier.java:92-110; floor division like
@@ -411,40 +420,32 @@ class CrawlEngine:
             quota = max(cfg.batch_size // max(n_sessions, 1), 1)
             sched = topk.topk_per_group(pending, ["session_id"], order, quota).drop("rk")
         else:
-            # graded success-rate throttle: merge with any crawl-delay caps
-            # by taking the SMALLER cap per host (both tables are per-host
-            # one-row — the union/min agg is trivially broadcastable)
-            budgets = self.host_budgets
-            if cfg.adaptive_budget:
-                ab = self._adaptive_budgets(rnd)
-                if ab is not None:
-                    budgets = (ab if budgets is None
-                               else (budgets.unionByName(ab)
-                                     .groupBy("host")
-                                     .agg(F.min("budget").alias("budget"))))
-            # constant-fold identity windows: the frontier manifest's row
-            # count (metadata, no job) upper-bounds every per-host pending
-            # count, so budget >= that bound means the rank filter keeps
-            # every row — skip BOTH window shuffles (drain/backfill regime)
-            # Skew handling is Catalyst's InferWindowGroupLimit: the LITERAL
-            # rank bound becomes a map-side partial top-k per host BEFORE
-            # the exchange, so a Zipf-hot host ships <= k rows per input
-            # partition instead of its whole pending set.
-            if budgets is not None:
-                # per-host Crawl-delay caps: variable k, no constant-fold
-                # shortcut (a host's budget may be below any row bound);
-                # the literal WindowGroupLimit bound is the budgets MAX —
-                # one tiny agg over the per-host dimension table
-                max_b = budgets.agg(F.max("budget")).first()[0] or 0
+            caps = self._host_caps(rnd)
+            if caps is not None:
+                # per-host caps: variable k, no constant-fold shortcut (a
+                # cap may be below any row bound). The literal
+                # WindowGroupLimit bound comes from the config: no cap
+                # exceeds B except the adaptive floor (a tripped host's cap
+                # is 0, a Crawl-delay cap is min(B, ...)).
+                max_b = cfg.budget_per_host_per_round
+                if cfg.adaptive_budget:
+                    max_b = max(max_b, cfg.adaptive_min_budget)
                 sched = topk.topk_per_group_budget(
-                    pending, ["session_id", "host"], order, budgets,
-                    "host", cfg.budget_per_host_per_round,
-                    max_budget=max(int(max_b), cfg.budget_per_host_per_round),
+                    pending, ["session_id", "host"], order, caps,
+                    "host", cfg.budget_per_host_per_round, max_budget=max_b,
                 ).drop("rk")
             elif ((frontier_rows := self._t("frontier").total_rows()) is not None
                   and cfg.budget_per_host_per_round >= frontier_rows):
+                # constant-fold identity windows: the frontier manifest's row
+                # count (metadata, no job) upper-bounds every per-host pending
+                # count, so budget >= that bound means the rank filter keeps
+                # every row — skip BOTH window shuffles (drain/backfill regime)
                 sched = pending
             else:
+                # Skew handling is Catalyst's InferWindowGroupLimit: the
+                # LITERAL rank bound becomes a map-side partial top-k per host
+                # BEFORE the exchange, so a Zipf-hot host ships <= k rows per
+                # input partition instead of its whole pending set.
                 sched = topk.topk_per_group(
                     pending, ["session_id", "host"], order,
                     cfg.budget_per_host_per_round).drop("rk")
@@ -844,8 +845,7 @@ class CrawlEngine:
         # byte-identical to the serial order (per-table manifests).
         def _branch_expand() -> int:
             self._desc(f"dws r{rnd}: expand+frontier+bloom")
-            new_rows = self._expand(fetched, rnd).cache()
-            self._round_caches.append(new_rows)
+            new_rows = self._expand(fetched, rnd)
             # the frontier append doubles as new_rows' count (parquet footer
             # metadata) — no separate count() action, no empty snapshot on
             # exhausted rounds
@@ -879,7 +879,7 @@ class CrawlEngine:
                 F.lit("driver").alias("assigned_to")))
             if cfg.circuit_breaker or cfg.adaptive_budget:
                 # one row per (round, host) off the cached slim fetch —
-                # feeds _tripped_hosts / _adaptive_budgets next round;
+                # feeds _host_caps / _held in later rounds;
                 # robots-blocked rows never reach fetched so they can't
                 # trip or throttle a host
                 hstats = (fetched.groupBy("host").agg(
@@ -935,12 +935,7 @@ class CrawlEngine:
         for rnd in range(start_round, self.cfg.max_rounds + 1):
             stats = self.run_round(rnd)
             if stats.get("scheduled", 0) == 0:
-                # an empty round ends the crawl UNLESS the circuit breaker
-                # excluded hosts this round (their URLs re-enter once the
-                # window slides) or retries are in a backoff hold (they
-                # re-enter when their round arrives)
-                if (not getattr(self, "_last_tripped", [])
-                        and not getattr(self, "_backoff_waiting", False)):
+                if not self._held(rnd):
                     break
             else:
                 history.append(stats)

@@ -218,7 +218,7 @@ def host_breaker_stream(fetches: DataFrame, *, window: str = "10 minutes",
                         min_attempts: int = 8,
                         max_fail_rate: float = 0.5) -> DataFrame:
     """Streaming twin of the engine's per-host error circuit breaker
-    (plans/engine.py `_tripped_hosts`): sliding event-time windows over the
+    (plans/engine.py `_host_caps`): sliding event-time windows over the
     fetch-result stream emit one TRIP row per (window, host) whose failure
     rate crosses the threshold with at least ``min_attempts`` attempts —
     exactly the signal a live scheduler subscribes to in order to pause a

@@ -305,6 +305,20 @@ def test_cosine_arrow_null_and_ragged_rows_match_hof(spark):
     assert [r.id for r in out if r.arrow is None] == [2, 3, 4, 5]
 
 
+def test_cosine_zero_norm_and_empty_rows_are_null(spark):
+    """A zero-norm or empty vector yields null in both forms under ANSI
+    (no DIVIDE_BY_ZERO failing the query); normal rows keep their value."""
+    from distributed_webcrawler_spark.functions.vectors import cosine, cosine_arrow
+
+    rows = [(1, [0.0, 0.0], [1.0, 2.0]), (2, [1.0, 2.0], [0.0, 0.0]), (3, [], []),
+            (4, [3.0, 4.0], [4.0, 3.0])]
+    df = spark.createDataFrame(rows, "id long, a array<float>, b array<float>")
+    out = df.select(
+        "id", cosine(F.col("a"), F.col("b")).alias("hof"),
+        cosine_arrow(F.col("a"), F.col("b")).alias("arrow")).orderBy("id").collect()
+    assert [r.hof for r in out] == [r.arrow for r in out] == [None, None, None, 0.96]
+
+
 def test_semdedup_pairs_singleton_cell_empty(spark):
     """A cell with fewer than two members emits no pairs and the schema
     survives (the applyInPandas empty-frame branch)."""

@@ -4,6 +4,7 @@ sets, multi-session round-robin quotas (W2), transient-failure retries
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_webcrawler_spark import CrawlConfig
@@ -411,6 +412,80 @@ def test_adaptive_budget_throttles_failing_host(spark, warehouse):
     assert sum(ok.values()) == 12 and set(ok) == {1, 2}
     # the throttled host still drains every URL eventually
     assert sum(flaky.values()) == 12
+
+
+# (host, attempts, failures, round) host_stats rows for _host_caps at
+# round 5 with cb_window_rounds=2, i.e. the window is rounds 3-4
+_CAP_STATS = [
+    ("edge.example.com", 6, 3, 3), ("edge.example.com", 4, 2, 4),  # f/a = 0.5 exactly
+    ("few.example.com", 4, 4, 4),                                   # a = 4 < cb_min_attempts
+    ("bad.example.com", 10, 10, 4),                                 # all fail
+    ("thin.example.com", 5, 2, 4),                                  # ceil(6 * 3/5) = 4
+    ("slow.example.com", 8, 1, 4),                                  # ceil(6 * 7/8) = 6
+    ("old.example.com", 20, 20, 2), ("old.example.com", 6, 0, 3),   # round 2 is outside
+    ("gone.example.com", 30, 30, 1),                                # only outside rows
+]
+# Crawl-delay caps floor(60 / delay): slow 2, bad 4, delay-only 3
+_CAP_ROBOTS = [("slow.example.com", "User-agent: *\nCrawl-delay: 30"),
+               ("bad.example.com", "User-agent: *\nCrawl-delay: 15"),
+               ("delay.example.com", "User-agent: *\nCrawl-delay: 20")]
+
+
+def _caps_restated(cfg, rnd, delay_caps):
+    """The cap formula restated over _CAP_STATS in plain Python."""
+    import math
+
+    window: dict[str, tuple[int, int]] = {}
+    for host, a, f, r in _CAP_STATS:
+        if r >= rnd - cfg.cb_window_rounds:
+            wa, wf = window.get(host, (0, 0))
+            window[host] = (wa + a, wf + f)
+    caps = {}
+    for host, (a, f) in window.items():
+        if a < cfg.cb_min_attempts:
+            continue
+        if cfg.circuit_breaker and f / a > cfg.cb_max_fail_rate:
+            caps[host] = 0
+        elif cfg.adaptive_budget:
+            caps[host] = max(cfg.adaptive_min_budget,
+                             math.ceil(cfg.budget_per_host_per_round * (a - f) / a))
+    for host, b in delay_caps.items():
+        caps[host] = min(caps.get(host, b), b)
+    return caps
+
+
+@pytest.mark.parametrize("knobs,delay_caps", [
+    # breaker trip overrides the adaptive cap; Crawl-delay min on top
+    (dict(circuit_breaker=True, adaptive_budget=True, crawl_delay_budgets=True),
+     {"slow.example.com": 2, "bad.example.com": 4, "delay.example.com": 3}),
+    # adaptive alone: the all-fail host is floored at adaptive_min_budget
+    (dict(adaptive_budget=True, adaptive_min_budget=2), {}),
+    # breaker alone: only tripped hosts get a row (cap 0)
+    (dict(circuit_breaker=True), {}),
+], ids=["breaker+adaptive+delay", "adaptive-floor", "breaker-only"])
+def test_host_caps_match_restated_formula(spark, warehouse, knobs, delay_caps):
+    """_host_caps over a hand-built host_stats snapshot equals the Python
+    restatement row by row: f/a exactly at cb_max_fail_rate does not trip,
+    a host just below cb_min_attempts and rows outside the cb_window_rounds
+    window give no cap, the adaptive floor holds, a trip wins over the
+    adaptive cap, and Crawl-delay caps merge by min."""
+    cfg = CrawlConfig(budget_per_host_per_round=6, cb_window_rounds=2, cb_min_attempts=5,
+                      cb_max_fail_rate=0.5, round_window_s=60, respect_robots=False,
+                      use_bloom=False, **knobs)
+    robots = spark.createDataFrame(_CAP_ROBOTS, "host string, robots_txt string")
+    store = SnapshotStore(warehouse)
+    store.table("host_stats").append(spark.createDataFrame(
+        _CAP_STATS, "host string, attempts int, failures int, round int"))
+    eng = CrawlEngine(spark, store, cfg, None, None, robots)
+    got = {r.host: r.budget for r in eng._host_caps(5).collect()}
+    want = _caps_restated(cfg, 5, delay_caps)
+    assert got == want
+    # the cases the fixture is built to reach
+    assert "few.example.com" not in got and "gone.example.com" not in got
+    if cfg.circuit_breaker:
+        assert got["bad.example.com"] == 0
+    if cfg.adaptive_budget:
+        assert got["edge.example.com"] >= 3 and got["old.example.com"] == 6
 
 
 def test_cuckoo_seen_filter_engine_equivalence(spark, fixture_dir, tmp_path):

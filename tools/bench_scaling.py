@@ -91,7 +91,7 @@ mem_gb = min(12 + 3 * cpus, 64)
 # shuffle_partitions: default 64 = a CLUSTER-sized constant, identical
 # plan at every level (see comment above). DWS_SHUFFLE_PARTS overrides:
 # an int, or "4xcores" = width-scaled (how a real deployment sizes it) —
-# used by tools/bench_width_parts.py for the round-4 verdict-#6 A/B.
+# used for the round-4 verdict-#6 A/B (see BENCH.md).
 _sp_env = os.environ.get("DWS_SHUFFLE_PARTS", "64")
 shuffle_parts = 4 * cpus if _sp_env == "4xcores" else int(_sp_env)
 _extra = {{"spark.local.dir": tempfile.mkdtemp(dir=scratch, prefix="sparklocal-"),

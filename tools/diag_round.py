@@ -1,20 +1,23 @@
-"""Diagnose where a crawl-round's wall time goes at one parallelism level.
+"""Diagnose where a crawl round's wall time goes at one parallelism level.
 
-Runs the SAME job as tools/bench_scaling.py's RUNNER (warm-up + one timed
-drain round over a pre-generated fixture) but additionally:
+Runs one warm-up round and one timed drain round over a pre-generated
+fixture (the shape of tools/bench_scaling.py's RUNNER) and prints:
 
-  - prints the engine's per-stage driver wall (engine.last_stage_secs),
-  - samples the JVM's utime/stime and the kernel stacks of runnable
-    threads every 2s during the timed round, then prints the top kernel
-    frames — this is how the local[32] sys-time collapse was localized.
+  - the engine's per-stage driver wall (run_round's stage_secs),
+  - the JVM's utime/stime and the top kernel frames of its runnable
+    threads, sampled every 2s during the timed round — this is how the
+    local[32] sys-time collapse was localized,
+  - the timed round's per-phase Spark metrics and jobs/stages/tasks/driver
+    gap, read from the event log by crawlbench.eventlog.
 
-Usage:  taskset -c 0-(N-1) python tools/diag_round.py N /dev/shm/dws-fix12
+Usage:  taskset -c 0-(N-1) python tools/diag_round.py N /dev/shm/dws-fix12 [scratch]
         (pin exactly like the bench does, or the numbers aren't comparable)
 """
 
 from __future__ import annotations
 
 import collections
+import dataclasses
 import json
 import os
 import shutil
@@ -120,8 +123,7 @@ def main() -> None:
     fix = sys.argv[2]
     scratch = sys.argv[3] if len(sys.argv) > 3 else "/dev/shm"
 
-    from pyspark.sql import functions as F  # noqa: F401
-
+    from crawlbench import eventlog
     from distributed_webcrawler_spark import CrawlConfig, get_spark
     from distributed_webcrawler_spark.plans.engine import CrawlEngine
     from distributed_webcrawler_spark.sources.store import SnapshotStore
@@ -129,45 +131,27 @@ def main() -> None:
     # same sizing AND the same 64g cap as bench_scaling's RUNNER: 12+3*32
     # uncapped is a 108g pre-touched heap — instant OOM on the 125g box
     mem_gb = int(os.environ.get("DWS_DIAG_MEM_GB", min(12 + 3 * cpus, 64)))
+    evdir = tempfile.mkdtemp(dir=scratch, prefix="dws-eventlog-")
     extra = {"spark.local.dir": tempfile.mkdtemp(dir=scratch, prefix="sparklocal-"),
-             "spark.driver.memory": f"{mem_gb}g"}
-    if os.environ.get("DWS_JAVA_OPTS"):
-        extra["spark.driver.extraJavaOptions"] = os.environ["DWS_JAVA_OPTS"]
-    if os.environ.get("DWS_EXTRA_CONF"):
-        extra.update(json.loads(os.environ["DWS_EXTRA_CONF"]))
-    evdir = None
-    if os.environ.get("DWS_EVENTLOG", "1") != "0":
-        evdir = tempfile.mkdtemp(dir=scratch, prefix="dws-eventlog-")
-        extra["spark.eventLog.enabled"] = "true"
-        extra["spark.eventLog.compress"] = "false"  # no zstd lib in sandbox
-        extra["spark.eventLog.dir"] = f"file://{evdir}"
+             "spark.driver.memory": f"{mem_gb}g",
+             "spark.eventLog.enabled": "true",
+             "spark.eventLog.compress": "false",  # no zstd lib in sandbox
+             "spark.eventLog.rolling.enabled": "false",
+             "spark.eventLog.dir": f"file://{evdir}",
+             **json.loads(os.environ.get("DWS_EXTRA_CONF", "{}"))}
     spark = get_spark(cpus=cpus, app_name=f"dws-diag-{cpus}", shuffle_partitions=64,
                       extra_conf=extra)
-    jvm_pid = None
-    try:
-        jvm_pid = int(spark.sparkContext._gateway.java_process.pid)
-    except Exception:
-        # fall back: the only big java child of this process tree
-        import subprocess
-        out = subprocess.run(["pgrep", "-f", f"dws-diag-{cpus}"], capture_output=True, text=True)
-        for p in out.stdout.split():
-            if os.path.exists(f"/proc/{p}/task"):
-                jvm_pid = int(p)
+    proc = getattr(spark.sparkContext._gateway, "proc", None)
 
-    wg = spark.read.parquet(f"{fix}/web_graph")
-    pay = spark.read.parquet(f"{fix}/payloads")
-    rob = spark.read.parquet(f"{fix}/robots")
-    seeds = spark.read.parquet(f"{fix}/seeds")
+    wg, pay, rob, seeds = (spark.read.parquet(f"{fix}/{n}")
+                           for n in ("web_graph", "payloads", "robots", "seeds"))
     cfg = CrawlConfig(max_depth=1, budget_per_host_per_round=1_000_000,
                       max_rounds=1, use_bloom=True,
                       bloom_expected_insertions=5_000_000, respect_robots=True,
                       fetch_join_strategy="shuffle", store_page_bytes=False)
-    warm_cfg = CrawlConfig(max_depth=1, budget_per_host_per_round=10,
-                           max_rounds=1, use_bloom=True,
-                           bloom_expected_insertions=5_000_000, respect_robots=True,
-                           fetch_join_strategy="shuffle", store_page_bytes=False)
     wh_warm = tempfile.mkdtemp(dir=scratch, prefix=f"dws-diagwarm-{cpus}-")
-    warm = CrawlEngine(spark, SnapshotStore(wh_warm), warm_cfg, wg, pay, rob)
+    warm = CrawlEngine(spark, SnapshotStore(wh_warm),
+                       dataclasses.replace(cfg, budget_per_host_per_round=10), wg, pay, rob)
     warm.start_session(seeds.limit(4000))
     warm.run()
     shutil.rmtree(wh_warm, ignore_errors=True)
@@ -180,18 +164,18 @@ def main() -> None:
     eng = CrawlEngine(spark, SnapshotStore(wh), cfg, wg, pay, rob)
     eng.start_session(seeds)
 
-    sampler = StackSampler(jvm_pid) if jvm_pid else None
+    sampler = StackSampler(proc.pid) if proc is not None else None
     if sampler:
         sampler.start()
     t_round_start = time.time()
-    t0 = time.monotonic()
     hist = eng.run()
-    wall = time.monotonic() - t0
     t_round_end = time.time()
     if sampler:
         sampler.stop_flag = True
         sampler.join(timeout=5)
+    spark.stop()  # closes the event log
 
+    wall = t_round_end - t_round_start
     print(f"\n=== local[{cpus}] timed round: {wall:.1f}s, "
           f"{sum(h['scheduled'] for h in hist)} urls ===")
     for h in hist:
@@ -212,108 +196,12 @@ def main() -> None:
               f"(runnable threads only):")
         for frame, n in sampler.frames.most_common(15):
             print(f"  {n:6d}  {frame}")
-    if evdir:
-        _print_stage_timeline(spark, evdir, cpus, t_round_start, t_round_end)
+    (log_name,) = os.listdir(evdir)
+    with open(os.path.join(evdir, log_name)) as f:
+        summary = eventlog.summarize(eventlog.iter_events(f), [(t_round_start, t_round_end)])
+    print("event log, timed round:")
+    print(json.dumps(eventlog.layer_metrics(summary), indent=1, sort_keys=True))
     shutil.rmtree(wh, ignore_errors=True)
-
-
-def _print_stage_timeline(spark, evdir: str, cpus: int,
-                          t0: float, t1: float) -> None:
-    """Parse the Spark event log: per stage inside [t0, t1] print wall,
-    total executor task time / cores (= perfectly-parallel floor), and the
-    DRIVER GAP since the previous stage finished — the gaps are the serial
-    fraction Amdahl charges every level for."""
-    app_id = spark.sparkContext.applicationId
-    # flush pending events
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    # Spark 4 rolling layout: <dir>/eventlog_v2_<app>/events_*_<app>[.inprogress]
-    candidates = [os.path.join(evdir, app_id + ".inprogress"),
-                  os.path.join(evdir, app_id)]
-    v2 = os.path.join(evdir, f"eventlog_v2_{app_id}")
-    if os.path.isdir(v2):
-        candidates = [os.path.join(v2, f) for f in sorted(os.listdir(v2))
-                      if f.startswith("events_")]
-    paths = [p for p in candidates if os.path.exists(p)]
-    if not paths:
-        print(f"(no event log under {evdir})")
-        return
-    stages = []
-    jobs: dict[int, dict] = {}
-    import itertools
-    lines = itertools.chain.from_iterable(open(p) for p in paths)
-    if True:
-        for line in lines:
-            if '"SparkListenerJobStart"' in line:
-                ev = json.loads(line)
-                props = ev.get("Properties", {}) or {}
-                jobs[ev["Job ID"]] = {
-                    "sub": ev.get("Submission Time"),
-                    "site": (props.get("spark.job.description")
-                             or props.get("callSite.short", ""))[:72],
-                    "n_stages": len(ev.get("Stage IDs", [])),
-                }
-                continue
-            if '"SparkListenerJobEnd"' in line:
-                ev = json.loads(line)
-                j = jobs.get(ev["Job ID"])
-                if j is not None:
-                    j["comp"] = ev.get("Completion Time")
-                continue
-            if '"SparkListenerStageCompleted"' not in line:
-                continue
-            ev = json.loads(line)
-            si = ev["Stage Info"]
-            sub = si.get("Submission Time")
-            comp = si.get("Completion Time")
-            if sub is None or comp is None:
-                continue
-            if comp / 1000.0 < t0 or sub / 1000.0 > t1:
-                continue
-            task_ms = cpu_ms = spill_mb = gc_ms = 0
-            for acc in si.get("Accumulables", []):
-                nm = acc.get("Name")
-                if nm == "internal.metrics.executorRunTime":
-                    task_ms = int(acc.get("Value", 0))
-                elif nm == "internal.metrics.executorCpuTime":
-                    cpu_ms = int(acc.get("Value", 0)) // 1_000_000  # ns -> ms
-                elif nm == "internal.metrics.diskBytesSpilled":
-                    spill_mb = int(acc.get("Value", 0)) >> 20
-                elif nm == "internal.metrics.jvmGCTime":
-                    gc_ms = int(acc.get("Value", 0))
-            stages.append({
-                "id": si["Stage ID"], "name": si.get("Stage Name", "")[:48],
-                "sub": sub, "comp": comp, "task_ms": task_ms,
-                "cpu_ms": cpu_ms, "spill_mb": spill_mb, "gc_ms": gc_ms,
-                "n_tasks": si.get("Number of Tasks", 0),
-            })
-    stages.sort(key=lambda s: s["sub"])
-    print(f"\nstage timeline (timed round only; cores={cpus}):")
-    print(f"{'stage':>6} {'gap_s':>7} {'wall_s':>7} {'taskT/N_s':>9} "
-          f"{'cpu_s':>7} {'gc_s':>5} {'spill_mb':>8} {'tasks':>6}  name")
-    prev_end = t0 * 1000
-    total_gap = total_wall = 0.0
-    for s in stages:
-        gap = max(0.0, (s["sub"] - prev_end) / 1000.0)
-        wall = (s["comp"] - s["sub"]) / 1000.0
-        floor = s["task_ms"] / 1000.0 / cpus
-        total_gap += gap
-        total_wall += wall
-        print(f"{s['id']:>6} {gap:>7.1f} {wall:>7.1f} {floor:>9.1f} "
-              f"{s['cpu_ms']/1000.0:>7.1f} {s['gc_ms']/1000.0:>5.1f} "
-              f"{s['spill_mb']:>8} {s['n_tasks']:>6}  {s['name']}")
-        prev_end = max(prev_end, s["comp"])
-    print(f"total driver gap {total_gap:.1f}s, stage wall {total_wall:.1f}s, "
-          f"round {(t1 - t0):.1f}s")
-
-    timed = [(jid, j) for jid, j in sorted(jobs.items())
-             if j.get("sub") and j.get("comp")
-             and j["comp"] / 1000.0 >= t0 and j["sub"] / 1000.0 <= t1]
-    if timed:
-        print(f"\njob timeline (timed round; start offsets relative to round t0):")
-        print(f"{'job':>5} {'start_s':>8} {'wall_s':>7} {'stages':>6}  callsite")
-        for jid, j in timed:
-            print(f"{jid:>5} {(j['sub'] / 1000.0 - t0):>8.1f} "
-                  f"{(j['comp'] - j['sub']) / 1000.0:>7.1f} {j['n_stages']:>6}  {j['site']}")
 
 
 if __name__ == "__main__":
