@@ -9,7 +9,12 @@ Reference parity targets (cited so the judge can check):
 - host/path split — BasicCrawler.java:185-187 (java.net.URI).
 
 Everything here is either a built-in Column expression (JVM, codegen) or a
-pandas UDF over Arrow batches; no per-row Python UDFs.
+pandas UDF over Arrow batches; no per-row Python UDFs. Clean-mode link
+resolution (``resolve_links``) is native for the common link shapes:
+``native_resolve`` expresses the fast tiers A/B/C of
+``resolve_canonicalize_batch`` as Column expressions and drops links that
+can never pass ``is_valid_url``; only the rest (the residue) reaches the
+pandas UDF, behind a coalescing exchange.
 """
 
 from __future__ import annotations
@@ -17,13 +22,23 @@ from __future__ import annotations
 from urllib.parse import urljoin, urlsplit, urlunsplit
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 VALID_URL_REGEX = r"^https?://[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}(/.*)?$"
 
 _DEFAULT_PORTS = {"http": "80", "https": "443"}
+
+# Whitespace and control characters, Unicode ones included. Python's
+# str.strip and urlsplit strip or delete them (urlsplit also strips leading
+# C0 controls, which str.strip keeps), Java's \s is ASCII-only, and Java's
+# $ also matches before U+0085/U+2028/U+2029: a row holding one is left to
+# the exact per-row path. The same pattern text is valid in Python's re
+# and in Java's Pattern.
+_WS_OR_CTL = (r"[\x00-\x20\x7f-\xa0\u1680\u180e\u2000-\u200f"
+              r"\u2028-\u202f\u205f-\u206f\u3000\ufeff]")
+_SCHEME = r"^([a-zA-Z][a-zA-Z0-9+.-]*):"  # urlsplit's scheme: letter, then scheme chars
 
 
 # ---------------------------------------------------------------- built-ins
@@ -149,6 +164,9 @@ def resolve_canonicalize_batch(base: pd.Series, href: pd.Series) -> pd.Series:
     nofrag = h.str.split("#", n=1).str[0]
     ns = nofrag.fillna("")
     bs = base.fillna("")
+    # whitespace or control characters anywhere: exact path (urlsplit
+    # deletes or strips some that str.strip keeps, e.g. a leading NUL)
+    plain = ~href.fillna("").str.contains(_WS_OR_CTL) & ~bs.str.contains(_WS_OR_CTL)
     no_dots = (
         ~ns.str.contains("/../", regex=False)
         & ~ns.str.contains("/./", regex=False)
@@ -193,6 +211,7 @@ def resolve_canonicalize_batch(base: pd.Series, href: pd.Series) -> pd.Series:
         & no_dots
         & base_clean
     )
+    tier_a, tier_b, tier_c = tier_a & plain, tier_b & plain, tier_c & plain
     out = nofrag.where(tier_a, None)
     out = out.mask(tier_b & ~tier_a, base_origin + ns)
     out = out.mask(tier_c & ~tier_a & ~tier_b, base_dir + ns)
@@ -203,6 +222,81 @@ def resolve_canonicalize_batch(base: pd.Series, href: pd.Series) -> pd.Series:
             for b, v in zip(base[slow], href[slow])
         ]
     return out
+
+
+def _dotless(c: str) -> str:
+    """No dot segments and no ';' (see no_dots in resolve_canonicalize_batch)."""
+    return (f"NOT (contains({c}, '/../') OR contains({c}, '/./') OR endswith({c}, '/.')"
+            f" OR endswith({c}, '/..') OR contains({c}, ';'))")
+
+
+def native_resolve(base: str, href: str) -> tuple[Column, Column]:
+    """Tiers A/B/C of ``resolve_canonicalize_batch`` as native expressions
+    over the string columns named ``base`` and ``href``.
+
+    Returns ``(url, reject)``. ``url`` is the resolved canonical URL when a
+    tier applies, else null. ``reject`` is true for links that can never
+    pass ``is_valid_url``: a null base or href, a scheme other than
+    http(s), or an explicit non-default port (compared as digit strings
+    without leading zeros, never cast — ':0443' is https's default port).
+    Rows with neither go through the exact Python path. So do all rows
+    holding whitespace or control characters, before any other test.
+    The predicates mirror the pandas ones; ``regexp_extract`` yields ''
+    where pandas yields NaN. Written as SQL text (raw r'' literals keep
+    the regexes verbatim): one parse instead of ~70 Column calls.
+    """
+    b, h = f"`{base}`", f"`{href}`"
+    clean = f"NOT (rlike({b}, r'{_WS_OR_CTL}') OR rlike({h}, r'{_WS_OR_CTL}'))"
+    ns = f"substring_index({h}, '#', 1)"
+    tier_a = (f"rlike({ns}, r'^https?://[a-z0-9.-]+(/[^#?]*)?(\\?[^#]+)?$')"
+              f" AND NOT contains(substring({ns}, 9), '//') AND {_dotless(ns)}")
+    origin = f"regexp_extract({b}, r'^(https?://[a-z0-9.-]+)(?:/|$)', 1)"
+    tier_b = (f"rlike({ns}, r'^/[^/#?][^#?]*$') AND NOT contains({ns}, '//')"
+              f" AND {_dotless(ns)} AND {origin} != ''")
+    base_clean = (f"rlike({b}, r'^https?://[a-z0-9.-]+/[^?#]*$')"
+                  f" AND NOT contains(substring({b}, 9), '//') AND {_dotless(b)}")
+    tier_c = (f"rlike({ns}, r'^[^/:#?.][^:#?]*$') AND NOT contains({ns}, '//')"
+              f" AND {_dotless(ns)} AND {base_clean}")
+    url = (f"CASE WHEN {clean} THEN CASE WHEN {tier_a} THEN {ns}"
+           f" WHEN {tier_b} THEN concat({origin}, {ns})"
+           f" WHEN {tier_c} THEN concat(regexp_replace({b}, r'[^/]*$', ''), {ns}) END END")
+
+    scheme = f"lower(regexp_extract({h}, r'{_SCHEME}', 1))"
+    bad_scheme = f"({scheme} != '' AND {scheme} NOT IN ('http', 'https'))"
+    authority = f"regexp_extract({h}, r'^(?:[a-zA-Z][a-zA-Z0-9+.-]*:)?//([^/?#]*)', 1)"
+    port = (f"regexp_extract(regexp_extract(substring_index({authority}, '@', -1),"
+            f" r'^[^:\\[\\]]*:([0-9]+)$', 1), r'^0*([0-9]+)$', 1)")
+    eff_scheme = (f"CASE WHEN {scheme} != '' THEN {scheme}"
+                  f" ELSE lower(regexp_extract({b}, r'{_SCHEME}', 1)) END")
+    default = f"CASE {eff_scheme} WHEN 'http' THEN '80' WHEN 'https' THEN '443' END"
+    bad_port = f"({port} != '' AND {port} != {default})"  # null default: scheme unknown, keep
+    reject = (f"{b} IS NULL OR {h} IS NULL"
+              f" OR ({clean} AND coalesce({bad_scheme} OR {bad_port}, false))")
+    return F.expr(url), F.expr(reject)
+
+
+def resolve_links(links: DataFrame, base: str, href: str, out: str,
+                  reference_compat: bool) -> DataFrame:
+    """``links`` plus column ``out``, the resolved (and, in clean mode,
+    canonicalized) link. Clean mode may drop rows whose ``out`` could
+    never pass ``is_valid_url``.
+
+    Clean mode splits the frame: links a native tier resolves, and the
+    residue, which goes through the pandas UDF behind a rebalance exchange
+    so AQE coalesces it to a few tasks (an Arrow UDF over empty input
+    still runs one Python task per input partition). The parts are
+    rejoined with ``unionByName``. Compat mode keeps the UDF on every row.
+    In both modes the UDF is nondeterministic to the optimizer, so a
+    filter on ``out`` is never pushed below it to evaluate it twice.
+    """
+    udf = resolve_and_canonicalize_udf(reference_compat)
+    if reference_compat:
+        return links.withColumn(out, udf(F.col(base), F.col(href)))
+    url, reject = native_resolve(base, href)
+    native = links.where(url.isNotNull()).withColumn(out, url)
+    residue = (links.where(url.isNull() & ~reject).hint("rebalance")
+               .withColumn(out, udf(F.col(base), F.col(href))))
+    return native.unionByName(residue)
 
 
 def resolve_and_canonicalize_udf(reference_compat: bool):
@@ -224,4 +318,6 @@ def resolve_and_canonicalize_udf(reference_compat: bool):
                 [_resolve_one(b, h, True) for b, h in zip(base, href)])
         return resolve_canonicalize_batch(base, href)
 
-    return _fused
+    # deterministic in fact; marked otherwise so Catalyst never duplicates
+    # it into a pushed-down filter (two Arrow round-trips per link)
+    return _fused.asNondeterministic()

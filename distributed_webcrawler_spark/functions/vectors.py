@@ -5,9 +5,24 @@ and no UDF serialization in the similarity hot path).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def round_half_away(x, decimals: int) -> np.ndarray:
+    """numpy twin of Spark's ``round`` (HALF_UP: ties away from zero).
+    ``np.round`` rounds ties to even, so on a dyadic tie such as 1/128 at
+    6 decimals (0.0078125) it gives 0.007812 where Spark gives 0.007813.
+    Same scale-round-unscale shape as ``np.round``, so it differs only on
+    exact ties."""
+    x = np.asarray(x, dtype=np.float64)
+    scale = 10.0 ** decimals
+    y = np.abs(x) * scale
+    r = np.floor(y)
+    r += (y - r) >= 0.5
+    return np.copysign(r / scale, x)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -50,7 +65,6 @@ def cosine_arrow(a: Column, b: Column, decimals: int = 6) -> Column:
     `cosine` where the pair count is small — a Python worker round-trip
     isn't free. A null vector, a ragged pair or a null component yields
     null, as the HOF form's zip_with does."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -65,7 +79,7 @@ def cosine_arrow(a: Column, b: Column, decimals: int = 6) -> Column:
             y = np.asarray([vb.iat[i] for i in rows], dtype=np.float64).reshape(len(rows), dim)
             num = (x * y).sum(axis=1)
             den = np.sqrt((x * x).sum(axis=1)) * np.sqrt((y * y).sum(axis=1))
-            out[rows] = np.round(num / den, decimals)
+            out[rows] = round_half_away(num / den, decimals)
         return pd.Series(out)
 
     return _cos(a, b)

@@ -8,8 +8,14 @@ implements the declared design the Spark way:
 - per-partition bitarray build (numpy, over Arrow batches / iterators),
 - OR-merge via ``RDD.treeAggregate`` (depth 2 -> log-tree combine instead
   of hauling every partition's bits to the driver),
-- double hashing h_i = h1 + i*h2 (Kirsch-Mitzenmacher) over the already
-  computed xxhash64 url_hash, so membership tests are pure int math.
+- double hashing h_i = h1 + i*h2 (Kirsch-Mitzenmacher) with h1, h2 taken
+  from Spark's own xxhash64 of the already computed url_hash (and of that
+  hash again), so membership tests are pure int math that a native Column
+  expression (``contains``) and the numpy kernels compute identically.
+
+Blobs start with a format tag. An untagged blob was written with the
+former splitmix positions; ``from_bytes`` refuses it, because probing it
+with the current positions would answer "absent" for keys it holds.
 
 CORRECTNESS CONTRACT (SURVEY.md §7b): the bloom is ONLY a prefilter. A
 candidate that misses the bloom is *definitely new* and skips the exact
@@ -29,8 +35,10 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.hashes import xxhash64_long, xxhash64_long_inplace
 
 
 _CHUNK = 1 << 18  # insert-kernel chunk: position buffer = 256k x k x 8B (~14MB at k=7)
@@ -39,6 +47,7 @@ _CHUNK = 1 << 18  # insert-kernel chunk: position buffer = 256k x k x 8B (~14MB 
 class BloomFilter:
     kind = "bloom"
     deletable = False  # a bit may be shared by several keys
+    MAGIC = b"DWSBLM02"  # blob format tag: xxhash64-derived positions
 
     # class-level scratch, keyed by (n_bits, n_hashes): the insert kernel's
     # working buffers are faulted ONCE per process and reused across calls,
@@ -51,7 +60,9 @@ class BloomFilter:
     def __init__(self, n_bits: int, n_hashes: int, bits: np.ndarray | None = None):
         self.n_bits = n_bits
         self.n_hashes = n_hashes
-        self.bits = bits if bits is not None else np.zeros((n_bits + 7) // 8, dtype=np.uint8)
+        # whole 64-bit words, so the native probe can read the bits as bigints
+        self.bits = bits if bits is not None else np.zeros(8 * ((n_bits + 63) // 64),
+                                                           dtype=np.uint8)
 
     @classmethod
     def for_capacity(cls, expected_insertions: int, fpp: float) -> "BloomFilter":
@@ -60,25 +71,38 @@ class BloomFilter:
         k = max(1, round(m / n * math.log(2)))
         return cls(m, k)
 
-    # -- vectorized int-hash membership --------------------------------
-    @staticmethod
-    def _mix(h: np.ndarray) -> np.ndarray:
-        """splitmix64 finalizer — makes positions uniform even for poorly
-        distributed inputs (sequential ids, biased hashes)."""
-        with np.errstate(over="ignore"):
-            h = (h + np.uint64(0x9E3779B97F4A7C15))
-            h = (h ^ (h >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-            h = (h ^ (h >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-            return h ^ (h >> np.uint64(31))
-
+    # -- positions ------------------------------------------------------
+    # g1 = xxhash64(h), g2 = xxhash64(g1) (Spark's, seed 42);
+    # h1 = (g1 >>> 1) mod m, h2 = 1 + (g2 >>> 1) mod (m - 1);
+    # position i = (h1 + i*h2) mod m. Every intermediate is below k*m, so
+    # the native form never overflows ANSI bigint arithmetic.
     def _positions(self, hashes: np.ndarray) -> np.ndarray:
-        """(n,) int64 -> (n, k) bit positions via double hashing
-        (Kirsch-Mitzenmacher) over two independently mixed 64-bit values."""
-        h = self._mix(hashes.astype(np.uint64))
-        h1 = h % np.uint64(self.n_bits)
-        h2 = (self._mix(h) | np.uint64(1)) % np.uint64(self.n_bits)
+        """(n,) int64 -> (n, k) bit positions (numpy twin of ``contains``)."""
+        m = np.uint64(self.n_bits)
+        g1 = xxhash64_long(hashes)
+        h1 = (g1 >> np.uint64(1)) % m
+        h2 = (xxhash64_long(g1.view(np.int64)) >> np.uint64(1)) % (m - np.uint64(1)) + np.uint64(1)
         i = np.arange(self.n_hashes, dtype=np.uint64)
-        return ((h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(self.n_bits)).astype(np.int64)
+        return ((h1[:, None] + i[None, :] * h2[:, None]) % m).astype(np.int64)
+
+    def contains(self, h: Column, words: Column) -> Column:
+        """Native might-contain of the bigint column ``h`` against
+        ``words`` (this filter's ``words()`` as an array<bigint>)."""
+        m = self.n_bits
+        g1 = F.xxhash64(h)
+        h1 = F.pmod(F.shiftrightunsigned(g1, 1), F.lit(m))
+        h2 = F.pmod(F.shiftrightunsigned(F.xxhash64(g1), 1), F.lit(m - 1)) + 1
+        hit = None
+        for i in range(self.n_hashes):
+            p = (h1 + h2 * i) % m
+            word = F.element_at(words, F.shiftright(p, 6).cast("int") + 1)
+            bit = F.call_function("shiftright", word, p.bitwiseAND(63).cast("int")).bitwiseAND(1) == 1
+            hit = bit if hit is None else hit & bit
+        return hit
+
+    def words(self) -> np.ndarray:
+        """The bits as little-endian int64 words: bit p is bit p % 64 of word p // 64."""
+        return self.bits.view("<i8")
 
     def _bufs(self) -> dict:
         key = (self.n_bits, self.n_hashes)
@@ -100,20 +124,6 @@ class BloomFilter:
             }
             BloomFilter._scratch[key] = b
         return b
-
-    @staticmethod
-    def _mix_inplace(h: np.ndarray, t: np.ndarray) -> None:
-        """splitmix64 finalizer, in-place (identical math to _mix)."""
-        with np.errstate(over="ignore"):
-            h += np.uint64(0x9E3779B97F4A7C15)
-            np.right_shift(h, np.uint64(30), out=t)
-            h ^= t
-            h *= np.uint64(0xBF58476D1CE4E5B9)
-            np.right_shift(h, np.uint64(27), out=t)
-            h ^= t
-            h *= np.uint64(0x94D049BB133111EB)
-            np.right_shift(h, np.uint64(31), out=t)
-            h ^= t
 
     def add_many(self, hashes: np.ndarray) -> int:
         """Chunked, buffer-reusing insert. Positions are computed in-place
@@ -140,14 +150,15 @@ class BloomFilter:
             h, t, h1 = b["h"][:m], b["t"][:m], b["h1"][:m]
             pos = b["pos"][:m]
             h[:] = src[s:e]
-            self._mix_inplace(h, t)          # h = mix(raw)
-            np.mod(h, nb, out=h1)            # h1
-            self._mix_inplace(h, t)          # mix again for h2
-            h |= np.uint64(1)
-            np.mod(h, nb, out=h)             # h = h2
-            with np.errstate(over="ignore"):
-                np.multiply(h[:, None], b["i"][None, :], out=pos)
-                pos += h1[:, None]
+            xxhash64_long_inplace(h, t)      # h = g1
+            np.right_shift(h, np.uint64(1), out=h1)
+            np.mod(h1, nb, out=h1)           # h1
+            xxhash64_long_inplace(h, t)      # h = g2
+            h >>= np.uint64(1)
+            np.mod(h, nb - np.uint64(1), out=h)
+            h += np.uint64(1)                # h = h2
+            np.multiply(h[:, None], b["i"][None, :], out=pos)
+            pos += h1[:, None]
             np.mod(pos, nb, out=pos)
             flat = pos.reshape(-1)
             if dense is not None:
@@ -156,8 +167,8 @@ class BloomFilter:
                 np.bitwise_or.at(self.bits, (flat >> np.uint64(3)).astype(np.int64),
                                  (np.uint64(1) << (flat & np.uint64(7))).astype(np.uint8))
         if dense is not None:
-            np.bitwise_or(self.bits, np.packbits(dense, bitorder="little")[: self.bits.size],
-                          out=self.bits)
+            packed = np.packbits(dense, bitorder="little")
+            np.bitwise_or(self.bits[: packed.size], packed, out=self.bits[: packed.size])
         return n
 
     def might_contain_many(self, hashes: np.ndarray) -> np.ndarray:
@@ -173,11 +184,14 @@ class BloomFilter:
 
     # -- (de)serialization for checkpoint manifests ---------------------
     def to_bytes(self) -> bytes:
-        head = self.n_bits.to_bytes(8, "little") + self.n_hashes.to_bytes(4, "little")
+        head = self.MAGIC + self.n_bits.to_bytes(8, "little") + self.n_hashes.to_bytes(4, "little")
         return head + self.bits.tobytes()
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "BloomFilter":
+        if not data.startswith(cls.MAGIC):
+            raise ValueError("bloom blob has no format tag (older positions)")
+        data = data[len(cls.MAGIC):]
         n_bits = int.from_bytes(data[:8], "little")
         n_hashes = int.from_bytes(data[8:12], "little")
         return cls(n_bits, n_hashes, np.frombuffer(data[12:], dtype=np.uint8).copy())
@@ -240,8 +254,7 @@ def merge_partition_filters(df: DataFrame, hash_col: str, n_bits: int, n_hashes:
             return None
         out = BloomFilter(n_bits, n_hashes)
         for r in rows:
-            np.bitwise_or(out.bits, np.frombuffer(bytes(r.blob)[12:], dtype=np.uint8),
-                          out=out.bits)
+            np.bitwise_or(out.bits, BloomFilter.from_bytes(bytes(r.blob)).bits, out=out.bits)
         return out
     # many blobs (10^10-tier sharded builds): log-tree OR-merge on executors
     blobs = blob_df.rdd.map(lambda r: BloomFilter.from_bytes(bytes(r.blob)))

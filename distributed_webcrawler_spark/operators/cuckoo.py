@@ -16,28 +16,31 @@ algorithm): buckets of 4 x 16-bit fingerprints, alternate bucket =
 bucket XOR hash(fingerprint), bounded eviction kicks. Vectorized numpy
 lookups for batch membership; insertion is per-key. The driver-held and
 sharded deployments live in operators/seen.py.
+
+Key derivation uses Spark's xxhash64 (numpy twin in functions/hashes.py):
+g = xxhash64(h); fingerprint = low 16 bits of g (0 -> 1); bucket 1 =
+(g >>> 16) mod n_buckets; bucket 2 = bucket 1 XOR xxhash64(fingerprint as
+bigint), mod n_buckets. A bucket's four fingerprints are one little-endian
+64-bit word, so ``contains`` probes natively. Blobs carry a format tag,
+as the bloom's do.
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
+from ..functions.hashes import xxhash64_long
 
 _EMPTY = 0  # fingerprints are forced nonzero
 _KICKS = 500
 
 
-def _mix(h: np.ndarray | int):
-    h = np.asarray(h, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        h = (h + np.uint64(0x9E3779B97F4A7C15))
-        h = (h ^ (h >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-        h = (h ^ (h >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-        return h ^ (h >> np.uint64(31))
-
-
 class CuckooFilter:
     kind = "cuckoo"
     deletable = True
+    MAGIC = b"DWSCKO02"  # blob format tag: xxhash64-derived fingerprints/buckets
 
     def __init__(self, n_buckets: int, bucket_size: int = 4,
                  table: np.ndarray | None = None):
@@ -54,15 +57,37 @@ class CuckooFilter:
 
     # -- key -> (fingerprint, bucket1) ----------------------------------
     def _fp_and_index(self, hashes: np.ndarray):
-        m = _mix(hashes.astype(np.uint64))
-        fp = (m & np.uint64(0xFFFF)).astype(np.uint16)
+        g = xxhash64_long(hashes)
+        fp = (g & np.uint64(0xFFFF)).astype(np.uint16)
         fp = np.where(fp == _EMPTY, np.uint16(1), fp)
-        i1 = ((m >> np.uint64(16)) % np.uint64(self.n_buckets)).astype(np.int64)
+        i1 = ((g >> np.uint64(16)) % np.uint64(self.n_buckets)).astype(np.int64)
         return fp, i1
 
     def _alt_index(self, i: np.ndarray | int, fp: np.ndarray | int):
         return (np.asarray(i, dtype=np.uint64)
-                ^ _mix(np.asarray(fp, dtype=np.uint64))) % np.uint64(self.n_buckets)
+                ^ xxhash64_long(np.asarray(fp, dtype=np.int64))) % np.uint64(self.n_buckets)
+
+    def contains(self, h: Column, words: Column) -> Column:
+        """Native might-contain of the bigint column ``h`` against
+        ``words`` (this filter's ``words()`` as an array<bigint>)."""
+        assert self.bucket_size == 4, "one 64-bit word per bucket"
+        mask = self.n_buckets - 1  # power of two: mod == AND
+        g = F.xxhash64(h)
+        low = g.bitwiseAND(0xFFFF)
+        fp = F.when(low == _EMPTY, F.lit(1).cast("bigint")).otherwise(low)
+        i1 = F.shiftrightunsigned(g, 16).bitwiseAND(mask)
+        i2 = i1.bitwiseXOR(F.xxhash64(fp)).bitwiseAND(mask)
+        hit = None
+        for i in (i1, i2):
+            word = F.element_at(words, i.cast("int") + 1)
+            for j in range(4):
+                lane = F.shiftrightunsigned(word, 16 * j).bitwiseAND(0xFFFF) == fp
+                hit = lane if hit is None else hit | lane
+        return hit
+
+    def words(self) -> np.ndarray:
+        """One little-endian int64 word per bucket; slot j is bits 16j..16j+15."""
+        return np.ascontiguousarray(self.table, dtype="<u2").view("<i8").reshape(-1)
 
     # -- mutation (scalar path; build-time) ------------------------------
     def add(self, h: int) -> bool:
@@ -158,11 +183,15 @@ class CuckooFilter:
 
     # -- serde -------------------------------------------------------------
     def to_bytes(self) -> bytes:
-        head = self.n_buckets.to_bytes(8, "little") + self.bucket_size.to_bytes(4, "little")
+        head = (self.MAGIC + self.n_buckets.to_bytes(8, "little")
+                + self.bucket_size.to_bytes(4, "little"))
         return head + self.table.tobytes()
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "CuckooFilter":
+        if not data.startswith(cls.MAGIC):
+            raise ValueError("cuckoo blob has no format tag (older positions)")
+        data = data[len(cls.MAGIC):]
         n_buckets = int.from_bytes(data[:8], "little")
         bucket_size = int.from_bytes(data[8:12], "little")
         table = np.frombuffer(data[12:], dtype=np.uint16).reshape(n_buckets, bucket_size).copy()

@@ -8,16 +8,23 @@ operators/cuckoo.py) in two deployments give four configurations:
 
 - ``DriverSeenSet``: one filter held by the driver (right below ~10^8
   keys). New hashes come from a driver-side pyarrow read of the snapshot
-  the frontier append just wrote, with no Spark job; the prefilter ships
-  the filter bytes once in the UDF closure.
+  the frontier append just wrote, with no Spark job. The prefilter is a
+  native expression: the filter's 64-bit words ride a one-row
+  array<bigint> frame, and ``element_at`` plus shifts test the bits — no
+  Python worker. ``with_maybe_seen`` broadcast-joins that frame;
+  ``prefilter`` carries it as a scalar subquery, which inlines one copy
+  of the words per bit test into the stage, so it suits small filters.
 - ``ShardedSeenStore``: the 10^10-tier lifecycle, one filter per
   host_bucket shard. Shards are added to and deleted from EXECUTOR-side
   (applyInPandas group tasks) and persisted as versioned blob files; the
-  driver holds only the {shard: version} manifest.
+  driver holds only the {shard: version} manifest. Its prefilter stays a
+  pandas UDF: a native one would need the shard words readable by
+  executors.
 
 Both implement the same interface:
 
-    prefilter() -> Column                  might-contain for a candidate row
+    with_maybe_seen(df, name) -> DataFrame df plus might-contain column ``name``
+    prefilter() -> Column                  the same test as a Column
     add_frame(df)                          fold every row's url_hash in
     add_snapshot(table, snap)              fold one committed snapshot in
     delete(victim_rows, n_rows, allow_stale)
@@ -29,10 +36,14 @@ Both implement the same interface:
 ``from_checkpoint`` restores a seen set. The checkpoint keys are the ones
 older warehouses carry: ``bloom``/``cuckoo`` name a driver filter's file,
 ``bloom_shard_versions``/``cuckoo_shard_versions`` hold a shard manifest.
+A blob without the current format tag (written with the former splitmix
+positions) restores as None, so ``CrawlEngine.resume`` rebuilds the seen
+set over the frontier instead of probing it with the wrong positions.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import tempfile
@@ -74,18 +85,29 @@ def create(cfg, warehouse: str):
 
 
 def from_checkpoint(ckpt: dict, cfg, warehouse: str):
-    """The seen set a checkpoint recorded, or None when it recorded none."""
+    """The seen set a checkpoint recorded, or None when it recorded none or
+    any of its blobs lacks the current format tag."""
     for kind in ("cuckoo", "bloom"):
         versions = ckpt.get(f"{kind}_shard_versions")
         if versions is not None:
             store = _sharded(cfg, warehouse, kind)
             store.versions = {int(k): v for k, v in versions.items()}
-            return store
+            return store if all(_tagged(kind, _blob_path(store.directory, kind, s, v))
+                                for s, v in store.versions.items()) else None
         if ckpt.get(kind):
-            with open(os.path.join(warehouse, ckpt[kind]), "rb") as f:
+            path = os.path.join(warehouse, ckpt[kind])
+            if not _tagged(kind, path):
+                return None
+            with open(path, "rb") as f:
                 return DriverSeenSet(_FILTERS[kind].from_bytes(f.read()),
                                      cfg.evict_driver_max_rows)
     return None
+
+
+def _tagged(kind: str, path: str) -> bool:
+    magic = _FILTERS[kind].MAGIC
+    with open(path, "rb") as f:
+        return f.read(len(magic)) == magic
 
 
 def _sharded(cfg, warehouse: str, kind: str) -> "ShardedSeenStore":
@@ -138,26 +160,6 @@ def _hash_array(df: DataFrame) -> np.ndarray:
     return df.select("url_hash").toPandas()["url_hash"].dropna().to_numpy(dtype=np.int64)
 
 
-def prefilter_udf(filt):
-    """Series->Series pandas UDF: might_contain over Arrow batches. The
-    filter bytes ship to executors once via closure broadcast; each worker
-    deserializes them once per task, not per batch (the filter is MBs; a
-    per-batch copy would memcpy gigabytes across a large round)."""
-    from pyspark.sql.functions import pandas_udf
-
-    blob, cls = filt.to_bytes(), type(filt)
-    memo: dict = {}
-
-    @pandas_udf("boolean")
-    def _might_contain(hashes: pd.Series) -> pd.Series:
-        f = memo.get("f")
-        if f is None:
-            f = memo["f"] = cls.from_bytes(blob)
-        return pd.Series(f.might_contain_many(hashes.fillna(0).to_numpy(dtype=np.int64)))
-
-    return _might_contain
-
-
 class DriverSeenSet:
     """One bloom or cuckoo filter held by the driver."""
 
@@ -168,8 +170,24 @@ class DriverSeenSet:
         self.kind = filt.kind
         self.evict_driver_max_rows = evict_driver_max_rows
 
+    def _words(self) -> DataFrame:
+        """The filter's words as a one-row array<bigint> frame — a copy,
+        so later adds do not reach a plan built over it."""
+        return SparkSession.active().createDataFrame(
+            pd.DataFrame({"__seen_words": [self.filter.words()]}), "__seen_words array<bigint>")
+
+    @functools.cached_property
+    def _hit(self) -> Column:
+        # built once: the filter's shape never changes, and each Column
+        # call is a py4j round-trip on the expand branch's critical path
+        return self.filter.contains(F.col("url_hash"), F.col("__seen_words"))
+
+    def with_maybe_seen(self, df: DataFrame, name: str) -> DataFrame:
+        return (df.crossJoin(F.broadcast(self._words()))
+                  .select(*df.columns, self._hit.alias(name)))
+
     def prefilter(self) -> Column:
-        return prefilter_udf(self.filter)(F.col("url_hash"))
+        return self.filter.contains(F.col("url_hash"), self._words().scalar())
 
     def add_frame(self, df: DataFrame) -> None:
         if isinstance(self.filter, BloomFilter):
@@ -281,6 +299,9 @@ class ShardedSeenStore:
         return max(self.versions.values(), default=self.version_floor) + 1
 
     # -- the seen-set interface ---------------------------------------------
+    def with_maybe_seen(self, df: DataFrame, name: str) -> DataFrame:
+        return df.withColumn(name, self.prefilter())
+
     def prefilter(self) -> Column:
         return self.prefilter_udf()(F.col("url_hash"), self.shard_col())
 

@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine, cosine_arrow, norm
+from ..functions.vectors import cosine, cosine_arrow, norm, round_half_away
 
 
 def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int,
@@ -160,7 +160,7 @@ def ivf_assign_broadcast(df: DataFrame,
         vn = np.sqrt((v * v).sum(axis=1))
         # same arithmetic shape as functions.vectors.cosine / the oracle:
         # round(dot / (norm_a * norm_b), 6)
-        sims = np.round((v @ m_.T) / (vn[:, None] * cn_[None, :]), 6)
+        sims = round_half_away((v @ m_.T) / (vn[:, None] * cn_[None, :]), 6)
         if n_out == 1:
             # stable argmax over rows sorted by cell id = smaller-id tie-break
             return pd.Series(ids_[np.argmax(sims, axis=1)])
@@ -343,7 +343,7 @@ def semdedup_pairs(df: DataFrame, centroids: list[tuple[int, list[float]]],
         v = np.asarray(pdf["v"].tolist(), dtype=np.float64)
         cs = pdf["cs"].to_numpy(dtype=np.float64)
         n = np.sqrt((v * v).sum(axis=1))
-        sims = np.round((v @ v.T) / (n[:, None] * n[None, :]), 6)
+        sims = round_half_away((v @ v.T) / (n[:, None] * n[None, :]), 6)
         ia, ib = np.triu_indices(len(ids), 1)  # ids sorted -> id_a < id_b
         keep = sims[ia, ib] >= th
         ia, ib = ia[keep], ib[keep]

@@ -719,7 +719,9 @@ class CrawlEngine:
     def _expand(self, fetched: DataFrame, rnd: int) -> DataFrame:
         """C1/C2/C4/C5 + J1: explode out_links of ok-pages under the depth
         gate, resolve+canonicalize, validity-filter, first-wins in-round
-        dedup, seen-prefiltered exact seen anti-join."""
+        dedup, seen-prefiltered exact seen anti-join. In clean mode with a
+        driver seen set no step runs in Python except the resolve residue
+        (links no native tier handles), coalesced behind an exchange."""
         cfg = self.cfg
         parents = fetched.where(
             (F.col("web_status") == 200) & (F.col("depth") < cfg.max_depth)
@@ -727,9 +729,7 @@ class CrawlEngine:
         links = parents.select(
             "session_id", F.col("url").alias("parent_url"), "depth", "sched_seq",
             F.posexplode(F.col("out_links")).alias("link_idx", "href"))
-        resolved = links.withColumn(
-            "child_url",
-            U.resolve_and_canonicalize_udf(cfg.reference_compat)(F.col("parent_url"), F.col("href")))
+        resolved = U.resolve_links(links, "parent_url", "href", "child_url", cfg.reference_compat)
         valid = resolved.where(U.is_valid_url(F.col("child_url")))
         if cfg.allowed_domains and not cfg.reference_compat:
             valid = valid.where(U.url_host(F.col("child_url")).isin(cfg.allowed_domains))
@@ -767,7 +767,7 @@ class CrawlEngine:
         seen_keys = (self._t("frontier").read(self.spark)
                      .select("session_id", "url").hint("shuffle_hash"))
         if self.seen is not None:
-            tagged = cand.withColumn("__maybe_seen", self.seen.prefilter()).cache()
+            tagged = self.seen.with_maybe_seen(cand, "__maybe_seen").cache()
             self._round_caches.append(tagged)  # unpersisted at end of round
             definitely_new = tagged.where(~F.col("__maybe_seen")).drop("__maybe_seen")
             needs_check = tagged.where(F.col("__maybe_seen")).drop("__maybe_seen")

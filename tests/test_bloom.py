@@ -7,7 +7,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from distributed_webcrawler_spark.operators.bloom import BloomFilter, build_bloom
-from distributed_webcrawler_spark.operators.seen import ShardedSeenStore, prefilter_udf
+from distributed_webcrawler_spark.operators.seen import DriverSeenSet, ShardedSeenStore
 
 
 def test_no_false_negatives_and_fpp():
@@ -37,16 +37,16 @@ def test_serde_roundtrip():
 
 
 def test_distributed_build_and_prefilter(spark):
-    df = spark.range(0, 20_000, 1, 8).select(F.xxhash64("id").alias("h"))
-    bf = build_bloom(df, "h", expected_insertions=20_000, fpp=0.01)
-    # every inserted hash is found via the pandas-UDF prefilter
-    tagged = df.withColumn("maybe", prefilter_udf(bf)(F.col("h")))
+    df = spark.range(0, 20_000, 1, 8).select(F.xxhash64("id").alias("url_hash"))
+    bf = build_bloom(df, "url_hash", expected_insertions=20_000, fpp=0.01)
+    # every inserted hash is found via the native driver-set prefilter
+    tagged = df.withColumn("maybe", DriverSeenSet(bf, 0).prefilter())
     assert tagged.where(~F.col("maybe")).count() == 0
     # union merge across two disjoint builds == build over the union
-    df2 = spark.range(20_000, 40_000, 1, 8).select(F.xxhash64("id").alias("h"))
-    bf2 = build_bloom(df2, "h", expected_insertions=20_000, fpp=0.01)
+    df2 = spark.range(20_000, 40_000, 1, 8).select(F.xxhash64("id").alias("url_hash"))
+    bf2 = build_bloom(df2, "url_hash", expected_insertions=20_000, fpp=0.01)
     merged = bf.union(bf2)
-    both = df.unionByName(df2).withColumn("maybe", prefilter_udf(merged)(F.col("h")))
+    both = df.unionByName(df2).withColumn("maybe", DriverSeenSet(merged, 0).prefilter())
     assert both.where(~F.col("maybe")).count() == 0
 
 

@@ -319,6 +319,29 @@ def test_cosine_zero_norm_and_empty_rows_are_null(spark):
     assert [r.hof for r in out] == [r.arrow for r in out] == [None, None, None, 0.96]
 
 
+def test_round_half_away_matches_spark_round(spark):
+    """The numpy rounding helper equals Spark's F.round (HALF_UP) on exact
+    dyadic ties (k/128 at 6 decimals, k/64 at 5), where np.round's
+    ties-to-even gives the other neighbour, and on random doubles."""
+    from distributed_webcrawler_spark.functions.vectors import round_half_away
+
+    ties = [(k / 128.0, 6) for k in range(-300, 301)] + [(k / 64.0, 5) for k in range(-150, 151)]
+    rng = np.random.default_rng(8)
+    rand = [(float(x), 6) for x in rng.uniform(-1.0, 1.0, 2000)]
+    rows = [(i, x, d) for i, (x, d) in enumerate(ties + rand)]
+    df = spark.createDataFrame(rows, "i int, x double, d int")
+    got = {r.i: (r.r6, r.r5) for r in df.select(
+        "i", F.round("x", 6).alias("r6"), F.round("x", 5).alias("r5")).collect()}
+    xs = np.array([x for _, x, _ in rows])
+    for d, pick in ((6, 0), (5, 1)):
+        idx = [i for i, _, dd in rows if dd == d]
+        mine = round_half_away(xs[idx], d)
+        spark_r = np.array([got[i][pick] for i in idx])
+        assert np.array_equal(mine, spark_r), (d, xs[idx][mine != spark_r])
+    assert round_half_away(1 / 128, 6) == 0.007813 and round_half_away(-3 / 128, 6) == -0.023438
+    assert np.round(1 / 128, 6) == 0.007812  # the ties-to-even result the helper replaces
+
+
 def test_semdedup_pairs_singleton_cell_empty(spark):
     """A cell with fewer than two members emits no pairs and the schema
     survives (the applyInPandas empty-frame branch)."""

@@ -8,7 +8,9 @@
 - the engine's scheduling path contains no `Window.orderBy()` without
   partitioning (the one-task trap), asserted via the sched_seq mechanism,
 - hot-path expressions run inside WholeStageCodegen,
-- the robots gate evaluates with no Python worker (no EvalPython node).
+- the robots gate evaluates with no Python worker (no EvalPython node),
+- the expand branch evaluates its one Python UDF once per link, behind a
+  coalescing exchange, and probes a driver seen set natively.
 """
 
 from __future__ import annotations
@@ -163,6 +165,39 @@ def test_pages_plan_decodes_each_distinct_image_once(spark, fixture_dir, warehou
         assert re.search(r"\[image_id#\d+\], \[image_id#\d+\], LeftSemi", below), below
     for c in eng._round_caches:
         c.unpersist()
+
+
+def test_expand_has_one_python_node_behind_an_exchange(spark, fixture_dir, warehouse):
+    """Clean mode: the only Python node of _expand is the resolve residue's
+    ArrowEvalPython, directly above the rebalance exchange that lets AQE
+    coalesce it; the driver seen set's prefilter is native. Compat mode
+    keeps the UDF on every link, evaluated once (the validity filter is
+    never pushed below it). The cached candidate frame prints once per
+    reader, so nodes are told apart by their text, expression ids
+    included."""
+    from distributed_webcrawler_spark import CrawlConfig
+    from distributed_webcrawler_spark.plans.engine import CrawlEngine
+    from distributed_webcrawler_spark.sources.store import SnapshotStore
+
+    wg = spark.read.parquet(f"{fixture_dir}/web_graph")
+    pay = spark.read.parquet(f"{fixture_dir}/payloads")
+    seeds = spark.read.parquet(f"{fixture_dir}/seeds")
+    for compat in (False, True):
+        eng = CrawlEngine(spark, SnapshotStore(f"{warehouse}/{compat}"),
+                          CrawlConfig(reference_compat=compat), wg, pay, None)
+        eng.start_session(seeds)
+        assert not eng.seen.sharded
+        sched, _n = eng._schedule(eng.pending(), 1)
+        lines = _plan(eng._expand(eng._fetch(sched), 1)).splitlines()
+        py = {i: ln.split("- ", 1)[-1] for i, ln in enumerate(lines)
+              if "EvalPython" in ln or "MapInPandas" in ln}
+        assert len(set(py.values())) == 1, lines
+        assert all("ArrowEvalPython [_fused(" in t for t in py.values()), lines
+        if not compat:
+            for i in py:
+                assert re.search(r"Exchange .*REBALANCE", lines[i + 1]), lines[i + 1]
+        for c in eng._round_caches:
+            c.unpersist()
 
 
 def test_new_map_side_queries_have_no_exchange(spark):

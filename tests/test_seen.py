@@ -12,8 +12,10 @@ import numpy as np
 import pytest
 
 from distributed_webcrawler_spark import CrawlConfig
+from distributed_webcrawler_spark.functions.hashes import xxhash64_long
+from distributed_webcrawler_spark.operators.bloom import BloomFilter
 from distributed_webcrawler_spark.operators.cuckoo import CuckooFilter
-from distributed_webcrawler_spark.operators.seen import add_all
+from distributed_webcrawler_spark.operators.seen import DriverSeenSet, add_all
 from distributed_webcrawler_spark.plans.engine import CrawlEngine
 from distributed_webcrawler_spark.sources.store import SnapshotStore
 
@@ -148,3 +150,59 @@ def test_fresh_engine_on_existing_warehouse_keeps_checkpointed_files(spark, fixt
     after = {f: open(os.path.join(wh, f), "rb").read() for f in named}
     assert after == before
     assert _named(SnapshotStore(wh).read_checkpoints()[-1]).isdisjoint(named)
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_native_probe_matches_numpy(spark, kind):
+    """The driver set's native prefilter (xxhash64, element_at and shifts
+    in the JVM) answers exactly as the numpy might_contain_many on 10^5
+    random hashes, extremes included, with no false negative; and the
+    numpy xxhash64 twin equals Spark's xxhash64 on every one of them."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(17)
+    inserted = rng.integers(-(2**63), 2**63 - 1, 20_000, dtype=np.int64, endpoint=True)
+    probe = np.concatenate([
+        inserted, rng.integers(-(2**63), 2**63 - 1, 80_000, dtype=np.int64, endpoint=True),
+        np.array([0, 1, -1, 2**63 - 1, -(2**63)], dtype=np.int64)])
+    filt = (BloomFilter.for_capacity(20_000, 0.01) if kind == "bloom"
+            else CuckooFilter.for_capacity(20_000))
+    add_all(filt, inserted)
+    want = filt.might_contain_many(probe)
+    assert want[: len(inserted)].all()
+    df = spark.createDataFrame(pd.DataFrame({"url_hash": probe}))
+    got = df.select(DriverSeenSet(filt, 0).prefilter().alias("m"),
+                    F.xxhash64("url_hash").alias("g")).toPandas()
+    assert np.array_equal(got["m"].to_numpy(), want)
+    assert np.array_equal(got["g"].to_numpy(), xxhash64_long(probe).view(np.int64))
+
+
+@pytest.mark.parametrize("seen_set", sorted(SEEN_SETS))
+def test_untagged_blob_is_rebuilt_not_probed(spark, fixture_dir, tmp_path, seen_set):
+    """A checkpoint whose seen-set blobs lack the format tag (written with
+    the former splitmix positions) restores as no seen set, so resume
+    rebuilds it over the frontier. The untagged blobs here hold no keys:
+    probed with the current positions, every frontier key would read
+    "definitely new" — a false negative."""
+    wh = str(tmp_path / "wh")
+    _engine(spark, fixture_dir, wh, **SEEN_SETS[seen_set]).start_session(
+        _seeds(spark, fixture_dir, 40))
+    store = SnapshotStore(wh)
+    named = _named(store.read_checkpoints()[-1])
+    assert named
+    for name in named:
+        path = os.path.join(wh, name)
+        blob = open(path, "rb").read()
+        # former layout: the same 12-byte shape header, no tag, all bits clear
+        with open(path, "wb") as f:
+            f.write(blob[8:20] + bytes(len(blob) - 20))
+
+    eng = _engine(spark, fixture_dir, wh, **SEEN_SETS[seen_set])
+    assert eng.resume() == []
+    fr = store.table("frontier").read(spark)
+    assert fr.count() == 40
+    assert fr.where(~eng.seen.prefilter()).count() == 0
+    if eng.seen.sharded:
+        assert not any(n.endswith(f"-v{v:08d}.bin") for n in named
+                       for v in eng.seen.versions.values())
