@@ -11,10 +11,10 @@ Reference parity targets (cited so the judge can check):
 Everything here is either a built-in Column expression (JVM, codegen) or a
 pandas UDF over Arrow batches; no per-row Python UDFs. Clean-mode link
 resolution (``resolve_links``) is native for the common link shapes:
-``native_resolve`` expresses the fast tiers A/B/C of
-``resolve_canonicalize_batch`` as Column expressions and drops links that
-can never pass ``is_valid_url``; only the rest (the residue) reaches the
-pandas UDF, behind a coalescing exchange.
+``native_resolve`` resolves them with string expressions (tiers A/B/C)
+and drops links that can never pass ``is_valid_url``; only the rest (the
+residue) reaches the exact per-row path in a pandas UDF, behind a
+coalescing exchange.
 """
 
 from __future__ import annotations
@@ -146,104 +146,50 @@ def _resolve_one(b, h, reference_compat: bool):
 
 
 def resolve_canonicalize_batch(base: pd.Series, href: pd.Series) -> pd.Series:
-    """Clean-mode fused resolve+canonicalize over a batch, with vectorized
-    fast paths. Semantics = resolve, drop fragment, canonicalize; since the
-    fragment is dropped at the end anyway, stripping it FIRST is equivalent,
-    which lets whole link classes resolve with pure string ops:
+    """Clean-mode resolve+canonicalize over a batch: the exact per-row path
+    (resolve, drop fragment, canonicalize) — the body of the clean-mode
+    UDF. In the engine only the residue reaches it: ``native_resolve``
+    takes the common link shapes first."""
+    return pd.Series([_resolve_one(b, h, False) for b, h in zip(base, href)],
+                     index=base.index, dtype=object)
+
+
+def _dotless(c: str) -> str:
+    """No dot segments, and no ';': it starts CPython's legacy "params"
+    component, and urljoin/urlsplit strip an EMPTY params ('x;' -> 'x')
+    where a native tier would keep the string verbatim."""
+    return (f"NOT (contains({c}, '/../') OR contains({c}, '/./') OR endswith({c}, '/.')"
+            f" OR endswith({c}, '/..') OR contains({c}, ';'))")
+
+
+def native_resolve(base: str, href: str) -> tuple[Column, Column]:
+    """Clean-mode link resolution for the common link shapes, as native
+    expressions over the string columns named ``base`` and ``href``.
+    The fragment is dropped at the end of resolve+canonicalize anyway, so
+    stripping it FIRST is equivalent, which lets whole link classes
+    resolve with string operations:
 
       A: already-absolute, already-canonical link  -> identity
       B: root-relative path ("/p/x")               -> base_origin + link
       C: directory-relative path ("p/x")           -> base_dir + link
 
     Every predicate is conservative (lowercase host, no port/userinfo, no
-    dot segments, no '//', no scheme-colon) — any doubt falls through to
-    the exact per-row slow path, so results are identical
-    (fuzz-asserted in tests/test_urls.py).
-    """
-    h = href.str.strip()
-    nofrag = h.str.split("#", n=1).str[0]
-    ns = nofrag.fillna("")
-    bs = base.fillna("")
-    # whitespace or control characters anywhere: exact path (urlsplit
-    # deletes or strips some that str.strip keeps, e.g. a leading NUL)
-    plain = ~href.fillna("").str.contains(_WS_OR_CTL) & ~bs.str.contains(_WS_OR_CTL)
-    no_dots = (
-        ~ns.str.contains("/../", regex=False)
-        & ~ns.str.contains("/./", regex=False)
-        & ~ns.str.endswith("/.")
-        & ~ns.str.endswith("/..")
-        # ';' starts CPython's legacy "params" component: urljoin/urlsplit
-        # strip an EMPTY params ('x;' -> 'x') while the fast paths keep the
-        # string verbatim — any ';' goes to the exact slow path so both
-        # paths canonicalize the same target URL identically
-        & ~ns.str.contains(";", regex=False)
-    )
-    tier_a = (
-        ns.str.match(r"^https?://[a-z0-9.-]+(/[^#\s?]*)?(\?[^#\s]+)?$")
-        & ~ns.str.slice(8).str.contains("//", regex=False)
-        & no_dots
-        & base.notna()
-    )
-    base_origin = bs.str.extract(r"^(https?://[a-z0-9.-]+)(?:/|$)", expand=False)
-    tier_b = (
-        ns.str.match(r"^/[^/#\s?][^#\s?]*$")
-        & ~ns.str.contains("//", regex=False)
-        & no_dots
-        & base_origin.notna()
-    )
-    # tier C splices `base_dir + link` VERBATIM (no canonicalize pass), so
-    # the base itself must already be canonical-clean: lowercase host, a
-    # path, no query/fragment (a '/' inside either breaks the last-segment
-    # strip), no dot segments, no '//' runs.
-    base_clean = (
-        bs.str.match(r"^https?://[a-z0-9.-]+/[^?#\s]*$")
-        & ~bs.str.slice(8).str.contains("//", regex=False)
-        & ~bs.str.contains("/../", regex=False)
-        & ~bs.str.contains("/./", regex=False)
-        & ~bs.str.endswith("/.")
-        & ~bs.str.endswith("/..")
-        & ~bs.str.contains(";", regex=False)  # params quirk, see no_dots
-    )
-    base_dir = bs.str.replace(r"[^/]*$", "", regex=True)
-    tier_c = (
-        ns.str.match(r"^[^/:#?\s.][^:#?\s]*$")
-        & ~ns.str.contains("//", regex=False)
-        & no_dots
-        & base_clean
-    )
-    tier_a, tier_b, tier_c = tier_a & plain, tier_b & plain, tier_c & plain
-    out = nofrag.where(tier_a, None)
-    out = out.mask(tier_b & ~tier_a, base_origin + ns)
-    out = out.mask(tier_c & ~tier_a & ~tier_b, base_dir + ns)
-    slow = ~(tier_a | tier_b | tier_c)
-    if slow.any():
-        out[slow] = [
-            _resolve_one(b, v, reference_compat=False)
-            for b, v in zip(base[slow], href[slow])
-        ]
-    return out
-
-
-def _dotless(c: str) -> str:
-    """No dot segments and no ';' (see no_dots in resolve_canonicalize_batch)."""
-    return (f"NOT (contains({c}, '/../') OR contains({c}, '/./') OR endswith({c}, '/.')"
-            f" OR endswith({c}, '/..') OR contains({c}, ';'))")
-
-
-def native_resolve(base: str, href: str) -> tuple[Column, Column]:
-    """Tiers A/B/C of ``resolve_canonicalize_batch`` as native expressions
-    over the string columns named ``base`` and ``href``.
+    dot segments, no '//', no scheme-colon, no whitespace or control
+    character in either column), so a tier's result equals ``_resolve_one``
+    (fuzz-asserted in tests/test_urls.py). Tier C splices the base
+    verbatim, so it also needs a canonical-clean base: a path, no query or
+    fragment (a '/' inside either breaks the last-segment strip).
 
     Returns ``(url, reject)``. ``url`` is the resolved canonical URL when a
     tier applies, else null. ``reject`` is true for links that can never
     pass ``is_valid_url``: a null base or href, a scheme other than
     http(s), or an explicit non-default port (compared as digit strings
     without leading zeros, never cast — ':0443' is https's default port).
-    Rows with neither go through the exact Python path. So do all rows
-    holding whitespace or control characters, before any other test.
-    The predicates mirror the pandas ones; ``regexp_extract`` yields ''
-    where pandas yields NaN. Written as SQL text (raw r'' literals keep
-    the regexes verbatim): one parse instead of ~70 Column calls.
+    Rows with neither go through the exact Python path. Java regexes
+    differ from Python's ``re`` (``\\s`` is ASCII-only; ``regexp_extract``
+    yields '' on no match), hence the explicit ``_WS_OR_CTL`` test.
+    Written as SQL text (raw r'' literals keep the regexes verbatim): one
+    parse instead of ~70 Column calls.
     """
     b, h = f"`{base}`", f"`{href}`"
     clean = f"NOT (rlike({b}, r'{_WS_OR_CTL}') OR rlike({h}, r'{_WS_OR_CTL}'))"
@@ -307,7 +253,7 @@ def resolve_and_canonicalize_udf(reference_compat: bool):
     reference_compat=True  -> RFC 3986 resolve only, fragments kept
                               (Jsoup abs:href behavior, BasicCrawler.java:154)
     reference_compat=False -> resolve, drop fragment, full canonicalization
-                              via the vectorized fast paths
+                              (resolve_canonicalize_batch)
     """
     from pyspark.sql.types import StringType
 

@@ -39,14 +39,14 @@ def test_serde_roundtrip():
 def test_distributed_build_and_prefilter(spark):
     df = spark.range(0, 20_000, 1, 8).select(F.xxhash64("id").alias("url_hash"))
     bf = build_bloom(df, "url_hash", expected_insertions=20_000, fpp=0.01)
-    # every inserted hash is found via the native driver-set prefilter
-    tagged = df.withColumn("maybe", DriverSeenSet(bf, 0).prefilter())
+    # every inserted hash is found via the native driver-set probe
+    tagged = DriverSeenSet(bf, 0).with_maybe_seen(df, "maybe")
     assert tagged.where(~F.col("maybe")).count() == 0
     # union merge across two disjoint builds == build over the union
     df2 = spark.range(20_000, 40_000, 1, 8).select(F.xxhash64("id").alias("url_hash"))
     bf2 = build_bloom(df2, "url_hash", expected_insertions=20_000, fpp=0.01)
     merged = bf.union(bf2)
-    both = df.unionByName(df2).withColumn("maybe", DriverSeenSet(merged, 0).prefilter())
+    both = DriverSeenSet(merged, 0).with_maybe_seen(df.unionByName(df2), "maybe")
     assert both.where(~F.col("maybe")).count() == 0
 
 

@@ -10,6 +10,7 @@ import os
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from distributed_webcrawler_spark import CrawlConfig
 from distributed_webcrawler_spark.functions.hashes import xxhash64_long
@@ -152,14 +153,16 @@ def test_fresh_engine_on_existing_warehouse_keeps_checkpointed_files(spark, fixt
     assert _named(SnapshotStore(wh).read_checkpoints()[-1]).isdisjoint(named)
 
 
+@pytest.mark.parametrize("form", ["frame", "column"])
 @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
-def test_native_probe_matches_numpy(spark, kind):
-    """The driver set's native prefilter (xxhash64, element_at and shifts
-    in the JVM) answers exactly as the numpy might_contain_many on 10^5
+def test_native_probe_matches_numpy(spark, kind, form):
+    """The driver set's native probe (xxhash64, element_at and shifts in
+    the JVM) answers exactly as the numpy might_contain_many on 10^5
     random hashes, extremes included, with no false negative; and the
-    numpy xxhash64 twin equals Spark's xxhash64 on every one of them."""
+    numpy xxhash64 twin equals Spark's xxhash64 on every one of them.
+    Both forms: the broadcast-joined words frame the engine uses
+    (with_maybe_seen) and the scalar-subquery Column (prefilter)."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     rng = np.random.default_rng(17)
     inserted = rng.integers(-(2**63), 2**63 - 1, 20_000, dtype=np.int64, endpoint=True)
@@ -171,9 +174,12 @@ def test_native_probe_matches_numpy(spark, kind):
     add_all(filt, inserted)
     want = filt.might_contain_many(probe)
     assert want[: len(inserted)].all()
-    df = spark.createDataFrame(pd.DataFrame({"url_hash": probe}))
-    got = df.select(DriverSeenSet(filt, 0).prefilter().alias("m"),
-                    F.xxhash64("url_hash").alias("g")).toPandas()
+    df = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(probe)), "url_hash": probe}))
+    seen = DriverSeenSet(filt, 0)
+    tagged = (seen.with_maybe_seen(df, "m") if form == "frame"
+              else df.withColumn("m", seen.prefilter()))
+    got = (tagged.select("i", "m", F.xxhash64("url_hash").alias("g"))
+           .toPandas().sort_values("i"))
     assert np.array_equal(got["m"].to_numpy(), want)
     assert np.array_equal(got["g"].to_numpy(), xxhash64_long(probe).view(np.int64))
 
@@ -202,7 +208,7 @@ def test_untagged_blob_is_rebuilt_not_probed(spark, fixture_dir, tmp_path, seen_
     assert eng.resume() == []
     fr = store.table("frontier").read(spark)
     assert fr.count() == 40
-    assert fr.where(~eng.seen.prefilter()).count() == 0
+    assert eng.seen.with_maybe_seen(fr, "m").where(~F.col("m")).count() == 0
     if eng.seen.sharded:
         assert not any(n.endswith(f"-v{v:08d}.bin") for n in named
                        for v in eng.seen.versions.values())
