@@ -6739,27 +6739,20 @@ def q_lossless_codec_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a label ship per image."""
     import pandas as pd
 
+    from distributed_webcrawler_spark.functions.batches import map_rows
     from distributed_webcrawler_spark.sources import codec
     from distributed_webcrawler_spark.sources import webp as webplib
 
     specs = pd.DataFrame([(iid, w, h) for iid, w, h, _f in _mm_specs()],
                          columns=["image_id", "w", "h"])
 
-    def enc_sizes(batches):
-        for pdf in batches:
-            rows = []
-            for iid, w, h in zip(pdf["image_id"], pdf["w"], pdf["h"]):
-                px = codec.synth_pixels(iid, int(w), int(h))
-                rows.append((iid, int(w), int(h),
-                             len(codec.encode_png(px)),
-                             len(webplib.encode_webp_lossless(px))))
-            yield pd.DataFrame(rows, columns=["image_id", "w", "h",
-                                              "png_bytes", "webp_bytes"])
+    def enc_sizes(iid, w, h):
+        px = codec.synth_pixels(iid, int(w), int(h))
+        return [(iid, int(w), int(h), len(codec.encode_png(px)),
+                 len(webplib.encode_webp_lossless(px)))]
 
-    st = (spark.createDataFrame(specs).repartition(8)
-          .mapInPandas(enc_sizes,
-                       "image_id string, w int, h int, "
-                       "png_bytes long, webp_bytes long"))
+    st = map_rows(spark.createDataFrame(specs).repartition(8), enc_sizes,
+                  "image_id string, w int, h int, png_bytes long, webp_bytes long")
     return (st.select(
                 "image_id", "w", "h", "png_bytes", "webp_bytes",
                 F.when(F.col("png_bytes") <= F.col("webp_bytes"), "png")

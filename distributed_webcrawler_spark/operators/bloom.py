@@ -6,8 +6,8 @@ exact Redis SET (URLFrontier.java:74) — SURVEY.md §1.1. This module
 implements the declared design the Spark way:
 
 - per-partition bitarray build (numpy, over Arrow batches / iterators),
-- OR-merge via ``RDD.treeAggregate`` (depth 2 -> log-tree combine instead
-  of hauling every partition's bits to the driver),
+- OR-merge of the per-partition bits on the driver, from at most 32
+  partitions (``merge_partition_filters``),
 - double hashing h_i = h1 + i*h2 (Kirsch-Mitzenmacher) with h1, h2 taken
   from Spark's own xxhash64 of the already computed url_hash (and of that
   hash again), so membership tests are pure int math that a native Column
@@ -178,10 +178,6 @@ class BloomFilter:
         present = (self.bits[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
         return present.all(axis=1)
 
-    def union(self, other: "BloomFilter") -> "BloomFilter":
-        assert self.n_bits == other.n_bits and self.n_hashes == other.n_hashes
-        return BloomFilter(self.n_bits, self.n_hashes, np.bitwise_or(self.bits, other.bits))
-
     # -- (de)serialization for checkpoint manifests ---------------------
     def to_bytes(self) -> bytes:
         head = self.MAGIC + self.n_bits.to_bytes(8, "little") + self.n_hashes.to_bytes(4, "little")
@@ -195,24 +191,6 @@ class BloomFilter:
         n_bits = int.from_bytes(data[:8], "little")
         n_hashes = int.from_bytes(data[8:12], "little")
         return cls(n_bits, n_hashes, np.frombuffer(data[12:], dtype=np.uint8).copy())
-
-
-def build_bloom(df: DataFrame, hash_col: str, expected_insertions: int, fpp: float,
-                tree_depth: int = 2, max_build_partitions: int = 32) -> BloomFilter:
-    """Distributed build: per-partition bitarrays over Arrow batches
-    (mapInPandas — NOT `.rdd`, which row-pickles every value JVM->Python),
-    then a treeReduce OR-merge of the per-partition filters.
-
-    Bit-OR is associative+commutative, so the log-tree combine is exact.
-    Partition count is capped: each partition yields one n_bits-sized blob,
-    so fewer/larger build partitions means less merge traffic. At the
-    10^10 tier the filter would be sharded by host_bucket (one filter per
-    bucket) rather than one global bitarray — same code per shard.
-    """
-    proto = BloomFilter.for_capacity(expected_insertions, fpp)
-    merged = merge_partition_filters(df, hash_col, proto.n_bits, proto.n_hashes,
-                                     max_build_partitions, tree_depth)
-    return merged if merged is not None else proto
 
 
 def _partition_filter_fn(n_bits: int, n_hashes: int):
@@ -231,39 +209,19 @@ def _partition_filter_fn(n_bits: int, n_hashes: int):
 
 
 def merge_partition_filters(df: DataFrame, hash_col: str, n_bits: int, n_hashes: int,
-                            max_parts: int = 32, tree_depth: int = 2) -> BloomFilter | None:
-    """Per-partition filters + treeReduce OR-merge, computed EXACTLY ONCE.
-
-    The blob RDD is persisted before the emptiness probe — an unpersisted
-    RDD would re-run the whole per-partition hash+serialize pipeline a
-    second time inside treeReduce (measured as a full extra pass over the
-    round's candidates). Partition count is capped so merge traffic is
-    bounded at max_parts × (n_bits/8) bytes regardless of input layout."""
+                            max_parts: int = 32) -> BloomFilter | None:
+    """Per-partition filters over Arrow batches (mapInPandas — not ``.rdd``,
+    which row-pickles every value JVM->Python), collected and OR-merged on
+    the driver in one job; None when ``df`` holds no hash. Partition count
+    is capped, so the collect is bounded at max_parts × (n_bits/8) bytes
+    whatever the input layout, and the numpy OR takes microseconds."""
     slim = df.select(hash_col)
-    n_parts = slim.rdd.getNumPartitions()
-    if n_parts > max_parts:
+    if slim.rdd.getNumPartitions() > max_parts:
         slim = slim.coalesce(max_parts)
-        n_parts = max_parts
-    blob_df = slim.mapInPandas(_partition_filter_fn(n_bits, n_hashes), "blob binary")
-    if n_parts <= 64:
-        # few blobs: ONE job, collect and OR on the driver (numpy OR of
-        # <=64 x n_bits/8 bytes is microseconds — the treeReduce machinery
-        # would pickle every filter through Python RDD shuffles for nothing)
-        rows = blob_df.collect()
-        if not rows:
-            return None
-        out = BloomFilter(n_bits, n_hashes)
-        for r in rows:
-            np.bitwise_or(out.bits, BloomFilter.from_bytes(bytes(r.blob)).bits, out=out.bits)
-        return out
-    # many blobs (10^10-tier sharded builds): log-tree OR-merge on executors
-    blobs = blob_df.rdd.map(lambda r: BloomFilter.from_bytes(bytes(r.blob)))
-    from pyspark import StorageLevel
-
-    blobs.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        if blobs.isEmpty():
-            return None
-        return blobs.treeReduce(lambda a, b: a.union(b), depth=tree_depth)
-    finally:
-        blobs.unpersist()
+    rows = slim.mapInPandas(_partition_filter_fn(n_bits, n_hashes), "blob binary").collect()
+    if not rows:
+        return None
+    out = BloomFilter(n_bits, n_hashes)
+    for r in rows:
+        np.bitwise_or(out.bits, BloomFilter.from_bytes(bytes(r.blob)).bits, out=out.bits)
+    return out

@@ -89,23 +89,11 @@ class CuckooFilter:
         """One little-endian int64 word per bucket; slot j is bits 16j..16j+15."""
         return np.ascontiguousarray(self.table, dtype="<u2").view("<i8").reshape(-1)
 
-    # -- mutation (scalar path; build-time) ------------------------------
-    def add(self, h: int) -> bool:
-        fp, i1 = self._fp_and_index(np.array([h], dtype=np.int64))
-        fp, i1 = int(fp[0]), int(i1[0])
-        i2 = int(self._alt_index(i1, fp))
-        for i in (i1, i2):
-            slot = np.argwhere(self.table[i] == _EMPTY)
-            if len(slot):
-                self.table[i, slot[0][0]] = fp
-                return True
-        # evict: bounded random-walk kicks (deterministic seed from fp)
-        return self._insert_with_kicks(fp, i1, i2)
-
+    # -- mutation ------------------------------------------------------
     def add_many(self, hashes: np.ndarray) -> int:
         """Bulk insert: fingerprints and bucket indexes are computed
-        VECTORIZED up front (the numpy-call-per-key overhead of looping
-        `add` dominates at frontier batch sizes); only the placement —
+        VECTORIZED up front (a numpy call per key would dominate at
+        frontier batch sizes); only the placement —
         inherently sequential, since each insert changes occupancy —
         walks a python loop over plain ints."""
         hv = np.asarray(hashes, dtype=np.int64)

@@ -3,13 +3,13 @@ extraction / resize over binary payload columns.
 
 The container has no PIL, so the CODEC is the deterministic fake from
 sources/codec.py (clearly a stub-swap point); everything Spark-side — the
-binary column schema, mapInPandas batch iteration, output struct, partition
-sizing — is the real production shape. Swapping `decode_image` for
-PIL.Image.open changes nothing above this module.
+binary column schema, Arrow batch iteration (functions/batches.map_rows),
+output struct, partition sizing — is the real production shape. Swapping
+`decode_image` for PIL.Image.open changes nothing above this module.
 
 Scale notes: payload bytes dominate row width, so these operators
-- iterate Arrow RecordBatches (mapInPandas) and never collect bytes to the
-  driver,
+- iterate Arrow RecordBatches (map_rows over mapInPandas) and never
+  collect bytes to the driver,
 - emit *metadata-width* rows (decode stats / features), so the shuffle
   after a decode stage carries no pixels,
 - rely on spark.sql.files.maxPartitionBytes to keep a batch of ~128MB of
@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.batches import map_rows
 from ..sources import codec
 
 DECODE_SCHEMA = (
@@ -37,29 +38,17 @@ def decode_stats(payloads: DataFrame, id_col: str = "image_id", bytes_col: str =
     """Decode every payload, emit per-image stats (validates bytes end-to-end
     without moving pixels past the decode stage)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for iid, data in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    px, fmt = codec.decode_image(bytes(data))
-                    m = px.astype(np.float64).mean(axis=(0, 1))
-                    rows.append((iid, True, fmt, px.shape[1], px.shape[0],
-                                 round(float(m[0]), 4), round(float(m[1]), 4),
-                                 round(float(m[2]), 4), codec.phash64(px), None))
-                except codec.CodecError as e:
-                    rows.append((iid, False, None, None, None, None, None, None, None, str(e)))
-            names = ["image_id", "ok", "fmt", "w", "h", "mean_r", "mean_g",
-                     "mean_b", "phash", "err"]
-            data = {n: [r[i] for r in rows] for i, n in enumerate(names)}
-            # int columns holding None MUST be nullable Int64: pandas'
-            # default inference coerces int+None to float64, whose 53-bit
-            # mantissa silently rounds 64-bit phash values
-            for n in ("w", "h", "phash"):
-                data[n] = pd.array(data[n], dtype="Int64")
-            yield pd.DataFrame(data)
+    def row(iid, data):
+        try:
+            px, fmt = codec.decode_image(bytes(data))
+            m = px.astype(np.float64).mean(axis=(0, 1))
+            return [(iid, True, fmt, px.shape[1], px.shape[0],
+                     round(float(m[0]), 4), round(float(m[1]), 4),
+                     round(float(m[2]), 4), codec.phash64(px), None)]
+        except codec.CodecError as e:
+            return [(iid, False, None, None, None, None, None, None, None, str(e))]
 
-    return payloads.select(id_col, bytes_col).mapInPandas(batches, schema=DECODE_SCHEMA)
+    return map_rows(payloads.select(id_col, bytes_col), row, DECODE_SCHEMA)
 
 
 FIDELITY_SCHEMA = ("image_id string, ok boolean, fmt string, w int, h int, "
@@ -79,28 +68,18 @@ def decode_fidelity(payloads: DataFrame, id_col: str = "image_id",
     only (id, psnr) metadata rows leave the task."""
     ref_fn = ref_pixels or codec.synth_pixels_photo
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for iid, data in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    px, fmt = codec.decode_image(bytes(data))
-                    ref = ref_fn(iid, px.shape[1], px.shape[0])
-                    p = codec.psnr(ref, px)
-                    if p == float("inf"):
-                        p = 99.0           # lossless sentinel, finite for SQL
-                    rows.append((iid, True, fmt, px.shape[1], px.shape[0],
-                                 round(float(p), 4), None))
-                except codec.CodecError as e:
-                    rows.append((iid, False, None, None, None, None, str(e)))
-            names = ["image_id", "ok", "fmt", "w", "h", "psnr_db", "err"]
-            data = {n: [r[i] for r in rows] for i, n in enumerate(names)}
-            for n in ("w", "h"):
-                data[n] = pd.array(data[n], dtype="Int64")
-            yield pd.DataFrame(data)
+    def row(iid, data):
+        try:
+            px, fmt = codec.decode_image(bytes(data))
+            ref = ref_fn(iid, px.shape[1], px.shape[0])
+            p = codec.psnr(ref, px)
+        except codec.CodecError as e:
+            return [(iid, False, None, None, None, None, str(e))]
+        if p == float("inf"):
+            p = 99.0           # lossless sentinel, finite for SQL
+        return [(iid, True, fmt, px.shape[1], px.shape[0], round(float(p), 4), None)]
 
-    return payloads.select(id_col, bytes_col).mapInPandas(
-        batches, schema=FIDELITY_SCHEMA)
+    return map_rows(payloads.select(id_col, bytes_col), row, FIDELITY_SCHEMA)
 
 
 def phash_near_dup_pairs(payloads: DataFrame, max_hamming: int = 3,
@@ -130,24 +109,19 @@ RESIZE_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string"
 
 def resize(payloads: DataFrame, out_w: int, out_h: int,
            id_col: str = "image_id", bytes_col: str = "bytes") -> DataFrame:
-    """Nearest-neighbor resize, re-encoded lossless. (A PIL/real codec slots
-    into the same mapInPandas body.)"""
+    """Nearest-neighbor resize, re-encoded lossless; undecodable payloads
+    emit no row. (A PIL/real codec slots into the same row body.)"""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for iid, data in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    px, _ = codec.decode_image(bytes(data))
-                    ys = (np.arange(out_h) * px.shape[0] // out_h).astype(int)
-                    xs = (np.arange(out_w) * px.shape[1] // out_w).astype(int)
-                    out = px[ys][:, xs]
-                    rows.append((iid, codec.encode_image(out, "png"), out_w, out_h, "png"))
-                except codec.CodecError:
-                    continue
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
+    def row(iid, data):
+        try:
+            px, _ = codec.decode_image(bytes(data))
+            ys = (np.arange(out_h) * px.shape[0] // out_h).astype(int)
+            xs = (np.arange(out_w) * px.shape[1] // out_w).astype(int)
+            return [(iid, codec.encode_image(px[ys][:, xs], "png"), out_w, out_h, "png")]
+        except codec.CodecError:
+            return []
 
-    return payloads.select(id_col, bytes_col).mapInPandas(batches, schema=RESIZE_SCHEMA)
+    return map_rows(payloads.select(id_col, bytes_col), row, RESIZE_SCHEMA)
 
 
 AUDIO_SCHEMA = (
@@ -171,38 +145,22 @@ def audio_stats(payloads: DataFrame, id_col: str = "audio_id",
     centroid (numpy rfft — real DSP, not a stub), and the 64-bit
     energy-delta fingerprint afp64 that feeds banded-Hamming near-dup."""
 
-    names = ["audio_id", "ok", "fmt", "sr", "n_samples", "duration_ms",
-             "rms", "zcr", "centroid_hz", "afp", "err"]
+    def row(aid, data):
+        try:
+            x, sr, fmt = codec.decode_audio(bytes(data))
+        except codec.CodecError as e:
+            return [(aid, False, None, None, None, None, None, None, None, None, str(e))]
+        xf = x.astype(np.float64)
+        rms = float(np.sqrt(np.mean(xf * xf)))
+        zcr = float(np.mean(np.signbit(xf[1:]) != np.signbit(xf[:-1])))
+        spec = np.abs(np.fft.rfft(xf))
+        freqs = np.fft.rfftfreq(len(xf), 1.0 / sr)
+        denom = float(spec.sum())
+        centroid = float((freqs * spec).sum() / denom) if denom > 0 else 0.0
+        return [(aid, True, fmt, sr, len(x), len(x) * 1000 // sr, round(rms, 4),
+                 round(zcr, 6), round(centroid, 4), codec.afp64(x), None)]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for aid, data in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    x, sr, fmt = codec.decode_audio(bytes(data))
-                except codec.CodecError as e:
-                    rows.append((aid, False, None, None, None, None, None,
-                                 None, None, None, str(e)))
-                    continue
-                xf = x.astype(np.float64)
-                rms = float(np.sqrt(np.mean(xf * xf)))
-                zcr = float(np.mean(np.signbit(xf[1:]) != np.signbit(xf[:-1])))
-                spec = np.abs(np.fft.rfft(xf))
-                freqs = np.fft.rfftfreq(len(xf), 1.0 / sr)
-                denom = float(spec.sum())
-                centroid = float((freqs * spec).sum() / denom) if denom > 0 else 0.0
-                rows.append((aid, True, fmt, sr, len(x),
-                             len(x) * 1000 // sr, round(rms, 4),
-                             round(zcr, 6), round(centroid, 4),
-                             codec.afp64(x), None))
-            data_cols = {n: [r[j] for r in rows] for j, n in enumerate(names)}
-            # nullable Int64 for int+None columns (float64 coercion would
-            # silently round the 64-bit fingerprint — see decode_stats)
-            for n in ("sr", "n_samples", "duration_ms", "afp"):
-                data_cols[n] = pd.array(data_cols[n], dtype="Int64")
-            yield pd.DataFrame(data_cols)
-
-    return payloads.select(id_col, bytes_col).mapInPandas(batches, schema=AUDIO_SCHEMA)
+    return map_rows(payloads.select(id_col, bytes_col), row, AUDIO_SCHEMA)
 
 
 def audio_near_dup_pairs(payloads: DataFrame, max_hamming: int = 3,
@@ -245,36 +203,21 @@ def frame_sample(payloads: DataFrame, every_n: int = 1, max_frames: int | None =
     """
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
-    names = ["video_id", "ok", "fmt", "frame_idx", "t_ms", "n_frames",
-             "w", "h", "gray_mean", "phash", "err"]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for vid, data in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    frames, fmt, fps = codec.decode_video(bytes(data))
-                except codec.CodecError as e:
-                    rows.append((vid, False, None, None, None, None, None,
-                                 None, None, None, str(e)))
-                    continue
-                idxs = range(0, len(frames), every_n)
-                if max_frames is not None:
-                    idxs = list(idxs)[:max_frames]
-                for i in idxs:
-                    px = frames[i]
-                    gm = float(px.astype(np.float64).mean())
-                    rows.append((vid, True, fmt, i, i * 1000 // fps, len(frames),
-                                 px.shape[1], px.shape[0], round(gm, 4),
-                                 codec.phash64(px), None))
-            data_cols = {n: [r[j] for r in rows] for j, n in enumerate(names)}
-            # nullable Int64 for int+None columns (float64 coercion would
-            # silently round 64-bit phash values — see decode_stats)
-            for n in ("frame_idx", "t_ms", "n_frames", "w", "h", "phash"):
-                data_cols[n] = pd.array(data_cols[n], dtype="Int64")
-            yield pd.DataFrame(data_cols)
+    def row(vid, data):
+        try:
+            frames, fmt, fps = codec.decode_video(bytes(data))
+        except codec.CodecError as e:
+            return [(vid, False, None, None, None, None, None, None, None, None, str(e))]
+        idxs = range(0, len(frames), every_n)
+        if max_frames is not None:
+            idxs = idxs[:max_frames]
+        return [(vid, True, fmt, i, i * 1000 // fps, len(frames),
+                 frames[i].shape[1], frames[i].shape[0],
+                 round(float(frames[i].astype(np.float64).mean()), 4),
+                 codec.phash64(frames[i]), None) for i in idxs]
 
-    return payloads.select(id_col, bytes_col).mapInPandas(batches, schema=FRAME_SCHEMA)
+    return map_rows(payloads.select(id_col, bytes_col), row, FRAME_SCHEMA)
 
 
 def header_meta(payloads: DataFrame, id_col: str = "image_id",
@@ -373,29 +316,17 @@ def letterbox_stats(payloads: DataFrame, min_margin: int = 2,
     Scale shape: same decode-once discipline as decode_stats — Arrow
     batches in, metadata-width rows out, pixels never leave the task."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for iid, data in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    px, _ = codec.decode_image(bytes(data))
-                except codec.CodecError:
-                    rows.append((iid, False) + (None,) * 8 + (None,))
-                    continue
-                t, b, lf, r = letterbox_margins_np(px)
-                h, w = px.shape[0], px.shape[1]
-                rows.append((iid, True, w, h, t, b, lf, r,
-                             w - lf - r, h - t - b,
-                             max(t, b, lf, r) >= min_margin))
-            names = ["image_id", "ok", "w", "h", "top", "bottom", "left",
-                     "right", "content_w", "content_h", "letterboxed"]
-            data = {n: [row[i] for row in rows] for i, n in enumerate(names)}
-            for n in names[2:10]:
-                data[n] = pd.array(data[n], dtype="Int32")
-            yield pd.DataFrame(data)
+    def row(iid, data):
+        try:
+            px, _ = codec.decode_image(bytes(data))
+        except codec.CodecError:
+            return [(iid, False) + (None,) * 9]
+        t, b, lf, r = letterbox_margins_np(px)
+        h, w = px.shape[0], px.shape[1]
+        return [(iid, True, w, h, t, b, lf, r, w - lf - r, h - t - b,
+                 max(t, b, lf, r) >= min_margin)]
 
-    return payloads.select(id_col, bytes_col).mapInPandas(
-        batches, schema=LETTERBOX_SCHEMA)
+    return map_rows(payloads.select(id_col, bytes_col), row, LETTERBOX_SCHEMA)
 
 
 TRANSCODE_SCHEMA = ("image_id string, ok boolean, orig_fmt string, "
@@ -411,26 +342,15 @@ def transcode_size_stats(payloads: DataFrame, to_fmt: str = "webp",
     is petabytes). Same decode-once Arrow discipline: both byte strings
     live and die inside the task; only the two integers ship."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for iid, data in zip(pdf[id_col], pdf[bytes_col]):
-                data = bytes(data)
-                try:
-                    px, fmt = codec.decode_image(data)
-                except codec.CodecError:
-                    rows.append((iid, False, None, None, None))
-                    continue
-                rows.append((iid, True, fmt, len(data),
-                             len(codec.encode_image(px, to_fmt))))
-            names = ["image_id", "ok", "orig_fmt", "orig_bytes", "new_bytes"]
-            out = {n: [r[i] for r in rows] for i, n in enumerate(names)}
-            for n in ("orig_bytes", "new_bytes"):
-                out[n] = pd.array(out[n], dtype="Int32")
-            yield pd.DataFrame(out)
+    def row(iid, data):
+        data = bytes(data)
+        try:
+            px, fmt = codec.decode_image(data)
+        except codec.CodecError:
+            return [(iid, False, None, None, None)]
+        return [(iid, True, fmt, len(data), len(codec.encode_image(px, to_fmt)))]
 
-    return payloads.select(id_col, bytes_col).mapInPandas(
-        batches, schema=TRANSCODE_SCHEMA)
+    return map_rows(payloads.select(id_col, bytes_col), row, TRANSCODE_SCHEMA)
 
 
 COLOR_PROFILE_SCHEMA = ("image_id string, ok boolean, dom_color int, "
@@ -465,25 +385,15 @@ def color_profile(payloads: DataFrame, gray_tol: int = 8, gray_min: float = 0.9,
     decode-once Arrow discipline as decode_stats: pixels never leave the
     task, output is metadata-width."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for iid, data in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    px, _ = codec.decode_image(bytes(data))
-                except codec.CodecError:
-                    rows.append((iid, False, None, None, None, None))
-                    continue
-                dom, share, gf = color_profile_np(px, gray_tol)
-                rows.append((iid, True, dom, share, gf, gf >= gray_min))
-            names = ["image_id", "ok", "dom_color", "dom_share",
-                     "gray_frac", "is_gray"]
-            data = {nm: [r[i] for r in rows] for i, nm in enumerate(names)}
-            data["dom_color"] = pd.array(data["dom_color"], dtype="Int32")
-            yield pd.DataFrame(data)
+    def row(iid, data):
+        try:
+            px, _ = codec.decode_image(bytes(data))
+        except codec.CodecError:
+            return [(iid, False, None, None, None, None)]
+        dom, share, gf = color_profile_np(px, gray_tol)
+        return [(iid, True, dom, share, gf, gf >= gray_min)]
 
-    return payloads.select(id_col, bytes_col).mapInPandas(
-        batches, schema=COLOR_PROFILE_SCHEMA)
+    return map_rows(payloads.select(id_col, bytes_col), row, COLOR_PROFILE_SCHEMA)
 
 
 def channel_histogram(payloads: DataFrame, bits: int = 4,

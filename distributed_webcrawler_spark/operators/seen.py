@@ -10,10 +10,8 @@ operators/cuckoo.py) in two deployments give four configurations:
   keys). New hashes come from a driver-side pyarrow read of the snapshot
   the frontier append just wrote, with no Spark job. The prefilter is a
   native expression: the filter's 64-bit words ride a one-row
-  array<bigint> frame, and ``element_at`` plus shifts test the bits — no
-  Python worker. ``with_maybe_seen`` broadcast-joins that frame;
-  ``prefilter`` carries it as a scalar subquery, which inlines one copy
-  of the words per bit test into the stage, so it suits small filters.
+  array<bigint> frame that ``with_maybe_seen`` broadcast-joins, and
+  ``element_at`` plus shifts test the bits — no Python worker.
 - ``ShardedSeenStore``: the 10^10-tier lifecycle, one filter per
   host_bucket shard. Shards are added to and deleted from EXECUTOR-side
   (applyInPandas group tasks) and persisted as versioned blob files; the
@@ -24,7 +22,6 @@ operators/cuckoo.py) in two deployments give four configurations:
 Both implement the same interface:
 
     with_maybe_seen(df, name) -> DataFrame df plus might-contain column ``name``
-    prefilter() -> Column                  the same test as a Column
     add_frame(df)                          fold every row's url_hash in
     add_snapshot(table, snap)              fold one committed snapshot in
     delete(victim_rows, n_rows, allow_stale)
@@ -186,9 +183,6 @@ class DriverSeenSet:
         return (df.crossJoin(F.broadcast(self._words()))
                   .select(*df.columns, self._hit.alias(name)))
 
-    def prefilter(self) -> Column:
-        return self.filter.contains(F.col("url_hash"), self._words().scalar())
-
     def add_frame(self, df: DataFrame) -> None:
         if isinstance(self.filter, BloomFilter):
             # OR-mergeable: per-partition filters built executor-side, and
@@ -300,10 +294,7 @@ class ShardedSeenStore:
 
     # -- the seen-set interface ---------------------------------------------
     def with_maybe_seen(self, df: DataFrame, name: str) -> DataFrame:
-        return df.withColumn(name, self.prefilter())
-
-    def prefilter(self) -> Column:
-        return self.prefilter_udf()(F.col("url_hash"), self.shard_col())
+        return df.withColumn(name, self.prefilter_udf()(F.col("url_hash"), self.shard_col()))
 
     def add_frame(self, df: DataFrame) -> None:
         self.update(df.select("url_hash", self.shard_col().alias("__shard")),

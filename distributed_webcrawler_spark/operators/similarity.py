@@ -249,7 +249,9 @@ def embedding_near_dup_lsh(df: DataFrame, threshold: float = 0.95,
     bucketing, then EXACT cosine only within buckets. Candidates = pairs
     sharing at least one band bucket (OR over bands raises recall the same
     way MinHash banding does); each band join is a shuffle equi-join on
-    (band, bucket) — sub-quadratic, no CartesianProduct in the plan.
+    (band, bucket) — sub-quadratic, no CartesianProduct in the plan. The
+    band join and the candidate dedup move ids only; the vectors join back
+    once per distinct candidate pair (minhash_lsh_pairs' shape).
     Planes are the deterministic md5 hyperplanes (band b uses planes
     b*band_planes .. b*band_planes+band_planes-1), so the DuckDB oracle
     rebuilds identical buckets. Output: (id_a, id_b, sim), id_a < id_b."""
@@ -261,19 +263,19 @@ def embedding_near_dup_lsh(df: DataFrame, threshold: float = 0.95,
             for j in range(band_planes)
         )
         bands.append(df.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-            F.lit(b).alias("band"), sig.cast("int").alias("bucket")))
+            F.col(id_col).alias("id"), F.lit(b).alias("band"), sig.cast("int").alias("bucket")))
     sigs = bands[0]
     for extra in bands[1:]:
         sigs = sigs.unionByName(extra)
-    a = sigs.select(F.col("id").alias("id_a"), F.col("v").alias("va"), "band", "bucket")
-    b2 = sigs.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), "band", "bucket")
     cand = (
-        a.join(b2, ["band", "bucket"])
+        sigs.select(F.col("id").alias("id_a"), "band", "bucket")
+        .join(sigs.select(F.col("id").alias("id_b"), "band", "bucket"), ["band", "bucket"])
         .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "va", "vb")
-        .dropDuplicates(["id_a", "id_b"])  # pair may collide in >1 band
+        .select("id_a", "id_b")
+        .distinct()  # a pair may collide in >1 band
     )
+    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
+    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     return (
         # HOF cosine kept here ON PURPOSE (measured): the candidate set is
         # corpus-sized and each Arrow pair row ships BOTH vectors to the
@@ -282,7 +284,8 @@ def embedding_near_dup_lsh(df: DataFrame, threshold: float = 0.95,
         # Arrow form pays off only when candidates are query-bounded
         # (brute_force_topk, ivf_topk_nprobe) or vectors never leave the
         # task (semdedup's per-cell matmul).
-        cand.withColumn("sim", cosine(F.col("va"), F.col("vb")))
+        cand.join(va, "id_a").join(vb, "id_b")
+        .withColumn("sim", cosine(F.col("va"), F.col("vb")))
         .where(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
     )

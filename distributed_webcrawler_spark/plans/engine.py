@@ -45,34 +45,18 @@ from __future__ import annotations
 
 import os
 import time
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
 from ..functions import urls as U
+from ..functions.batches import map_rows
 from ..functions.robots_fn import gate_by_robots, parse_robots_table
 from ..operators import topk
 from ..operators import seen as seen_sets
 from ..sources import codec
 from ..sources.store import SnapshotStore
-
-
-def _typed_pdf(rows: list[tuple], names: list[str], int_cols: tuple) -> pd.DataFrame:
-    """Build a UDF output batch with int columns as pandas nullable Int64.
-
-    NEVER let pandas infer dtypes for integer columns that can hold None:
-    the plain DataFrame(list-of-tuples) constructor coerces int+None to
-    float64 AT CONSTRUCTION, and float64's 53-bit mantissa silently rounds
-    64-bit values — observed as pages rows whose phash differed from the
-    stored payload's in the low ~10 bits whenever a mixed hit/miss Arrow
-    batch reached the decode UDF (caught by the live-http parity test)."""
-    data = {n: [r[i] for r in rows] for i, n in enumerate(names)}
-    return pd.DataFrame({
-        n: (pd.array(v, dtype="Int64") if n in int_cols else v)
-        for n, v in data.items()})
 
 
 def _metrics_schema():
@@ -665,28 +649,21 @@ class CrawlEngine:
         else:
             to_decode = pay.join(F.broadcast(ids), "image_id", "left_semi")
 
-        def _decode_unique(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                rows = []
-                for iid, by, cap, fmt in zip(pdf.image_id, pdf.pbytes, pdf.caption, pdf.fmt):
-                    blob = bytes(by) if by is not None else None
-                    dw = dh = ph = None
-                    derr = None
-                    if blob is not None:
-                        try:
-                            px, _fmt = codec.decode_image(blob)
-                            dh, dw = px.shape[0], px.shape[1]
-                            ph = codec.phash64(px)
-                        except codec.CodecError as e:
-                            derr = f"decode error: {e}"
-                    rows.append((iid, cap, fmt,
-                                 len(blob) if blob is not None else None,
-                                 dw, dh, ph, derr, blob if store_bytes else None))
-                yield _typed_pdf(rows, [
-                    "image_id", "pcaption", "pfmt", "plen", "dw", "dh", "dphash", "derr",
-                    "pblob"], int_cols=("plen", "dw", "dh", "dphash"))
+        def _decode_unique(iid, by, cap, fmt):
+            blob = bytes(by) if by is not None else None
+            dw = dh = ph = None
+            derr = None
+            if blob is not None:
+                try:
+                    px, _fmt = codec.decode_image(blob)
+                    dh, dw = px.shape[0], px.shape[1]
+                    ph = codec.phash64(px)
+                except codec.CodecError as e:
+                    derr = f"decode error: {e}"
+            return [(iid, cap, fmt, len(blob) if blob is not None else None,
+                     dw, dh, ph, derr, blob if store_bytes else None)]
 
-        stats = to_decode.mapInPandas(_decode_unique, schema=(
+        stats = map_rows(to_decode, _decode_unique, (
             "image_id string, pcaption string, pfmt string, plen long, "
             "dw int, dh int, dphash long, derr string, pblob binary"))
         joined = slim.join(stats, "image_id", "left")

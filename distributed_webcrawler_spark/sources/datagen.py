@@ -11,12 +11,10 @@ not the driver.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.batches import map_rows
 from . import codec
 
 ZIPF_S = 3.0  # host-size skew: host_id = floor(n_hosts * u^s); s=3 -> hot host 0
@@ -93,17 +91,11 @@ def gen_payloads(spark: SparkSession, n_images: int,
         ).alias("caption"),
     )
 
-    def encode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs, hashes = [], []
-            for iid, w, h, fmt in zip(pdf.image_id, pdf.w, pdf.h, pdf.fmt):
-                px = codec.synth_pixels(iid, int(w), int(h))
-                blobs.append(codec.encode_image(px, fmt))
-                hashes.append(codec.phash64(px))
-            pdf = pdf.assign(bytes=blobs, phash=hashes)
-            yield pdf[["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]]
+    def encode(iid, w, h, fmt, caption):
+        px = codec.synth_pixels(iid, int(w), int(h))
+        return [(iid, codec.encode_image(px, fmt), w, h, fmt, caption, codec.phash64(px))]
 
-    return base.mapInPandas(encode, schema=PAYLOAD_SCHEMA)
+    return map_rows(base, encode, PAYLOAD_SCHEMA)
 
 
 def gen_robots(spark: SparkSession, n_hosts: int) -> DataFrame:

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import urls as U
+from ..functions.batches import typed_frame
 
 LINK_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -172,8 +173,9 @@ def politeness_violation_stream(fetches: DataFrame, min_gap_us: int):
     are ordered by (t_us, event_id) before gap computation so results
     are batch-boundary-invariant for a time-ordered source (the test
     asserts row-for-row equality with the batch lag-window audit)."""
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupState
+
+    out_schema = T.StructType.fromDDL(_VIOL_OUT)
 
     def audit(key, pdfs, state: GroupState):
         # -1 is the stored "no fetch yet" sentinel — translate it back to
@@ -191,13 +193,11 @@ def politeness_violation_stream(fetches: DataFrame, min_gap_us: int):
                              gap is not None and gap < min_gap_us))
                 last = t
         state.update((last if last is not None else -1,))
-        out = pd.DataFrame(rows, columns=["host", "t_us", "gap_us", "violation"])
-        out["gap_us"] = pd.array(out["gap_us"], dtype="Int64")
-        yield out
+        yield typed_frame(rows, out_schema)
 
     return (fetches.groupBy("host")
             .applyInPandasWithState(
-                audit, outputStructType=_VIOL_OUT, stateStructType=_VIOL_STATE,
+                audit, outputStructType=out_schema, stateStructType=_VIOL_STATE,
                 outputMode="append", timeoutConf="NoTimeout"))
 
 

@@ -1,12 +1,12 @@
 """Bloom filter: zero false negatives (correctness-critical, SURVEY §7b),
-fpp within bound, distributed treeReduce build, serde round-trip."""
+fpp within bound, distributed per-partition build, serde round-trip."""
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import functions as F
 
-from distributed_webcrawler_spark.operators.bloom import BloomFilter, build_bloom
+from distributed_webcrawler_spark.operators.bloom import BloomFilter
 from distributed_webcrawler_spark.operators.seen import DriverSeenSet, ShardedSeenStore
 
 
@@ -37,16 +37,21 @@ def test_serde_roundtrip():
 
 
 def test_distributed_build_and_prefilter(spark):
+    """The engine's build path: add_frame ORs per-partition filters into the
+    driver filter. Its bits equal a driver-side add of the same hashes, and
+    a second frame folds in on top of the first: every hash of both is
+    found by the native probe."""
     df = spark.range(0, 20_000, 1, 8).select(F.xxhash64("id").alias("url_hash"))
-    bf = build_bloom(df, "url_hash", expected_insertions=20_000, fpp=0.01)
-    # every inserted hash is found via the native driver-set probe
-    tagged = DriverSeenSet(bf, 0).with_maybe_seen(df, "maybe")
+    seen = DriverSeenSet(BloomFilter.for_capacity(40_000, 0.01), 0)
+    seen.add_frame(df)
+    local = BloomFilter.for_capacity(40_000, 0.01)
+    local.add_many(df.toPandas()["url_hash"].to_numpy())
+    assert np.array_equal(seen.filter.bits, local.bits)
+    tagged = seen.with_maybe_seen(df, "maybe")
     assert tagged.where(~F.col("maybe")).count() == 0
-    # union merge across two disjoint builds == build over the union
-    df2 = spark.range(20_000, 40_000, 1, 8).select(F.xxhash64("id").alias("url_hash"))
-    bf2 = build_bloom(df2, "url_hash", expected_insertions=20_000, fpp=0.01)
-    merged = bf.union(bf2)
-    both = DriverSeenSet(merged, 0).with_maybe_seen(df.unionByName(df2), "maybe")
+    df2 = spark.range(20_000, 40_000, 1, 40).select(F.xxhash64("id").alias("url_hash"))
+    seen.add_frame(df2)   # 40 partitions: coalesced to the 32-blob cap
+    both = seen.with_maybe_seen(df.unionByName(df2), "maybe")
     assert both.where(~F.col("maybe")).count() == 0
 
 

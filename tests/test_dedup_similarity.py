@@ -136,6 +136,42 @@ def test_embedding_near_dup_lsh_subset_of_exact(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
+def _shuffle_exchanges(df):
+    """(partitioning, output column types) of every shuffle exchange in
+    df's physical plan (built with AQE off, so exchanges are plain nodes)."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Exchange":
+            attrs = node.output()
+            out.append((node.outputPartitioning().toString(),
+                        [attrs.apply(i).dataType().typeName() for i in range(attrs.size())]))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_embedding_near_dup_lsh_bands_move_ids_only(spark):
+    """The band self-join and the candidate dedup shuffle ids only: no
+    array column reaches an exchange keyed by band, and the vectors join
+    back once per distinct candidate pair."""
+    conf = {"spark.sql.autoBroadcastJoinThreshold": "-1", "spark.sql.adaptive.enabled": "false"}
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        lsh_df = S.embedding_near_dup_lsh(_vectors(spark), threshold=0.95, n_bands=4,
+                                          band_planes=4, dim=16)
+        exchanges = _shuffle_exchanges(lsh_df)
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    band = [types for part, types in exchanges if "band" in part]
+    assert band, exchanges
+    assert all("array" not in types for types in band)
+    assert any("array" in types for _, types in exchanges)   # the join-back
+
+
 def test_semdedup_pairs_cluster_scoped_drop_rule(spark):
     """SemDeDup: candidate pairs come only from within a k-means cell, the
     planted near-identical pair is found, and the drop choice is the member

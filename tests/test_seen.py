@@ -129,7 +129,7 @@ def test_restore_from_legacy_checkpoint(spark, fixture_dir, tmp_path, legacy_key
     assert view is not None
     fr = store.table("frontier").read(spark)
     assert fr.count() == 40
-    assert fr.where(~eng.seen.prefilter()).count() == 0
+    assert eng.seen.with_maybe_seen(fr, "m").where(~F.col("m")).count() == 0
 
 
 @pytest.mark.parametrize("seen_set", sorted(SEEN_SETS))
@@ -153,15 +153,13 @@ def test_fresh_engine_on_existing_warehouse_keeps_checkpointed_files(spark, fixt
     assert _named(SnapshotStore(wh).read_checkpoints()[-1]).isdisjoint(named)
 
 
-@pytest.mark.parametrize("form", ["frame", "column"])
 @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
-def test_native_probe_matches_numpy(spark, kind, form):
+def test_native_probe_matches_numpy(spark, kind):
     """The driver set's native probe (xxhash64, element_at and shifts in
-    the JVM) answers exactly as the numpy might_contain_many on 10^5
-    random hashes, extremes included, with no false negative; and the
-    numpy xxhash64 twin equals Spark's xxhash64 on every one of them.
-    Both forms: the broadcast-joined words frame the engine uses
-    (with_maybe_seen) and the scalar-subquery Column (prefilter)."""
+    the JVM, over the broadcast-joined words frame of with_maybe_seen)
+    answers exactly as the numpy might_contain_many on 10^5 random
+    hashes, extremes included, with no false negative; and the numpy
+    xxhash64 twin equals Spark's xxhash64 on every one of them."""
     import pandas as pd
 
     rng = np.random.default_rng(17)
@@ -175,9 +173,7 @@ def test_native_probe_matches_numpy(spark, kind, form):
     want = filt.might_contain_many(probe)
     assert want[: len(inserted)].all()
     df = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(probe)), "url_hash": probe}))
-    seen = DriverSeenSet(filt, 0)
-    tagged = (seen.with_maybe_seen(df, "m") if form == "frame"
-              else df.withColumn("m", seen.prefilter()))
+    tagged = DriverSeenSet(filt, 0).with_maybe_seen(df, "m")
     got = (tagged.select("i", "m", F.xxhash64("url_hash").alias("g"))
            .toPandas().sort_values("i"))
     assert np.array_equal(got["m"].to_numpy(), want)
