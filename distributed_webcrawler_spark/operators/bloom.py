@@ -5,9 +5,7 @@ The reference *declares* a 10^7-insertion / fpp-0.01 bloom filter
 exact Redis SET (URLFrontier.java:74) — SURVEY.md §1.1. This module
 implements the declared design the Spark way:
 
-- per-partition bitarray build (numpy, over Arrow batches / iterators),
-- OR-merge of the per-partition bits on the driver, from at most 32
-  partitions (``merge_partition_filters``),
+- a numpy bitarray build over the url_hash column (``add_many``),
 - double hashing h_i = h1 + i*h2 (Kirsch-Mitzenmacher) with h1, h2 taken
   from Spark's own xxhash64 of the already computed url_hash (and of that
   hash again), so membership tests are pure int math that a native Column
@@ -34,8 +32,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..functions.hashes import xxhash64_long, xxhash64_long_inplace
@@ -179,9 +176,12 @@ class BloomFilter:
         return present.all(axis=1)
 
     # -- (de)serialization for checkpoint manifests ---------------------
+    def header(self) -> bytes:
+        """Format tag and shape: a blob's first bytes."""
+        return self.MAGIC + self.n_bits.to_bytes(8, "little") + self.n_hashes.to_bytes(4, "little")
+
     def to_bytes(self) -> bytes:
-        head = self.MAGIC + self.n_bits.to_bytes(8, "little") + self.n_hashes.to_bytes(4, "little")
-        return head + self.bits.tobytes()
+        return self.header() + self.bits.tobytes()
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "BloomFilter":
@@ -192,36 +192,3 @@ class BloomFilter:
         n_hashes = int.from_bytes(data[8:12], "little")
         return cls(n_bits, n_hashes, np.frombuffer(data[12:], dtype=np.uint8).copy())
 
-
-def _partition_filter_fn(n_bits: int, n_hashes: int):
-    def per_partition(it):
-        bf = BloomFilter(n_bits, n_hashes)
-        got = False
-        for pdf in it:
-            vals = pdf.iloc[:, 0].dropna().to_numpy(dtype=np.int64)
-            if len(vals):
-                bf.add_many(vals)
-                got = True
-        if got:
-            yield pd.DataFrame({"blob": [bf.to_bytes()]})
-
-    return per_partition
-
-
-def merge_partition_filters(df: DataFrame, hash_col: str, n_bits: int, n_hashes: int,
-                            max_parts: int = 32) -> BloomFilter | None:
-    """Per-partition filters over Arrow batches (mapInPandas — not ``.rdd``,
-    which row-pickles every value JVM->Python), collected and OR-merged on
-    the driver in one job; None when ``df`` holds no hash. Partition count
-    is capped, so the collect is bounded at max_parts × (n_bits/8) bytes
-    whatever the input layout, and the numpy OR takes microseconds."""
-    slim = df.select(hash_col)
-    if slim.rdd.getNumPartitions() > max_parts:
-        slim = slim.coalesce(max_parts)
-    rows = slim.mapInPandas(_partition_filter_fn(n_bits, n_hashes), "blob binary").collect()
-    if not rows:
-        return None
-    out = BloomFilter(n_bits, n_hashes)
-    for r in rows:
-        np.bitwise_or(out.bits, BloomFilter.from_bytes(bytes(r.blob)).bits, out=out.bits)
-    return out

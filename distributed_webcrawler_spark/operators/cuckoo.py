@@ -170,10 +170,13 @@ class CuckooFilter:
         return in1 | in2
 
     # -- serde -------------------------------------------------------------
-    def to_bytes(self) -> bytes:
-        head = (self.MAGIC + self.n_buckets.to_bytes(8, "little")
+    def header(self) -> bytes:
+        """Format tag and shape: a blob's first bytes."""
+        return (self.MAGIC + self.n_buckets.to_bytes(8, "little")
                 + self.bucket_size.to_bytes(4, "little"))
-        return head + self.table.tobytes()
+
+    def to_bytes(self) -> bytes:
+        return self.header() + self.table.tobytes()
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "CuckooFilter":

@@ -8,16 +8,22 @@ operators/cuckoo.py) in two deployments give four configurations:
 
 - ``DriverSeenSet``: one filter held by the driver (right below ~10^8
   keys). New hashes come from a driver-side pyarrow read of the snapshot
-  the frontier append just wrote, with no Spark job. The prefilter is a
-  native expression: the filter's 64-bit words ride a one-row
-  array<bigint> frame that ``with_maybe_seen`` broadcast-joins, and
-  ``element_at`` plus shifts test the bits — no Python worker.
+  the frontier append just wrote, with no Spark job.
 - ``ShardedSeenStore``: the 10^10-tier lifecycle, one filter per
   host_bucket shard. Shards are added to and deleted from EXECUTOR-side
   (applyInPandas group tasks) and persisted as versioned blob files; the
-  driver holds only the {shard: version} manifest. Its prefilter stays a
-  pandas UDF: a native one would need the shard words readable by
-  executors.
+  driver holds only the {shard: version} manifest.
+
+Both prefilter with one native probe (``_probe``): a frame of the
+filter's 64-bit words (``__seen_words array<bigint>``) is joined to the
+candidate rows and the filter class's ``contains`` tests the bits with
+``element_at`` and shifts — no Python worker sees a candidate row. The
+driver set cross-joins a one-row broadcast frame; the sharded store reads
+each blob of its manifest executor-side into one row per shard and
+left-joins it on the shard, broadcast when the words fit under
+``spark.sql.autoBroadcastJoinThreshold`` and shuffled otherwise. The numpy
+``might_contain_many`` is the reference that tests and benchmarks probe
+against.
 
 Both implement the same interface:
 
@@ -28,14 +34,17 @@ Both implement the same interface:
     checkpoint(warehouse, rnd) -> dict     durable state for a checkpoint
     prune(warehouse, checkpoints)          drop files none of them names
 
-``create`` is the only code that reads ``cfg.seen_filter``,
-``bloom_shards``, ``bloom_fpp`` and ``bloom_expected_insertions``;
-``from_checkpoint`` restores a seen set. The checkpoint keys are the ones
+``create`` and ``from_checkpoint`` (which restores a seen set) are the
+only code that reads ``cfg.seen_filter``, ``bloom_shards``, ``bloom_fpp``
+and ``bloom_expected_insertions``. The checkpoint keys are the ones
 older warehouses carry: ``bloom``/``cuckoo`` name a driver filter's file,
 ``bloom_shard_versions``/``cuckoo_shard_versions`` hold a shard manifest.
-A blob without the current format tag (written with the former splitmix
-positions) restores as None, so ``CrawlEngine.resume`` rebuilds the seen
-set over the frontier instead of probing it with the wrong positions.
+It restores only the set ``create`` would build: a checkpoint of another
+kind or shard count, or a blob whose format tag and shape header differ
+(one written with the former splitmix positions, or under another
+``bloom_expected_insertions`` or ``bloom_fpp``), restores as None, so
+``CrawlEngine.resume`` rebuilds the seen set over the frontier instead of
+probing it with the wrong positions.
 """
 
 from __future__ import annotations
@@ -50,7 +59,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .bloom import BloomFilter, merge_partition_filters
+from ..functions.batches import map_rows
+from .bloom import BloomFilter
 from .cuckoo import CuckooFilter
 
 _FILTERS = {"bloom": BloomFilter, "cuckoo": CuckooFilter}
@@ -75,36 +85,36 @@ def create(cfg, warehouse: str):
         # them: no blob an older checkpoint names is rewritten
         store.version_floor = store.highest_version_on_disk()
         return store
-    return DriverSeenSet(
-        _empty_filter(cfg.seen_filter, _capacity(cfg.seen_filter, cfg.bloom_expected_insertions),
-                      cfg.bloom_fpp),
-        cfg.evict_driver_max_rows)
+    return DriverSeenSet(_driver_filter(cfg), cfg.evict_driver_max_rows)
 
 
 def from_checkpoint(ckpt: dict, cfg, warehouse: str):
     """The seen set a checkpoint recorded, or None when it recorded none or
-    any of its blobs lacks the current format tag."""
-    for kind in ("cuckoo", "bloom"):
+    not the one ``create(cfg)`` builds: another kind or shard count, or a
+    blob whose format tag and shape header differ from that set's."""
+    validate(cfg)
+    kind = cfg.seen_filter
+    if cfg.bloom_shards > 1:
         versions = ckpt.get(f"{kind}_shard_versions")
-        if versions is not None:
-            store = _sharded(cfg, warehouse, kind)
-            store.versions = {int(k): v for k, v in versions.items()}
-            return store if all(_tagged(kind, _blob_path(store.directory, kind, s, v))
-                                for s, v in store.versions.items()) else None
-        if ckpt.get(kind):
-            path = os.path.join(warehouse, ckpt[kind])
-            if not _tagged(kind, path):
-                return None
-            with open(path, "rb") as f:
-                return DriverSeenSet(_FILTERS[kind].from_bytes(f.read()),
-                                     cfg.evict_driver_max_rows)
-    return None
-
-
-def _tagged(kind: str, path: str) -> bool:
-    magic = _FILTERS[kind].MAGIC
+        if versions is None or ckpt.get(f"{kind}_n_shards", cfg.bloom_shards) != cfg.bloom_shards:
+            return None
+        store = _sharded(cfg, warehouse, kind)
+        store.versions = {int(k): v for k, v in versions.items()}
+        head = store.empty_filter().header()
+        return store if all(_tagged(_blob_path(store.directory, kind, s, v), head)
+                            for s, v in store.versions.items()) else None
+    if not ckpt.get(kind):
+        return None
+    path = os.path.join(warehouse, ckpt[kind])
+    if not _tagged(path, _driver_filter(cfg).header()):
+        return None
     with open(path, "rb") as f:
-        return f.read(len(magic)) == magic
+        return DriverSeenSet(_FILTERS[kind].from_bytes(f.read()), cfg.evict_driver_max_rows)
+
+
+def _tagged(path: str, head: bytes) -> bool:
+    with open(path, "rb") as f:
+        return f.read(len(head)) == head
 
 
 def _sharded(cfg, warehouse: str, kind: str) -> "ShardedSeenStore":
@@ -115,6 +125,11 @@ def _sharded(cfg, warehouse: str, kind: str) -> "ShardedSeenStore":
 
 def _capacity(kind: str, expected_insertions: int) -> int:
     return max(expected_insertions, _MIN_CAPACITY[kind])
+
+
+def _driver_filter(cfg):
+    return _empty_filter(cfg.seen_filter, _capacity(cfg.seen_filter, cfg.bloom_expected_insertions),
+                         cfg.bloom_fpp)
 
 
 def _empty_filter(kind: str, capacity: int, fpp: float):
@@ -152,6 +167,21 @@ def _write_atomic(path: str, data: bytes) -> None:
     os.replace(tmp, path)
 
 
+def _native_hit(filt) -> Column:
+    """``filt``'s might-contain of url_hash against ``__seen_words``; a row
+    with no words (a shard with no filter yet) reads "definitely new"."""
+    return F.coalesce(filt.contains(F.col("url_hash"), F.col("__seen_words")), F.lit(False))
+
+
+def _probe(df: DataFrame, words: DataFrame, hit: Column, name: str,
+           on: Column | None = None) -> DataFrame:
+    """The one prefilter of every seen set: ``df`` plus the column ``name``,
+    the native ``hit`` over ``words`` cross-joined (``on`` None) or
+    left-joined on ``on`` to every row."""
+    joined = df.crossJoin(words) if on is None else df.join(words, on, "left")
+    return joined.select(*df.columns, hit.alias(name))
+
+
 def _hash_array(df: DataFrame) -> np.ndarray:
     """The 8-byte url_hash column on the driver (Arrow), never whole rows."""
     return df.select("url_hash").toPandas()["url_hash"].dropna().to_numpy(dtype=np.int64)
@@ -177,22 +207,13 @@ class DriverSeenSet:
     def _hit(self) -> Column:
         # built once: the filter's shape never changes, and each Column
         # call is a py4j round-trip on the expand branch's critical path
-        return self.filter.contains(F.col("url_hash"), F.col("__seen_words"))
+        return _native_hit(self.filter)
 
     def with_maybe_seen(self, df: DataFrame, name: str) -> DataFrame:
-        return (df.crossJoin(F.broadcast(self._words()))
-                  .select(*df.columns, self._hit.alias(name)))
+        return _probe(df, F.broadcast(self._words()), self._hit, name)
 
     def add_frame(self, df: DataFrame) -> None:
-        if isinstance(self.filter, BloomFilter):
-            # OR-mergeable: per-partition filters built executor-side, and
-            # only the merged bits reach the driver
-            delta = merge_partition_filters(df, "url_hash", self.filter.n_bits,
-                                            self.filter.n_hashes)
-            if delta is not None:
-                np.bitwise_or(self.filter.bits, delta.bits, out=self.filter.bits)
-        else:
-            add_all(self.filter, _hash_array(df))
+        add_all(self.filter, _hash_array(df))
 
     def add_snapshot(self, table, snap: int) -> None:
         # driver-side pyarrow read of the parquet the append just wrote
@@ -292,9 +313,43 @@ class ShardedSeenStore:
         rewrites only files no checkpoint names."""
         return max(self.versions.values(), default=self.version_floor) + 1
 
+    def empty_filter(self):
+        """A filter of the one shape every shard of this store has."""
+        return _empty_filter(self.kind, self.capacity, self.fpp)
+
+    @functools.cached_property
+    def _hit(self) -> Column:
+        # every shard has the store's one shape: one expression, built once
+        return _native_hit(self.empty_filter())
+
+    @functools.cached_property
+    def _filter_bytes(self) -> int:
+        return self.empty_filter().words().nbytes
+
+    def _words(self) -> DataFrame:
+        """One ``(__shard, __seen_words)`` row per shard in the manifest,
+        each read from its blob executor-side: the driver never holds a
+        filter."""
+        kind, directory = self.kind, self.directory
+        spark = SparkSession.active()
+        manifest = spark.createDataFrame(sorted(self.versions.items()),
+                                         "__shard int, __version int")
+        return map_rows(manifest,
+                        lambda s, v: [(s, _read_blob(directory, kind, s, v).words())],
+                        "__shard int, __seen_words array<bigint>")
+
     # -- the seen-set interface ---------------------------------------------
     def with_maybe_seen(self, df: DataFrame, name: str) -> DataFrame:
-        return df.withColumn(name, self.prefilter_udf()(F.col("url_hash"), self.shard_col()))
+        if not self.versions:
+            return df.select(*df.columns, F.lit(False).alias(name))
+        # the planner cannot size the words' Python scan, and would shuffle
+        # every candidate to a sort-merge join; the driver knows the size
+        spark = SparkSession.active()
+        limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        words = self._words()
+        words = (F.broadcast(words) if len(self.versions) * self._filter_bytes <= limit
+                 else words.hint("shuffle_hash"))
+        return _probe(df, words, self._hit, name, self.shard_col() == F.col("__shard"))
 
     def add_frame(self, df: DataFrame) -> None:
         self.update(df.select("url_hash", self.shard_col().alias("__shard")),
@@ -315,7 +370,9 @@ class ShardedSeenStore:
 
     def checkpoint(self, warehouse: str, rnd: int) -> dict:
         # the blobs are already durable; the checkpoint holds the manifest
-        return {f"{self.kind}_shard_versions": {str(k): v for k, v in self.versions.items()}}
+        # and the shard count its keys were routed by
+        return {f"{self.kind}_shard_versions": {str(k): v for k, v in self.versions.items()},
+                f"{self.kind}_n_shards": self.n_shards}
 
     def prune(self, warehouse: str, checkpoints: list[dict]) -> None:
         self.prune_versions(*(c.get(f"{self.kind}_shard_versions") or {}
@@ -357,41 +414,6 @@ class ShardedSeenStore:
         for s in written:
             self.versions[s] = version
         return written
-
-    def prefilter_udf(self):
-        """(hash, shard) -> bool pandas UDF. Each worker lazily opens ONLY
-        the shard files its rows reference, cached per (shard, version) in
-        a small LRU so long-lived workers stay bounded."""
-        from pyspark.sql.functions import pandas_udf
-
-        kind, directory, versions = self.kind, self.directory, dict(self.versions)
-        cache: dict = {}
-
-        def _get(shard: int):
-            v = versions.get(shard)
-            if v is None:
-                return None
-            filt = cache.get((shard, v))
-            if filt is None:
-                if len(cache) >= 8:  # bound worker RSS to a few shards
-                    cache.pop(next(iter(cache)))
-                filt = cache[(shard, v)] = _read_blob(directory, kind, shard, v)
-            return filt
-
-        @pandas_udf("boolean")
-        def _might_contain(hashes: pd.Series, shards: pd.Series) -> pd.Series:
-            out = np.zeros(len(hashes), dtype=bool)
-            hv = hashes.fillna(0).to_numpy(dtype=np.int64)
-            sv = shards.fillna(-1).to_numpy(dtype=np.int64)
-            for shard in np.unique(sv):
-                filt = _get(int(shard))
-                if filt is None:
-                    continue  # no filter yet -> definitely new
-                m = sv == shard
-                out[m] = filt.might_contain_many(hv[m])
-            return pd.Series(out)
-
-        return _might_contain
 
     def occupancy(self) -> int:
         """Stored cuckoo fingerprints across the current shard versions

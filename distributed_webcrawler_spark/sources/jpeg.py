@@ -590,6 +590,10 @@ def _decode_scan(frame, scan, qtabs, htabs, restart_interval,
                         s = br.decode_symbol(dc_t)
                         diff = _extend(br.read_bits(s), s) if s else 0
                         preds[ci] += diff
+                        # a valid DC has at most 11 bits of magnitude; a
+                        # corrupt stream can walk it past the int32 store
+                        if not -32768 <= preds[ci] <= 32767:
+                            raise JpegError("DC predictor out of range")
                         blk[0] = preds[ci]
                         k = 1
                         while k < 64:

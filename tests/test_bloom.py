@@ -1,5 +1,6 @@
 """Bloom filter: zero false negatives (correctness-critical, SURVEY §7b),
-fpp within bound, distributed per-partition build, serde round-trip."""
+fpp within bound, the engine's build path, serde round-trip, and the
+sharded store's lifecycle through the native probe."""
 
 from __future__ import annotations
 
@@ -37,10 +38,10 @@ def test_serde_roundtrip():
 
 
 def test_distributed_build_and_prefilter(spark):
-    """The engine's build path: add_frame ORs per-partition filters into the
-    driver filter. Its bits equal a driver-side add of the same hashes, and
-    a second frame folds in on top of the first: every hash of both is
-    found by the native probe."""
+    """The engine's build path: add_frame collects the frame's 8-byte
+    hashes and adds them to the driver filter. Its bits equal a driver-side
+    add of the same hashes, and a second frame folds in on top of the
+    first: every hash of both is found by the native probe."""
     df = spark.range(0, 20_000, 1, 8).select(F.xxhash64("id").alias("url_hash"))
     seen = DriverSeenSet(BloomFilter.for_capacity(40_000, 0.01), 0)
     seen.add_frame(df)
@@ -50,7 +51,7 @@ def test_distributed_build_and_prefilter(spark):
     tagged = seen.with_maybe_seen(df, "maybe")
     assert tagged.where(~F.col("maybe")).count() == 0
     df2 = spark.range(20_000, 40_000, 1, 40).select(F.xxhash64("id").alias("url_hash"))
-    seen.add_frame(df2)   # 40 partitions: coalesced to the 32-blob cap
+    seen.add_frame(df2)
     both = seen.with_maybe_seen(df.unionByName(df2), "maybe")
     assert both.where(~F.col("maybe")).count() == 0
 
@@ -58,50 +59,44 @@ def test_distributed_build_and_prefilter(spark):
 def test_sharded_bloom_build_update_prefilter(spark, tmp_path):
     """10^10-tier lifecycle: per-host_bucket shards built/updated
     EXECUTOR-side (applyInPandas group tasks write versioned blob files);
-    the driver holds only the {shard: version} manifest. Zero false
-    negatives across shards; version bump isolates updates; pruning
-    removes stale files."""
+    the driver holds only the {shard: version} manifest, also after the
+    native probe (with_maybe_seen) read the shards. Zero false negatives
+    across shards; a shard with no filter yet reads definitely-new; a
+    version bump isolates updates; pruning removes stale files."""
     import os
 
-    import numpy as np
-    from pyspark.sql import functions as F
-
     d = str(tmp_path / "shards")
-    n_shards = 4
-    df = spark.range(5000).select(
-        F.xxhash64(F.col("id").cast("string")).alias("h"),
-        F.pmod(F.col("id"), F.lit(n_shards)).cast("int").alias("shard"))
-    sb = ShardedSeenStore.for_capacity("bloom", d, n_shards, 100_000, 0.01)
-    written = sb.update(df, "h", "shard", version=1)
-    assert sorted(written) == list(range(n_shards))
-    assert sb.versions == {s: 1 for s in range(n_shards)}
-    # driver holds no filter objects — only the manifest dict
-    assert not any(isinstance(v, (bytes, bytearray)) for v in vars(sb).values())
+    sb = ShardedSeenStore.for_capacity("bloom", d, 4, 100_000, 0.01)
 
-    # zero false negatives: every inserted (hash, shard) must hit
-    flagged = df.repartition(n_shards, "shard").select(
-        sb.prefilter_udf()(F.col("h"), F.col("shard")).alias("m"))
-    assert flagged.where(~F.col("m")).count() == 0
+    def frame(lo, hi):
+        return spark.range(lo, hi).select(
+            F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
+            F.col("id").cast("int").alias("host_bucket"))
+
+    def update(df, version):
+        return sb.update(df.select("url_hash", sb.shard_col().alias("shard")),
+                         "url_hash", "shard", version)
+
+    df = frame(0, 5000)
+    assert sb.with_maybe_seen(df, "m").where(F.col("m")).count() == 0  # no shard at all
+    old = df.where(sb.shard_col() < 3)
+    assert sorted(update(old, version=1)) == [0, 1, 2]
+    assert sb.versions == {0: 1, 1: 1, 2: 1}
+
+    # zero false negatives: every inserted hash hits; shard 3 has no filter
+    flagged = sb.with_maybe_seen(df, "m")
+    assert flagged.where(~F.col("m") & (sb.shard_col() < 3)).count() == 0
+    assert flagged.where(F.col("m") & (sb.shard_col() == 3)).count() == 0
 
     # incremental update at a later version only bumps touched shards
-    df2 = spark.range(5000, 5100).select(
-        F.xxhash64(F.col("id").cast("string")).alias("h"),
-        F.lit(2).cast("int").alias("shard"))
-    written2 = sb.update(df2, "h", "shard", version=2)
-    assert written2 == [2]
+    df2 = frame(5000, 5100).where(sb.shard_col() == 2)
+    assert update(df2, version=2) == [2]
     assert sb.versions[2] == 2 and sb.versions[0] == 1
-    flagged2 = df2.select(sb.prefilter_udf()(F.col("h"), F.col("shard")).alias("m"))
-    assert flagged2.where(~F.col("m")).count() == 0
+    assert sb.with_maybe_seen(df2, "m").where(~F.col("m")).count() == 0
     # old data still present after the update (OR semantics, no false negatives)
-    flagged3 = df.select(sb.prefilter_udf()(F.col("h"), F.col("shard")).alias("m"))
-    assert flagged3.where(~F.col("m")).count() == 0
-
-    # an unseen shard (no filter yet) reads as definitely-new
-    df_new_shard = spark.range(10).select(
-        F.xxhash64(F.col("id").cast("string")).alias("h"),
-        F.lit(99).cast("int").alias("shard"))
-    assert df_new_shard.select(sb.prefilter_udf()(F.col("h"), F.col("shard")).alias("m")) \
-        .where(F.col("m")).count() == 0
+    assert sb.with_maybe_seen(old, "m").where(~F.col("m")).count() == 0
+    # driver holds no filter objects — only the manifest dict
+    assert not any(isinstance(v, (bytes, bytearray, BloomFilter)) for v in vars(sb).values())
 
     # prune versions older than the current manifest
     sb.prune_versions(dict(sb.versions))

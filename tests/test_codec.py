@@ -3,6 +3,8 @@ rejection, phash stability, determinism across calls."""
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -386,7 +388,9 @@ def _corruptions(blob: bytes, seed: int, n: int = 200):
 def test_seeded_corruptions_fail_only_as_codec_error(fmt):
     """Every failure to decode corrupted bytes is a CodecError — a zlib.error
     (or any other exception) escaping the decoder fails a whole Spark task.
-    200 flips + 200 truncations per format."""
+    200 flips + 200 truncations per format. No DeprecationWarning either:
+    NumPy only warns when an out-of-range int is stored in an int array,
+    so a decoder that merely warns went on with a wrapped value."""
     from distributed_webcrawler_spark.sources import jpeg, webp
 
     px = codec.synth_pixels_photo(f"fuzz-{fmt}", 24, 20)
@@ -400,11 +404,14 @@ def test_seeded_corruptions_fail_only_as_codec_error(fmt):
         "wav": (codec.encode_wav(pcm, 8000), codec.decode_audio),
     }[fmt]
     escaped = []
-    for bad in _corruptions(blob, seed=sum(map(ord, fmt))):
-        try:
-            decode(bad)
-        except codec.CodecError:
-            pass
-        except Exception as e:  # noqa: BLE001 - any other class is the failure
-            escaped.append(type(e).__name__)
+    with warnings.catch_warnings(record=True) as warned:
+        warnings.simplefilter("always", DeprecationWarning)
+        for bad in _corruptions(blob, seed=sum(map(ord, fmt))):
+            try:
+                decode(bad)
+            except codec.CodecError:
+                pass
+            except Exception as e:  # noqa: BLE001 - any other class is the failure
+                escaped.append(type(e).__name__)
     assert escaped == []
+    assert [str(w.message) for w in warned if w.category is DeprecationWarning] == []

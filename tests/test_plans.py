@@ -200,6 +200,36 @@ def test_expand_has_one_python_node_behind_an_exchange(spark, fixture_dir, wareh
             c.unpersist()
 
 
+def test_sharded_expand_probes_without_python_over_candidates(spark, fixture_dir, warehouse):
+    """The sharded store's prefilter is native too. Besides the resolve
+    residue's ArrowEvalPython, the expand plan's only Python node is the
+    MapInPandas that reads the shard words, and its input is the
+    {shard: version} manifest: no other Python node sees a candidate row."""
+    from distributed_webcrawler_spark import CrawlConfig
+    from distributed_webcrawler_spark.plans.engine import CrawlEngine
+    from distributed_webcrawler_spark.sources.store import SnapshotStore
+
+    cfg = CrawlConfig(seen_filter="cuckoo", bloom_shards=4, bloom_expected_insertions=10_000)
+    eng = CrawlEngine(spark, SnapshotStore(warehouse), cfg,
+                      spark.read.parquet(f"{fixture_dir}/web_graph"),
+                      spark.read.parquet(f"{fixture_dir}/payloads"), None)
+    eng.start_session(spark.read.parquet(f"{fixture_dir}/seeds"))
+    assert eng.seen.sharded
+    sched, _n = eng._schedule(eng.pending(), 1)
+    lines = _plan(eng._expand(eng._fetch(sched), 1)).splitlines()
+    py = {i: ln.split("- ", 1)[-1] for i, ln in enumerate(lines)
+          if "EvalPython" in ln or "MapInPandas" in ln}
+    evals = {t for t in py.values() if "EvalPython" in t}
+    words = [i for i, t in py.items() if "MapInPandas" in t]
+    assert len(evals) == 1 and "ArrowEvalPython [_fused(" in evals.pop(), lines
+    assert words, lines
+    for i in words:
+        assert re.search(r"Scan ExistingRDD\[__shard#\d+,__version#\d+\]$", lines[i + 1]), \
+            lines[i + 1]
+    for c in eng._round_caches:
+        c.unpersist()
+
+
 def test_new_map_side_queries_have_no_exchange(spark):
     """doc_chunk / url_param_strip / rel_canonical claim 'map-side, zero
     shuffle' — assert no Exchange in the physical plan (the explode and all

@@ -14,9 +14,9 @@ from pyspark.sql import functions as F
 
 from distributed_webcrawler_spark import CrawlConfig
 from distributed_webcrawler_spark.functions.hashes import xxhash64_long
-from distributed_webcrawler_spark.operators.bloom import BloomFilter
 from distributed_webcrawler_spark.operators.cuckoo import CuckooFilter
-from distributed_webcrawler_spark.operators.seen import DriverSeenSet, add_all
+from distributed_webcrawler_spark.operators import seen as seen_sets
+from distributed_webcrawler_spark.operators.seen import add_all
 from distributed_webcrawler_spark.plans.engine import CrawlEngine
 from distributed_webcrawler_spark.sources.store import SnapshotStore
 
@@ -153,13 +153,15 @@ def test_fresh_engine_on_existing_warehouse_keeps_checkpointed_files(spark, fixt
     assert _named(SnapshotStore(wh).read_checkpoints()[-1]).isdisjoint(named)
 
 
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
-def test_native_probe_matches_numpy(spark, kind):
-    """The driver set's native probe (xxhash64, element_at and shifts in
-    the JVM, over the broadcast-joined words frame of with_maybe_seen)
-    answers exactly as the numpy might_contain_many on 10^5 random
-    hashes, extremes included, with no false negative; and the numpy
-    xxhash64 twin equals Spark's xxhash64 on every one of them."""
+@pytest.mark.parametrize("seen_set", sorted(SEEN_SETS))
+def test_native_probe_matches_numpy(spark, tmp_path, seen_set):
+    """Every seen set's native probe (xxhash64, element_at and shifts in
+    the JVM, over the words frame with_maybe_seen joins to the rows)
+    answers exactly as the numpy might_contain_many on 10^5 random hashes,
+    extremes included, with no false negative; and the numpy xxhash64 twin
+    equals Spark's xxhash64 on every one of them. No key is added to shard
+    3, so a sharded store has no filter there: its rows read "definitely
+    new"."""
     import pandas as pd
 
     rng = np.random.default_rng(17)
@@ -167,17 +169,49 @@ def test_native_probe_matches_numpy(spark, kind):
     probe = np.concatenate([
         inserted, rng.integers(-(2**63), 2**63 - 1, 80_000, dtype=np.int64, endpoint=True),
         np.array([0, 1, -1, 2**63 - 1, -(2**63)], dtype=np.int64)])
-    filt = (BloomFilter.for_capacity(20_000, 0.01) if kind == "bloom"
-            else CuckooFilter.for_capacity(20_000))
-    add_all(filt, inserted)
-    want = filt.might_contain_many(probe)
-    assert want[: len(inserted)].all()
-    df = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(probe)), "url_hash": probe}))
-    tagged = DriverSeenSet(filt, 0).with_maybe_seen(df, "m")
-    got = (tagged.select("i", "m", F.xxhash64("url_hash").alias("g"))
+    buckets = rng.integers(0, 1000, len(probe)).astype(np.int32)
+    df = spark.createDataFrame(pd.DataFrame(
+        {"i": np.arange(len(probe)), "url_hash": probe, "host_bucket": buckets}))
+    cfg = CrawlConfig(bloom_expected_insertions=80_000, **SEEN_SETS[seen_set])
+    seen = seen_sets.create(cfg, str(tmp_path))
+    added = buckets[: len(inserted)] % 4 != 3
+    seen.add_frame(df.where((F.col("i") < len(inserted)) & (F.col("host_bucket") % 4 != 3)))
+    if seen.sharded:
+        assert sorted(seen.versions) == [0, 1, 2]
+        want = np.zeros(len(probe), dtype=bool)
+        for s, v in seen.versions.items():
+            m = buckets % 4 == s
+            want[m] = seen_sets._read_blob(seen.directory, seen.kind, s, v) \
+                .might_contain_many(probe[m])
+    else:
+        want = seen.filter.might_contain_many(probe)
+    assert want[: len(inserted)][added].all()
+    got = (seen.with_maybe_seen(df, "m").select("i", "m", F.xxhash64("url_hash").alias("g"))
            .toPandas().sort_values("i"))
     assert np.array_equal(got["m"].to_numpy(), want)
     assert np.array_equal(got["g"].to_numpy(), xxhash64_long(probe).view(np.int64))
+
+
+@pytest.mark.parametrize("seen_set,changed", [
+    ("bloom-sharded", {"bloom_expected_insertions": 40_000}),
+    ("cuckoo-sharded", {"bloom_expected_insertions": 40_000}),
+    ("cuckoo-sharded", {"bloom_shards": 3})])
+def test_resume_under_another_shape_rebuilds_the_seen_set(spark, fixture_dir, tmp_path,
+                                                          seen_set, changed):
+    """A sharded warehouse resumed under another filter size or shard
+    count: the store probes every shard with its one shape and routes keys
+    by its own shard count, so the checkpointed shards are not restored
+    but rebuilt over the frontier, and every frontier key still reads as
+    seen. (Four shards of 2500 keys and three of 3333 give cuckoo tables
+    of the same shape: only the recorded shard count tells them apart.)"""
+    wh = str(tmp_path / "wh")
+    _engine(spark, fixture_dir, wh, **SEEN_SETS[seen_set]).start_session(
+        _seeds(spark, fixture_dir, 40))
+    eng = _engine(spark, fixture_dir, wh, **{**SEEN_SETS[seen_set], **changed})
+    assert eng.resume() == []
+    fr = SnapshotStore(wh).table("frontier").read(spark)
+    assert fr.count() == 40
+    assert eng.seen.with_maybe_seen(fr, "m").where(~F.col("m")).count() == 0
 
 
 @pytest.mark.parametrize("seen_set", sorted(SEEN_SETS))
