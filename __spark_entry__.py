@@ -427,7 +427,7 @@ GROUP BY user_id
 
 
 def q_latest_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Latest-wins view (the progress-table status resolution shape)."""
+    """Latest-wins view (the session-control status resolution shape)."""
     ev = _t(spark, sf_dir, "events")
     out = D.first_wins(ev, ["user_id"], [F.col("ts").desc(), F.col("event_id").desc()])
     return out.select("user_id", "event_id", "ts", "event_type")

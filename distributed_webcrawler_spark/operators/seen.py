@@ -52,7 +52,6 @@ from __future__ import annotations
 import functools
 import os
 import re
-import tempfile
 
 import numpy as np
 import pandas as pd
@@ -60,6 +59,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.batches import map_rows
+from ..sources.store import write_atomic
 from .bloom import BloomFilter
 from .cuckoo import CuckooFilter
 
@@ -159,14 +159,6 @@ def _refuse_stale(allow_stale: bool) -> None:
             "allow_stale_filter=True to accept the stale filter.")
 
 
-def _write_atomic(path: str, data: bytes) -> None:
-    """Temp file, then os.replace: a reader never sees a torn file."""
-    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
-    with os.fdopen(fd, "wb") as f:
-        f.write(data)
-    os.replace(tmp, path)
-
-
 def _native_hit(filt) -> Column:
     """``filt``'s might-contain of url_hash against ``__seen_words``; a row
     with no words (a shard with no filter yet) reads "definitely new"."""
@@ -216,8 +208,11 @@ class DriverSeenSet:
         add_all(self.filter, _hash_array(df))
 
     def add_snapshot(self, table, snap: int) -> None:
-        # driver-side pyarrow read of the parquet the append just wrote
-        add_all(self.filter, table.read_column_local(snap, "url_hash"))
+        # driver-side pyarrow read of the parquet the append just wrote;
+        # drop nulls BEFORE to_numpy: a null in an int64 column makes pyarrow
+        # emit float64 + NaN, which a later astype(uint64) turns into garbage
+        col = table.read_local(["url_hash"], snap)["url_hash"]
+        add_all(self.filter, col.combine_chunks().drop_null().to_numpy())
 
     def delete(self, victim_rows: DataFrame, n_rows: int, allow_stale: bool = False) -> None:
         """Forget one fingerprint per victim frontier row. The filter is a
@@ -245,7 +240,7 @@ class DriverSeenSet:
         last = max((int(m[1]) for f in os.listdir(warehouse) if (m := pat.fullmatch(f))),
                    default=0)
         name = f"{self.kind}-r{rnd:05d}-v{last + 1:06d}.bin"
-        _write_atomic(os.path.join(warehouse, name), self.filter.to_bytes())
+        write_atomic(os.path.join(warehouse, name), self.filter.to_bytes())
         return {self.kind: name}
 
     def prune(self, warehouse: str, checkpoints: list[dict]) -> None:
@@ -403,7 +398,7 @@ class ShardedSeenStore:
                 add_all(filt, vals)
             else:
                 filt.delete_many(vals)
-            _write_atomic(_blob_path(directory, kind, shard, version), filt.to_bytes())
+            write_atomic(_blob_path(directory, kind, shard, version), filt.to_bytes())
             return pd.DataFrame({"shard": [shard], "n": [len(vals)]})
 
         out = (df.select(F.col(shard_col).alias("__shard"), F.col(hash_col))

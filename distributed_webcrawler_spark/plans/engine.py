@@ -2,19 +2,20 @@
 
 One crawl round = ONE Spark job (SURVEY.md §3.2 Spark equivalent):
 
-    pending = frontier ANTI-JOIN progress            (claim set, F3/J2)
+    pending = frontier ANTI-JOIN done                (claim set, F3/J2)
     scheduled = rank window per host under budget    (W1/W4; compat: global ZREVRANGE order)
     gate by robots (broadcast join, native prefix)   (J3/F4/C9)
     fetch = join web_graph, join payloads, decode    (J4/S5/C7, Arrow batches)
     append pages; expand links -> canonicalize ->    (S7/C1/C2/C4/C5)
     first-wins in-round dedup -> seen prefilter ->
     exact seen anti-join -> append frontier          (J1)
-    append progress + metrics; checkpoint            (A8, exact resume)
+    fold attempts into done; metrics; checkpoint     (A8, exact resume)
 
-State lives in SnapshotStore tables (frontier / progress / pages /
-metrics); the driver is the only committer, so rounds are snapshot-isolated
-and idempotent: resume = rollback to the last checkpoint and re-enter the
-loop (SURVEY.md §4.2 "exact resume").
+State lives in SnapshotStore tables (frontier / pages / done / metrics;
+pages is the one attempt log, one row per scheduled URL); the driver is
+the only committer, so rounds are snapshot-isolated and idempotent:
+resume = rollback to the last checkpoint and re-enter the loop
+(SURVEY.md §4.2 "exact resume").
 
 Reference semantics preserved (each cited in the operator modules):
 enqueue-time first-wins dedup, priority = max(0.1, 1 - parent_depth*0.1),
@@ -43,7 +44,6 @@ Scale design notes:
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -114,7 +114,7 @@ class CrawlEngine:
 
     def _branch_pool(self):
         """One persistent 2-thread pool per engine: the round's independent
-        job branches (expand->frontier->bloom, progress->done) run here while
+        job branches (expand->frontier->bloom, attempts->done) run here while
         the pages write runs on the caller thread. Persistent so py4j's
         pinned-thread mode maps each pool thread to ONE reused JVM thread
         (fresh threads per round would leak JVM-side thread objects)."""
@@ -200,7 +200,7 @@ class CrawlEngine:
 
         Finished keys live in the COMPACTED append-only `done` table, folded
         in once per round (see _finalize_round) — so this view is a single
-        anti-join, NOT a re-aggregation of the full progress log: the log
+        anti-join, NOT a re-aggregation of the attempt log (pages): the log
         grows with crawl age, and re-grouping it made round cost grow with
         history. A URL is finished when it COMPLETED, failed permanently, or
         exhausted ``max_retries`` transient (status 0) attempts; with the
@@ -220,21 +220,19 @@ class CrawlEngine:
         # auto-broadcast would eventually stall the driver
         return fr.join(done.hint("shuffle_hash"), ["session_id", "url"], "left_anti")
 
-    def _finalize_round(self, progress_snap: int, rnd: int = 0) -> None:
+    def _finalize_round(self, attempts: DataFrame, rnd: int = 0) -> None:
         """Fold this round's finished (session_id, url) keys into the
-        compacted `done` table, reading back the progress snapshot the
-        round JUST wrote (a pruned parquet scan — never recomputes the
-        producing plan). Retry bookkeeping (max_retries > 0) keeps a small
+        compacted `done` table. ``attempts`` holds one (session_id, url,
+        retryable) row per scheduled URL, projected off the round's cached
+        frames. Retry bookkeeping (max_retries > 0) keeps a small
         `retry_log` of still-retryable keys; with the default
         max_retries=0 every attempt finalizes immediately."""
         cfg = self.cfg
-        this_round = self._t("progress").read_snapshot(self.spark, progress_snap)
         if cfg.max_retries <= 0:
-            done_new = this_round.select("session_id", "url")
+            done_new = attempts.select("session_id", "url")
         else:
-            is_retry = (F.col("status") == "FAILED") & F.col("retryable")
-            final_now = this_round.where(~is_retry).select("session_id", "url")
-            retry = this_round.where(is_retry).select("session_id", "url")
+            final_now = attempts.where(~F.col("retryable")).select("session_id", "url")
+            retry = attempts.where(F.col("retryable")).select("session_id", "url")
             rl = self._t("retry_log").read(self.spark)
             if rl is not None:
                 prior = rl.groupBy("session_id", "url").agg(F.max("attempts").alias("prior"))
@@ -288,20 +286,12 @@ class CrawlEngine:
     def _inactive_sessions(self) -> set[str]:
         """Latest-wins control state per session, read driver-side (the
         control table is a handful of rows — no Spark job)."""
-        import pyarrow.parquet as pq
-
-        tbl = self._t("sessions")
-        snaps = tbl._read_manifest()
-        if not snaps:
-            return set()
+        t = self._t("sessions").read_local(["session_id", "status", "seq"])
         latest: dict[str, tuple[int, str]] = {}
-        for s in snaps:
-            t = pq.read_table(os.path.join(tbl.path, s),
-                              columns=["session_id", "status", "seq"])
-            for sid, st, seq in zip(t["session_id"].to_pylist(),
-                                    t["status"].to_pylist(), t["seq"].to_pylist()):
-                if sid not in latest or seq >= latest[sid][0]:
-                    latest[sid] = (seq, st)
+        for sid, st, seq in zip(t["session_id"].to_pylist(),
+                                t["status"].to_pylist(), t["seq"].to_pylist()):
+            if sid not in latest or seq >= latest[sid][0]:
+                latest[sid] = (seq, st)
         return {sid for sid, (_, st) in latest.items() if st in ("PAUSED", "STOPPED")}
 
     # ------------------------------------------------------------- rounds
@@ -434,11 +424,12 @@ class CrawlEngine:
                     pending, ["session_id", "host"], order,
                     cfg.budget_per_host_per_round).drop("rk")
             if cfg.max_pages is not None:
-                # one progress row per attempt -> the manifest's footer-based
-                # row total IS the attempted count (no per-round count() job)
-                attempted = self._t("progress").total_rows()
+                # one pages row per attempt, robots-blocked rows included ->
+                # the manifest's footer-based row total IS the attempted
+                # count (no per-round count() job)
+                attempted = self._t("pages").total_rows()
                 if attempted is None:  # legacy manifest without row stats
-                    pg = self._t("progress").read(self.spark)
+                    pg = self._t("pages").read(self.spark)
                     attempted = pg.count() if pg is not None else 0
                 remaining = max(cfg.max_pages - attempted, 0)
                 sched = topk.global_topk(sched, order, remaining)
@@ -589,7 +580,7 @@ class CrawlEngine:
         Arrow batches (thread pool per task — sources/httpfetch.py), HTML
         anchor extraction in the worker. Emits the SAME columns as the join
         fetch (web_status, out_links, image_id), so everything downstream —
-        decode, expand, progress — is identical between modes; page bytes
+        decode, expand, done — is identical between modes; page bytes
         never leave the worker (only hrefs + the image reference do)."""
         from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
 
@@ -776,7 +767,7 @@ class CrawlEngine:
             self.last_stage_secs = stages
             return {"round": rnd, "scheduled": 0}
         # cache the GATED frame: the fetch, the blocked pages and the
-        # progress branch all filter this one frame, so the robots rules
+        # done branch all filter this one frame, so the robots rules
         # are joined and evaluated once per round, not once per consumer
         gated = self._gate_robots(sched, rnd).cache()
         self._round_caches.append(gated)
@@ -811,7 +802,7 @@ class CrawlEngine:
             F.avg("depth").alias("avg_depth"))
         # ---- three independent job branches, overlapped ------------------
         # The pages write, the expand->frontier->bloom chain, and the
-        # progress->done chain touch DISJOINT store tables and all hang off
+        # attempts->done chain touch DISJOINT store tables and all hang off
         # the same cached `fetched`; serialized they leave the executor pool
         # idle through every stage tail and driver commit. Spark's per-block
         # loading locks make the concurrent first touch of the `fetched` /
@@ -837,23 +828,19 @@ class CrawlEngine:
             mark_at("bloom_update")
             return n_new
 
-        def _branch_progress() -> None:
+        def _branch_done() -> None:
+            # label and stage key kept: crawlbench/eventlog.py reads both
             self._desc(f"dws r{rnd}: progress+done")
             # every scheduled URL yields exactly one pages row with
             # status_code = web_status (0 sentinel when the fetch missed), so
-            # progress projects straight off the cached slim fetch result —
-            # COMPLETED on 200 else FAILED, never retried
-            # (URLFrontier.java:198-202); only connection-level failures
-            # (sentinel 0) are retryable
-            progress = fetched.select(
-                "session_id", "url", F.col("round"),
-                F.when(F.col("web_status") == 200, "COMPLETED").otherwise("FAILED").alias("status"),
+            # the attempts project straight off the cached slim fetch result;
+            # failures are never retried (URLFrontier.java:198-202) except
+            # connection-level ones (sentinel 0), which are retryable
+            attempts = fetched.select(
+                "session_id", "url",
                 (F.coalesce(F.col("web_status"), F.lit(0)) == 0).alias("retryable"),
-                F.lit("driver").alias("assigned_to"),
             ).unionByName(blocked.select(
-                "session_id", "url", F.col("round"),
-                F.lit("FAILED").alias("status"), F.lit(False).alias("retryable"),
-                F.lit("driver").alias("assigned_to")))
+                "session_id", "url", F.lit(False).alias("retryable")))
             if cfg.circuit_breaker or cfg.adaptive_budget:
                 # one row per (round, host) off the cached slim fetch —
                 # feeds _host_caps / _held in later rounds;
@@ -865,8 +852,7 @@ class CrawlEngine:
                            .otherwise(0)).cast("int").alias("failures"))
                     .withColumn("round", F.lit(rnd).cast("int")))
                 self._t("host_stats").append(hstats)
-            psnap = self._t("progress").append(progress)
-            self._finalize_round(psnap, rnd)
+            self._finalize_round(attempts, rnd)
             mark_at("progress_done")
 
         def mark_at(name: str) -> None:
@@ -876,13 +862,13 @@ class CrawlEngine:
 
         pool = self._branch_pool()
         fut_expand = pool.submit(_branch_expand)
-        fut_progress = pool.submit(_branch_progress)
+        fut_done = pool.submit(_branch_done)
         self._desc(f"dws r{rnd}: fetch+decode+pages_write")
         self._t("pages").append(pages_all)
         stats_row = obs.get
         mark_at("pages_write")
         n_new = fut_expand.result()
-        fut_progress.result()
+        fut_done.result()
         mark("round_branches")
 
         self._desc(f"dws r{rnd}: metrics+checkpoint")
@@ -921,9 +907,8 @@ class CrawlEngine:
     # --------------------------------------------------------- checkpoints
     def _checkpoint(self, rnd: int) -> None:
         tables = {n: self._t(n).snapshot_id()
-                  for n in ("frontier", "progress", "pages", "metrics",
-                            "done", "retry_log", "sessions", "host_stats",
-                            "robots_http")}
+                  for n in ("frontier", "pages", "metrics", "done", "retry_log",
+                            "sessions", "host_stats", "robots_http")}
         ckpt = {"round": rnd, "tables": tables}
         if self.seen is not None:
             ckpt.update(self.seen.checkpoint(self.store.warehouse, rnd))

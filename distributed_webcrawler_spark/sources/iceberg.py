@@ -17,6 +17,7 @@ Mapping (all public Iceberg Spark APIs):
   read(as_of=i)     -> VERSION AS OF the i-th snapshot since the last
                        replace (positional ids, like the parquet manifest)
   read_snapshot(i)  -> incremental append scan (start/end-snapshot-id)
+  read_local        -> the same scans, select(...).toArrow() to the driver
   rollback(i)       -> CALL <cat>.system.rollback_to_snapshot(...)
   total_rows        -> snapshots summary['total-records'] (metadata-only,
                        the same footer-stat trick the parquet layer uses)
@@ -29,7 +30,6 @@ metadata, not table data, exactly as on the parquet backend.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from .store import SnapshotStore
@@ -127,10 +127,14 @@ class IcebergTable:
                     .load(self.ident))
         return spark.read.option("snapshot-id", real.snapshot_id).table(self.ident)
 
-    def read_column_local(self, snapshot_id: int, column: str):
-        col = (self.read_snapshot(self.spark, snapshot_id)
-               .select(column).dropna().toPandas()[column])
-        return col.to_numpy(dtype=np.int64)
+    def read_local(self, columns: list[str], snapshot_id: int | None = None):
+        df = (self.read(self.spark) if snapshot_id is None
+              else self.read_snapshot(self.spark, snapshot_id))
+        if df is None:
+            import pyarrow as pa
+
+            return pa.table({c: [] for c in columns})
+        return df.select(*columns).toArrow()
 
     def total_rows(self) -> int | None:
         snaps = self._snaps()

@@ -47,6 +47,15 @@ def _parquet_num_rows(snap_dir: str) -> int:
     return total
 
 
+def write_atomic(path: str, data: bytes) -> None:
+    """Temp file in the same directory, then os.replace: a reader sees the
+    old file or the new one, never a torn one."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
+    with os.fdopen(fd, "wb") as f:
+        f.write(data)
+    os.replace(tmp, path)
+
+
 class Table:
     def __init__(self, warehouse: str, name: str):
         self.name = name
@@ -68,11 +77,10 @@ class Table:
     def _read_manifest(self) -> list[str]:
         return self._read_full_manifest()["snapshots"]
 
-    def _write_manifest(self, snapshots: list[str], rows: dict | None = None) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump({"snapshots": snapshots, "rows": rows or {}}, f)
-        os.replace(tmp, self._manifest_path)  # atomic commit point
+    def _write_manifest(self, snapshots: list[str], rows: dict) -> None:
+        # the atomic commit point
+        write_atomic(self._manifest_path,
+                     json.dumps({"snapshots": snapshots, "rows": rows}).encode())
 
     @staticmethod
     def _next_snap_name(snaps: list[str]) -> str:
@@ -84,26 +92,20 @@ class Table:
         return f"snap-{nxt:08d}"
 
     # -- write -------------------------------------------------------------
-    def append(self, df: DataFrame) -> int:
-        """Append df as a new snapshot; returns the new snapshot id
-        (= number of snapshots after commit). The manifest records the
-        snapshot's row count (summed from parquet footers, driver-side
-        metadata only — the Iceberg manifest carries the same stat), so
-        planners can bound table size without running a job."""
-        return self.append_counted(df)[0]
-
-    def append_counted(self, df: DataFrame, skip_empty: bool = False) -> tuple[int, int]:
-        """Append df and return (snapshot_id, rows_appended) — the count
-        comes from the parquet footers the write just produced, so callers
-        never pay a separate count() job over the same data. With
-        ``skip_empty``, a zero-row result commits nothing (an empty
-        snapshot dir would have no parquet files for readers to union) and
-        returns the UNCHANGED snapshot id with 0."""
+    def _commit(self, write, skip_empty: bool = False,
+                replace: bool = False) -> tuple[int, int]:
+        """The one commit path: ``write(dir)`` fills the next snapshot dir,
+        its parquet footers give the row count (driver-side metadata only —
+        the Iceberg manifest carries the same stat), then the manifest is
+        replaced atomically, appending the snapshot or, with ``replace``,
+        making it the table's only one. With ``skip_empty``, a zero-row
+        result commits nothing (an empty snapshot dir would have no parquet
+        files for readers to union). Returns (snapshot_id, rows_written)."""
         m = self._read_full_manifest()
-        snaps, rows = m["snapshots"], m["rows"]
-        snap_name = self._next_snap_name(snaps)
+        snaps, rows = ([], {}) if replace else (m["snapshots"], m["rows"])
+        snap_name = self._next_snap_name(m["snapshots"])
         out = os.path.join(self.path, snap_name)
-        df.write.mode("errorifexists").parquet(out)
+        write(out)
         n = _parquet_num_rows(out)
         if skip_empty and n == 0:
             shutil.rmtree(out, ignore_errors=True)
@@ -111,6 +113,22 @@ class Table:
         rows[snap_name] = n
         self._write_manifest(snaps + [snap_name], rows)
         return len(snaps) + 1, n
+
+    def append(self, df: DataFrame) -> int:
+        """Append df as a new snapshot; returns the new snapshot id
+        (= number of snapshots after commit). The manifest records the
+        snapshot's row count, so planners can bound table size without
+        running a job."""
+        return self.append_counted(df)[0]
+
+    def append_counted(self, df: DataFrame, skip_empty: bool = False) -> tuple[int, int]:
+        """Append df and return (snapshot_id, rows_appended) — the count
+        comes from the parquet footers the write just produced, so callers
+        never pay a separate count() job over the same data. With
+        ``skip_empty``, a zero-row result commits nothing and returns the
+        UNCHANGED snapshot id with 0."""
+        return self._commit(lambda out: df.write.mode("errorifexists").parquet(out),
+                            skip_empty=skip_empty)
 
     def append_rows(self, rows_data: list[dict], schema: "pa.Schema") -> int:
         """Append a handful of driver-side rows (metrics snapshots, control
@@ -120,17 +138,13 @@ class Table:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        m = self._read_full_manifest()
-        snaps, rows = m["snapshots"], m["rows"]
-        snap_name = self._next_snap_name(snaps)
-        out = os.path.join(self.path, snap_name)
-        os.makedirs(out)
-        cols = {f.name: [r[f.name] for r in rows_data] for f in schema}
-        pq.write_table(pa.Table.from_pydict(cols, schema=schema),
-                       os.path.join(out, "part-00000.parquet"))
-        rows[snap_name] = len(rows_data)
-        self._write_manifest(snaps + [snap_name], rows)
-        return len(snaps) + 1
+        def write(out: str) -> None:
+            os.makedirs(out)
+            cols = {f.name: [r[f.name] for r in rows_data] for f in schema}
+            pq.write_table(pa.Table.from_pydict(cols, schema=schema),
+                           os.path.join(out, "part-00000.parquet"))
+
+        return self._commit(write)[0]
 
     def overwrite_compacted(self, df: DataFrame) -> int:
         """Replace the table's whole content with ``df`` as ONE snapshot —
@@ -143,29 +157,29 @@ class Table:
         a fresh engine checkpoint right after: older checkpoints' snapshot
         ids refer to pre-compaction positions. Returns the new snapshot id
         (always 1)."""
-        m = self._read_full_manifest()
-        old = m["snapshots"]
-        snap_name = self._next_snap_name(old)
-        out = os.path.join(self.path, snap_name)
-        df.write.mode("errorifexists").parquet(out)
-        n = _parquet_num_rows(out)
-        self._write_manifest([snap_name], {snap_name: n})  # atomic swap
+        old = self._read_manifest()
+        self._commit(lambda out: df.write.mode("errorifexists").parquet(out), replace=True)
         for s in old:
             shutil.rmtree(os.path.join(self.path, s), ignore_errors=True)
         return 1
 
-    def read_column_local(self, snapshot_id: int, column: str):
-        """Read ONE column of ONE snapshot driver-side via pyarrow (no
-        Spark job) — e.g. the url_hash column the bloom update needs right
-        after the frontier append wrote it. Returns a numpy array."""
+    def read_local(self, columns: list[str], snapshot_id: int | None = None) -> "pa.Table":
+        """Read ``columns`` driver-side via pyarrow (no Spark job): of ONE
+        snapshot (e.g. the url_hash column the seen-set update needs right
+        after the frontier append wrote it), or of the whole table when
+        ``snapshot_id`` is None (e.g. the handful of session control rows)."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         snaps = self._read_manifest()
-        snap_dir = os.path.join(self.path, snaps[snapshot_id - 1])
-        col = pq.read_table(snap_dir, columns=[column])[column]
-        # drop nulls BEFORE to_numpy: a null in an int64 column makes pyarrow
-        # emit float64 + NaN, which a later astype(uint64) turns into garbage
-        return col.combine_chunks().drop_null().to_numpy()
+        if snapshot_id is not None:
+            snaps = [snaps[snapshot_id - 1]]
+        if not snaps:
+            return pa.table({c: [] for c in columns})
+        # promote: snapshots may differ in nullability (a Spark write of a
+        # literal column is non-null)
+        return pa.concat_tables([pq.read_table(os.path.join(self.path, s), columns=columns)
+                                 for s in snaps], promote_options="default")
 
     # -- metadata ----------------------------------------------------------
     def total_rows(self) -> int | None:
@@ -238,13 +252,11 @@ class SnapshotStore:
     def _ckpt_path(self) -> str:
         return os.path.join(self.warehouse, "checkpoints.json")
 
+    def _write_checkpoints(self, ckpts: list[dict]) -> None:
+        write_atomic(self._ckpt_path, json.dumps(ckpts).encode())
+
     def write_checkpoint(self, payload: dict) -> None:
-        ckpts = self.read_checkpoints()
-        ckpts.append(payload)
-        fd, tmp = tempfile.mkstemp(dir=self.warehouse, suffix=".ckpt.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(ckpts, f)
-        os.replace(tmp, self._ckpt_path)
+        self._write_checkpoints(self.read_checkpoints() + [payload])
 
     def read_checkpoints(self) -> list[dict]:
         if not os.path.exists(self._ckpt_path):
@@ -261,8 +273,5 @@ class SnapshotStore:
         snapshot id and drop newer checkpoints."""
         for name, snap_id in ckpt["tables"].items():
             self.table(name).rollback(snap_id)
-        ckpts = [c for c in self.read_checkpoints() if c["round"] <= ckpt["round"]]
-        fd, tmp = tempfile.mkstemp(dir=self.warehouse, suffix=".ckpt.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(ckpts, f)
-        os.replace(tmp, self._ckpt_path)
+        self._write_checkpoints(
+            [c for c in self.read_checkpoints() if c["round"] <= ckpt["round"]])

@@ -1,9 +1,9 @@
 """Bucketed co-located join: the cluster technique for the frontier <->
-seen-set / progress joins that repeat every round on the same key. Writing
+seen-set / done joins that repeat every round on the same key. Writing
 both sides bucketed + sorted on the join key lets Spark plan a SortMergeJoin
 with NO Exchange on either side — the shuffle is paid once at write time and
 amortized over every subsequent round. On the 10^10 tier this is the
-recommended layout for the progress/done table (see plans/engine.py
+recommended layout for the done table (see plans/engine.py
 pending()); parquet snapshot appends can't carry bucket metadata, so this is
 exercised against saveAsTable (the Iceberg bucket-partition-transform
 equivalent on a real cluster).

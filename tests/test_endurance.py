@@ -41,7 +41,7 @@ def _tables(spark, store):
     key_cols = {
         "frontier": ["url", "depth", "priority", "discovered_round", "parent_url"],
         "pages": ["round", "sched_seq", "url", "status_code", "content_length", "phash"],
-        "progress": ["round", "url", "status"],
+        "done": ["session_id", "url"],
     }
     return {t: store.table(t).read(spark).select(*c).orderBy(*c).collect()
             for t, c in key_cols.items()}
@@ -61,7 +61,7 @@ def test_forty_round_crawl_flat_cost_and_deep_resume(spark, long_fixture):
 
         # flat per-round cost: the crawl's later rounds must not cost a
         # multiple of its early rounds (catches any re-aggregation of the
-        # growing progress log / frontier creeping back in). Medians over
+        # growing attempt log / frontier creeping back in). Medians over
         # 10-round windows, round 1 (JVM warm-up) excluded; the 2.5x bound
         # is generous for sandbox noise while still failing a linear blowup.
         walls = [h["wall_secs"] for h in hist]

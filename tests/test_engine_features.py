@@ -4,6 +4,8 @@ sets, multi-session round-robin quotas (W2), transient-failure retries
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -200,10 +202,11 @@ def test_stop_pause_resume_session(spark, fixture_dir, warehouse):
 
 def test_pending_is_compacted_anti_join_not_log_rescan(spark, fixture_dir, warehouse):
     """The pending view must be a single anti-join against the compacted
-    `done` table — NOT a re-aggregation of the whole progress log (whose
-    cost grows with crawl age). Assert the plan has no Aggregate over the
-    progress log and that semantics hold across many rounds: nothing is
-    ever scheduled twice, and every finished url leaves pending."""
+    `done` table — NOT a re-aggregation of the whole attempt log, pages
+    (whose cost grows with crawl age). Assert the plan has no Aggregate
+    over the log and that semantics hold across many rounds: nothing is
+    ever scheduled twice, every attempted url is done, and every finished
+    url leaves pending. No second attempt log is written."""
     cfg = CrawlConfig(max_depth=3, budget_per_host_per_round=3, max_rounds=12,
                       use_bloom=False, respect_robots=False)
     wg = spark.read.parquet(f"{fixture_dir}/web_graph")
@@ -222,9 +225,11 @@ def test_pending_is_compacted_anti_join_not_log_rescan(spark, fixture_dir, wareh
     dup = pages.groupBy("session_id", "url").count().where(F.col("count") > 1).count()
     assert dup == 0                      # nothing fetched twice
     done = store.table("done").read(spark)
-    prog = store.table("progress").read(spark)
+    attempted = pages.select("session_id", "url").distinct()
     # every attempted url is in done exactly once (max_retries=0: final on attempt)
-    assert done.count() == prog.select("session_id", "url").distinct().count()
+    assert done.count() == attempted.count()
+    assert done.join(attempted, ["session_id", "url"], "left_anti").count() == 0
+    assert not os.path.exists(os.path.join(warehouse, "progress"))
     # pending has no url that is done
     pend = eng.pending()
     assert pend.join(done, ["session_id", "url"], "inner").count() == 0

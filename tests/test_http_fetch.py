@@ -1,7 +1,7 @@
 """Live HTTP fetch mode (S5/C1/S6 — BasicCrawler.java:77-81, 148-172,
 203-217): the engine crawls a REAL http server (the fixture served as HTML
 pages + robots.txt) and must produce output identical to join mode on the
-same graph — pages, frontier, progress; plus unit coverage of the anchor
+same graph — pages, frontier, done; plus unit coverage of the anchor
 parser and the robots error->allow-all path."""
 
 from __future__ import annotations
@@ -52,7 +52,7 @@ def test_live_fetch_matches_join_mode(spark, fixture_dir, warehouse, tmp_path,
     """The whole crawl — scheduling, robots, fetch, link extraction,
     expansion, dedup — run over HTTP must equal the join-mode crawl on the
     same web graph: identical pages rows, frontier (seen set), and
-    progress. partition_id (physical lineage) is excluded: the two modes
+    done keys. partition_id (physical lineage) is excluded: the two modes
     parallelize differently by design."""
     graph = graph_from_parquet(spark, fixture_dir)
     robots = robots_from_parquet(spark, fixture_dir) if respect_robots else {}
@@ -85,7 +85,7 @@ def test_live_fetch_matches_join_mode(spark, fixture_dir, warehouse, tmp_path,
 
     assert rows(st_join, "pages") == rows(st_http, "pages")
     assert rows(st_join, "frontier") == rows(st_http, "frontier")
-    assert rows(st_join, "progress") == rows(st_http, "progress")
+    assert rows(st_join, "done") == rows(st_http, "done")
 
 
 def test_robots_fetch_error_allows_all(spark, fixture_dir, warehouse):

@@ -20,7 +20,7 @@ CFG = dict(max_depth=2, budget_per_host_per_round=3, max_rounds=8,
 KEY_COLS = {
     "frontier": ["url", "depth", "priority", "discovered_round", "parent_url"],
     "pages": ["round", "sched_seq", "url", "status_code", "content_length", "phash"],
-    "progress": ["round", "url", "status"],
+    "done": ["session_id", "url"],
 }
 # seen-set configuration -> (config fields, last round). Rounds 5-8 only
 # drain leftover URLs and each round costs ~10 s of fixed Spark overhead,
