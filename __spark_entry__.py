@@ -3005,10 +3005,10 @@ def q_token_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget shard packing: assign every doc to a fixed-token-budget
     training shard in deterministic doc_id order (the sharding step between
     filtering and tokenizer output in an LLM data pipeline). Exact global
-    running sum via operators/pack.pack_shards — range-repartition +
+    running sum via operators/topk.pack_shards — range-repartition +
     per-partition partial sums + driver cumsum over one number PER
     PARTITION, never the sum()-OVER-(ORDER BY) single-task trap."""
-    from distributed_webcrawler_spark.operators.pack import pack_shards
+    from distributed_webcrawler_spark.operators.topk import pack_shards
 
     docs = _t(spark, sf_dir, "documents")
     sized = docs.select("doc_id", X.token_count("text").cast("bigint").alias("n_tokens"))
@@ -3352,7 +3352,7 @@ def q_shard_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a shard far under budget that isn't the last one = packing bug).
     Plan: the pack op's output (already computed without a single-task
     window) + ONE groupBy(shard_id)."""
-    from distributed_webcrawler_spark.operators.pack import pack_shards
+    from distributed_webcrawler_spark.operators.topk import pack_shards
 
     docs = _t(spark, sf_dir, "documents")
     sized = docs.select("doc_id", X.token_count("text").cast("bigint").alias("n_tokens"))
@@ -4472,12 +4472,12 @@ def q_webdataset_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout step of an image+caption corpus (tar shards are what training
     dataloaders stream). Pair byte weight = caption chars + raw pixel
     estimate (integer formulas both engines share). Spark packs with
-    operators/pack.pack_shards — range-repartition + per-partition local
+    operators/topk.pack_shards — range-repartition + per-partition local
     running sums + a driver-side offset cumsum (one number per partition,
     NEVER a single-partition global window); the oracle is the naive
     global window, which is exactly the contrast the pack operator
     exists for. Emits one manifest row per shard."""
-    from distributed_webcrawler_spark.operators.pack import pack_shards
+    from distributed_webcrawler_spark.operators.topk import pack_shards
 
     docs = _t(spark, sf_dir, "documents")
     pairs = docs.select(
@@ -4485,14 +4485,19 @@ def q_webdataset_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_chars")
          + (16 + (F.col("doc_id") * 13) % 50)
          * (16 + (F.col("doc_id") * 29) % 50) * 3).alias("pair_bytes"))
+    reg: list = []
     packed = pack_shards(pairs, [F.col("doc_id").asc()], "pair_bytes",
-                         _WDS_BUDGET)
-    return (packed.groupBy(F.col("shard_id").cast("int").alias("shard_id"))
-            .agg(F.count("*").cast("bigint").alias("n_pairs"),
-                 F.sum("pair_bytes").cast("bigint").alias("bytes_total"),
-                 F.min("doc_id").alias("first_id"),
-                 F.max("doc_id").alias("last_id"))
-            .orderBy("shard_id"))
+                         _WDS_BUDGET, cache_registry=reg)
+    out = (packed.groupBy(F.col("shard_id").cast("int").alias("shard_id"))
+           .agg(F.count("*").cast("bigint").alias("n_pairs"),
+                F.sum("pair_bytes").cast("bigint").alias("bytes_total"),
+                F.min("doc_id").alias("first_id"),
+                F.max("doc_id").alias("last_id"))
+           .orderBy("shard_id")
+           .localCheckpoint(eager=True))
+    for c in reg:
+        c.unpersist()
+    return out
 
 
 _Q_WDS_SQL = f"""
@@ -4951,7 +4956,7 @@ def q_doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and boundaries, not just counts. Pure Column exprs (regexp tokenizer +
     sequence/explode + slice): zero UDF, and the explode is in-partition —
     no shuffle at any corpus size; downstream shard assignment is
-    operators/pack.pack_shards."""
+    operators/topk.pack_shards."""
     docs = _t(spark, sf_dir, "documents")
     toks = F.expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")
     d = (docs.select("doc_id", toks.alias("toks"))
@@ -5640,13 +5645,19 @@ def q_budget_apportion(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.round(q - F.floor(q), 9).alias("rem")))
     leftover = base.agg(
         (F.lit(_APPORTION_BUDGET) - F.sum("floor_q")).alias("l"))
+    reg: list = []
     ranked = global_row_number(
-        base, [F.col("rem").desc(), F.col("host").asc()], seq_col="seq")
-    return (ranked.crossJoin(F.broadcast(leftover))
-            .select("host", "demand",
-                    (F.col("floor_q")
-                     + F.when(F.col("seq") <= F.col("l"), 1).otherwise(0))
-                    .cast("bigint").alias("quota")))
+        base, [F.col("rem").desc(), F.col("host").asc()], seq_col="seq",
+        cache_registry=reg)
+    out = (ranked.crossJoin(F.broadcast(leftover))
+           .select("host", "demand",
+                   (F.col("floor_q")
+                    + F.when(F.col("seq") <= F.col("l"), 1).otherwise(0))
+                   .cast("bigint").alias("quota"))
+           .localCheckpoint(eager=True))
+    for c in reg:
+        c.unpersist()
+    return out
 
 
 _Q_APPORTION_SQL = f"""

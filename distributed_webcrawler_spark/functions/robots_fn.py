@@ -25,15 +25,12 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 
-def parse_robots(text: str | None) -> tuple[list[str], list[str]]:
-    """-> (allowed_prefixes, disallowed_prefixes). Pure python, shared with
-    the oracle simulator so parity is by-construction testable."""
-    allowed: list[str] = []
-    disallowed: list[str] = []
-    if not text or not text.strip():
-        return allowed, disallowed
+def _relevant_lines(text: str | None):
+    """Yield (lowercased, stripped) for every non-comment line inside a
+    User-agent group that applies to this crawler: ``*`` or an agent
+    containing "crawler"/"bot" (BasicCrawler.java:247-251)."""
     relevant = False
-    for raw in text.split("\n"):
+    for raw in (text or "").split("\n"):
         line = raw.strip()
         if not line or line.startswith("#"):
             continue
@@ -43,14 +40,23 @@ def parse_robots(text: str | None) -> tuple[list[str], list[str]]:
             al = agent.lower()
             relevant = agent == "*" or "crawler" in al or "bot" in al
         elif relevant:
-            if low.startswith("disallow:"):
-                p = line[9:].strip()
-                if p:
-                    disallowed.append(p)
-            elif low.startswith("allow:"):
-                p = line[6:].strip()
-                if p:
-                    allowed.append(p)
+            yield low, line
+
+
+def parse_robots(text: str | None) -> tuple[list[str], list[str]]:
+    """-> (allowed_prefixes, disallowed_prefixes). Pure python, shared with
+    the oracle simulator so parity is by-construction testable."""
+    allowed: list[str] = []
+    disallowed: list[str] = []
+    for low, line in _relevant_lines(text):
+        if low.startswith("disallow:"):
+            p = line[9:].strip()
+            if p:
+                disallowed.append(p)
+        elif low.startswith("allow:"):
+            p = line[6:].strip()
+            if p:
+                allowed.append(p)
     return allowed, disallowed
 
 
@@ -61,22 +67,10 @@ def parse_crawl_delay(text: str | None) -> float | None:
     this crawler, and '# crawl-delay: ...' comments never count). First
     valid value in a relevant group wins; malformed values are ignored.
     Returns None when no relevant group declares one."""
-    if not text or not text.strip():
-        return None
-    relevant = False
-    for raw in text.split("\n"):
-        line = raw.strip()
-        if not line or line.startswith("#"):
-            continue
-        low = line.lower()
-        if low.startswith("user-agent:"):
-            agent = line[11:].strip()
-            al = agent.lower()
-            relevant = agent == "*" or "crawler" in al or "bot" in al
-        elif relevant and low.startswith("crawl-delay:"):
-            v = line[12:].strip()
+    for low, line in _relevant_lines(text):
+        if low.startswith("crawl-delay:"):
             try:
-                return float(v)
+                return float(line[12:].strip())
             except ValueError:
                 continue
     return None

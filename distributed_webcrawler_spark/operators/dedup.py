@@ -173,29 +173,15 @@ def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 8, band_size: int = 2,
 
 def simhash16(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
               max_chars: int = 200) -> DataFrame:
-    """16-bit SimHash over character 4-shingles (with multiplicity).
+    """16-bit SimHash over character 4-shingles (with multiplicity):
+    :func:`simhash_wide` at 16 bits, so (id, simhash:int).
 
     bit_b = sign( sum over shingles of (2*((h64(sh)>>b)&1) - 1) );
-    ties (sum == 0) -> bit 0. Returns (id, simhash:int).
-    16 bits (not 64) keeps the oracle SQL tractable while exercising the
-    identical algorithm; widen N_BITS for production.
+    ties (sum == 0) -> bit 0. 16 bits (not 64) keeps the oracle SQL
+    tractable while exercising the identical algorithm.
     """
-    n_bits = 16
-    sh = spread_for_explode(docs).select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles(text_col, 4, max_chars)).alias("sh"),
-    ).withColumn("h", h64("sh"))
-    bit_aggs = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"s_{b}")
-        for b in range(n_bits)
-    ]
-    agg = sh.groupBy("id").agg(*bit_aggs)
-    sig = sum(
-        F.when(F.col(f"s_{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0)) for b in range(n_bits)
-    )
-    return agg.select("id", sig.cast("int").alias("simhash"))
+    sig = simhash_wide(docs, 16, text_col, id_col, max_chars)
+    return sig.select("id", F.col("simhash").cast("int").alias("simhash"))
 
 
 def simhash_dup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

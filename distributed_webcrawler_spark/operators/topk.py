@@ -11,6 +11,9 @@ Three shapes (SURVEY.md §2.5):
   TakeOrderedAndProject keeps it a per-partition top-k + driver merge, so
   even this avoids a full global sort).
 
+Exact global order (row numbers, per-group row numbers, running sums)
+goes through ONE range-offset pass, :func:`_range_offsets`.
+
 Deterministic tie-break everywhere (SURVEY.md §2.5 W3):
   priority DESC, discovered_at ASC, url ASC.
 """
@@ -19,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 TIE_BREAK = ("priority", "discovered_at", "url")
 
@@ -79,52 +83,66 @@ def global_topk(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
     return df.orderBy(*order_cols).limit(k)
 
 
+def _range_offsets(df: DataFrame, group_cols: list[str], order_cols: list[Column],
+                   measure: Column, partitions: int | None,
+                   cache_registry: list | None) -> tuple[DataFrame, int]:
+    """The one global-order pass behind every operator below, WITHOUT a
+    single-partition window (the `Window.orderBy(...)` trap collapses the
+    whole frame into one task and serializes every downstream stage).
+
+    Range-repartition on (group, order) so range bucket i holds keys
+    strictly before bucket i+1 and a big group spans many buckets, sort
+    within buckets, then ONE collect of ``measure`` per (bucket, group), a
+    driver-side cumsum per group in bucket order (O(partitions + groups)
+    numbers, never one per row), and a broadcast join of the offsets.
+    Returns ``df``'s columns plus ``__pid`` and ``__offset`` (the measure
+    summed over the group's earlier buckets), and the measure's grand
+    total. Exactness does not depend on where the sampled range bounds
+    fall; they only affect balance."""
+    spark = df.sparkSession
+    n = partitions or spark.sparkContext.defaultParallelism * 2
+    keys = [*(F.col(g) for g in group_cols), *order_cols]
+    rp = (
+        df.repartitionByRange(n, *keys)
+        .sortWithinPartitions(*keys)
+        .withColumn("__pid", F.spark_partition_id())
+    )
+    # cache so the sampled range bounds are IDENTICAL between the measure
+    # job and the downstream consumption (offsets must describe the same
+    # layout); callers unpersist via cache_registry after their unit of work.
+    rp = rp.cache()
+    if cache_registry is not None:
+        cache_registry.append(rp)
+    acc: dict[tuple, int] = {}
+    offsets = []
+    for r in sorted(rp.groupBy("__pid", *group_cols).agg(measure.alias("__m")).collect(),
+                    key=lambda r: r["__pid"]):
+        g = tuple(r[c] for c in group_cols)
+        offsets.append((r["__pid"], *g, acc.get(g, 0)))
+        acc[g] = acc.get(g, 0) + int(r["__m"] or 0)
+    # explicit schema: an empty frame has no rows to infer the types from
+    schema = StructType([StructField("__pid", IntegerType()),
+                         *(rp.schema[g] for g in group_cols),
+                         StructField("__offset", LongType())])
+    offset_df = F.broadcast(spark.createDataFrame(offsets, schema))
+    return rp.join(offset_df, ["__pid", *group_cols]), sum(acc.values())
+
+
 def global_row_number(df: DataFrame, order_cols: list[Column], seq_col: str = "seq",
                       partitions: int | None = None,
                       cache_registry: list | None = None,
                       meta_out: dict | None = None) -> DataFrame:
-    """Exact global row_number under a total order WITHOUT a single-partition
-    window (the `Window.orderBy(...)` trap collapses the whole frame into one
-    task and serializes every downstream stage).
-
-    Scalable pattern: range-repartition on the sort key (range bucket i holds
-    keys strictly before bucket i+1), rank locally inside each bucket in
-    parallel, then add per-bucket offsets (a tiny driver-side cumsum — one
-    number per partition, not per row). Exactness does not depend on where
-    the sampled range bounds fall; they only affect balance.
-    """
-    spark = df.sparkSession
-    n = partitions or spark.sparkContext.defaultParallelism * 2
-    rp = (
-        df.repartitionByRange(n, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    # cache so the sampled range bounds are IDENTICAL between the counts job
-    # and the downstream consumption (offsets must describe the same layout);
-    # callers unpersist via cache_registry at the end of their unit of work.
-    rp = rp.cache()
-    if cache_registry is not None:
-        cache_registry.append(rp)
-    counts = {r["__pid"]: r["cnt"] for r in
-              rp.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
+    """Exact global row_number under a total order: the offsets pass with
+    one count per range bucket, then a local rank inside each bucket."""
+    rp, total = _range_offsets(df, [], order_cols, F.count("*"), partitions,
+                               cache_registry)
     if meta_out is not None:
         # the counts job already materialized an exact global count — hand
         # it to the caller so it never pays a separate count() action
-        meta_out["total"] = acc
-    offset_df = F.broadcast(spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "__pid int, __offset long"))
+        meta_out["total"] = total
     w = Window.partitionBy("__pid").orderBy(*order_cols)
-    out = (
-        rp.join(offset_df, "__pid")
-        .withColumn(seq_col, (F.col("__offset") + F.row_number().over(w)).cast("int"))
-        .drop("__pid", "__offset")
-    )
-    return out
+    return (rp.withColumn(seq_col, (F.col("__offset") + F.row_number().over(w)).cast("int"))
+            .drop("__pid", "__offset"))
 
 
 def grouped_row_number(df: DataFrame, group_cols: list[str],
@@ -136,36 +154,36 @@ def grouped_row_number(df: DataFrame, group_cols: list[str],
 
     ``Window.partitionBy(group)`` puts each group in ONE task — fatal when
     group cardinality is small relative to data (5 aspect buckets over 10^10
-    images = 5 tasks). Same cure as :func:`global_row_number`: range-
-    repartition on (group, order) so a big group spans many contiguous range
-    buckets, count per (bucket, group), driver-side cumsum per group in
-    bucket order (O(partitions + groups) driver rows — fine for group
-    cardinalities up to ~millions; beyond that use pack-style weights of 1
-    per group shard), broadcast offsets back, rank locally.
-    """
-    spark = df.sparkSession
-    n = partitions or spark.sparkContext.defaultParallelism * 2
-    gcols = [F.col(g) for g in group_cols]
-    rp = (
-        df.repartitionByRange(n, *gcols, *order_cols)
-        .sortWithinPartitions(*gcols, *order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    rp = rp.cache()
-    if cache_registry is not None:
-        cache_registry.append(rp)
-    counts = rp.groupBy("__pid", *group_cols).agg(F.count("*").alias("cnt")).collect()
-    acc: dict[tuple, int] = {}
-    offsets = []
-    for r in sorted(counts, key=lambda r: (tuple(str(r[g]) for g in group_cols), r["__pid"])):
-        gkey = tuple(r[g] for g in group_cols)
-        offsets.append((r["__pid"], *gkey, acc.get(gkey, 0)))
-        acc[gkey] = acc.get(gkey, 0) + r["cnt"]
-    offset_df = F.broadcast(spark.createDataFrame(
-        offsets, ["__pid", *group_cols, "__offset"]))
+    images = 5 tasks). The offsets pass counts per (bucket, group) instead,
+    so the local rank runs per (bucket, group) in parallel; the driver holds
+    O(partitions + groups) rows, fine up to ~millions of groups."""
+    rp, _ = _range_offsets(df, group_cols, order_cols, F.count("*"), partitions,
+                           cache_registry)
     w = Window.partitionBy("__pid", *group_cols).orderBy(*order_cols)
+    return (rp.withColumn(seq_col, (F.col("__offset") + F.row_number().over(w)).cast("long"))
+            .drop("__pid", "__offset"))
+
+
+def pack_shards(df: DataFrame, order_cols: list[Column], weight_col: str,
+                budget: int, shard_col: str = "shard_id",
+                partitions: int | None = None,
+                cache_registry: list | None = None) -> DataFrame:
+    """Token-budget shard packing: the sharding step between filtering and
+    tokenizer output in an LLM data pipeline (each shard feeds one loader
+    worker, so boundaries must be stable and budget-bounded). Returns
+    ``df``'s columns plus ``cum_before`` (exact running total of
+    ``weight_col`` over all earlier rows in the total order) and
+    ``shard_col`` = floor(cum_before / budget): a doc lands in the shard
+    open when it arrived and may straddle its boundary (greedy packing).
+    The naive ``sum() OVER (ORDER BY ...)`` is one window task; here the
+    offsets pass sums per range bucket and a local running sum finishes."""
+    rp, _ = _range_offsets(df, [], order_cols, F.sum(weight_col), partitions,
+                           cache_registry)
+    w = (Window.partitionBy("__pid").orderBy(*order_cols)
+         .rowsBetween(Window.unboundedPreceding, -1))
+    cum_local = F.coalesce(F.sum(weight_col).over(w), F.lit(0))
     return (
-        rp.join(offset_df, ["__pid", *group_cols])
-        .withColumn(seq_col, (F.col("__offset") + F.row_number().over(w)).cast("long"))
+        rp.withColumn("cum_before", (F.col("__offset") + cum_local).cast("bigint"))
+        .withColumn(shard_col, F.floor(F.col("cum_before") / F.lit(budget)).cast("int"))
         .drop("__pid", "__offset")
     )

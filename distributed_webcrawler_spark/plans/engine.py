@@ -45,6 +45,7 @@ Scale design notes:
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -176,21 +177,38 @@ class CrawlEngine:
             s = s.withColumn("url", U.canonicalize_urls(keep_fragment=False)(F.col("url")))
         s = s.groupBy("url").agg(F.min("seq").alias("seq"))  # first seed wins
         rows = self._seed_rows(s.select(F.lit(session_id).alias("session_id"), "url"), 0)
-        fsnap, n_seeds = self._t("frontier").append_counted(rows, skip_empty=True)
+        # append first: a seen set that exists folds only the new seeds, and
+        # one built now folds them with the rest of the frontier
+        self._append_frontier(rows)
         self._set_session_status(session_id, "RUNNING")
         if cfg.use_bloom and self.seen is None:
-            self.seen = seen_sets.create(cfg, self.store.warehouse)
-            fr = self._t("frontier").read(self.spark)
-            if fr is not None:
-                self.seen.add_frame(fr)
-        elif cfg.use_bloom and n_seeds > 0:
-            # fold in ONLY the just-appended seed snapshot: cuckoo inserts
-            # are NOT idempotent, and re-folding the full frontier on a
-            # second start_session would store duplicate fingerprints,
-            # breaking evict_for_recrawl's one-copy-per-frontier-row
-            # accounting
-            self.seen.add_snapshot(self._t("frontier"), fsnap)
+            self._rebuild_seen()
         self._checkpoint(0)
+
+    def _rebuild_seen(self) -> None:
+        """Create the configured seen set and fold the whole frontier in."""
+        self.seen = seen_sets.create(self.cfg, self.store.warehouse)
+        fr = self._t("frontier").read(self.spark)
+        if fr is not None:
+            self.seen.add_frame(fr)
+
+    def _append_frontier(self, rows: DataFrame,
+                         appended: Callable[[], None] | None = None) -> int:
+        """Append frontier rows (no empty snapshot) and fold ONLY the new
+        snapshot into the seen set: cuckoo inserts are NOT idempotent, and
+        re-folding the full frontier would store duplicate fingerprints,
+        breaking evict_for_recrawl's one-copy-per-frontier-row accounting.
+        The append doubles as the rows' count (parquet footer metadata).
+        ``appended`` runs between the append and the fold."""
+        fsnap, n = self._t("frontier").append_counted(rows, skip_empty=True)
+        if appended is not None:
+            appended()
+        if n > 0 and self.seen is not None:
+            # from the parquet the append JUST wrote: driver filters read
+            # its hash column locally (no Spark job), shards fold it
+            # executor-side
+            self.seen.add_snapshot(self._t("frontier"), fsnap)
+        return n
 
     # ------------------------------------------------------------- views
     def pending(self) -> DataFrame:
@@ -814,17 +832,9 @@ class CrawlEngine:
         def _branch_expand() -> int:
             self._desc(f"dws r{rnd}: expand+frontier+bloom")
             new_rows = self._expand(fetched, rnd)
-            # the frontier append doubles as new_rows' count (parquet footer
-            # metadata) — no separate count() action, no empty snapshot on
-            # exhausted rounds
-            fsnap, n_new = self._t("frontier").append_counted(
-                new_rows.select(*self._frontier_row_cols()), skip_empty=True)
-            mark_at("expand_frontier")
-            if n_new > 0 and self.seen is not None:
-                # from the parquet the append JUST wrote: driver filters
-                # read its hash column locally (no Spark job), shards fold
-                # it executor-side
-                self.seen.add_snapshot(self._t("frontier"), fsnap)
+            n_new = self._append_frontier(
+                new_rows.select(*self._frontier_row_cols()),
+                appended=lambda: mark_at("expand_frontier"))
             mark_at("bloom_update")
             return n_new
 
@@ -930,10 +940,7 @@ class CrawlEngine:
             self.seen = seen_sets.from_checkpoint(ckpt, self.cfg, self.store.warehouse)
             if self.seen is None:
                 # a checkpoint written without a seen set: build it over the frontier
-                self.seen = seen_sets.create(self.cfg, self.store.warehouse)
-                fr = self._t("frontier").read(self.spark)
-                if fr is not None:
-                    self.seen.add_frame(fr)
+                self._rebuild_seen()
         return self.run()
 
     # ----------------------------------------------------- recrawl eviction
@@ -1011,8 +1018,6 @@ class CrawlEngine:
         res = self.evict_for_recrawl(urls=urls, allow_stale_filter=allow_stale_filter)
         rnd = res["round"]
         rows = self._seed_rows(urls.select("session_id", "url").distinct(), rnd)
-        fsnap, n = self._t("frontier").append_counted(rows, skip_empty=True)
-        if n > 0 and self.seen is not None:
-            self.seen.add_snapshot(self._t("frontier"), fsnap)
+        n = self._append_frontier(rows)
         self._checkpoint(rnd)
         return {**res, "reinjected": int(n)}

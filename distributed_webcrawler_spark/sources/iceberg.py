@@ -146,7 +146,13 @@ class IcebergTable:
     # -- resume ------------------------------------------------------------
     def rollback(self, snapshot_id: int) -> None:
         snaps = self._snaps()
-        if snapshot_id >= len(snaps) or not snaps:
+        if snapshot_id >= len(snaps):
+            return
+        if snapshot_id == 0:
+            # no snapshot precedes the first one: drop the table, so that
+            # snapshot_id() reads 0 and read() returns None, as the parquet
+            # Table.rollback(0) empties its manifest
+            self.spark.sql(f"DROP TABLE {self.ident}")
             return
         real = snaps[snapshot_id - 1].snapshot_id
         self.spark.sql(

@@ -4,12 +4,15 @@ exist — recorded blocker in this sandbox: no iceberg jar, no network)."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pytest
 
 from distributed_webcrawler_spark import CrawlConfig
 from distributed_webcrawler_spark.plans.engine import CrawlEngine
 from distributed_webcrawler_spark.sources.iceberg import (
     IcebergStore,
+    IcebergTable,
     iceberg_available,
 )
 from distributed_webcrawler_spark.sources.store import SnapshotStore
@@ -94,3 +97,22 @@ def test_engine_session_control_uses_only_the_table_contract(spark, fixture_dir,
     eng.stop_session("sess-A")
     pend = eng.pending()
     assert {r.session_id for r in pend.select("session_id").distinct().collect()} == {"sess-B"}
+
+
+def test_iceberg_rollback_to_zero_drops_the_table():
+    """rollback(0) must empty the table as the parquet Table.rollback(0)
+    does (a checkpoint records 0 for every table still empty at its round);
+    rolling back to the current snapshot issues nothing. Runs without the
+    Iceberg runtime: the session only records its SQL and the snapshot list
+    is stubbed."""
+    calls: list[str] = []
+    t = IcebergTable(SimpleNamespace(sql=calls.append), "local", "dws", "done")
+    snaps = [SimpleNamespace(snapshot_id=11), SimpleNamespace(snapshot_id=12)]
+    t._snaps = lambda: snaps
+    t.rollback(len(snaps))
+    assert calls == []
+    t.rollback(1)
+    assert calls == ["CALL local.system.rollback_to_snapshot('dws.done', 11)"]
+    calls.clear()
+    t.rollback(0)
+    assert calls == ["DROP TABLE local.dws.done"]

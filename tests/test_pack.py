@@ -1,11 +1,12 @@
-"""pack_shards: exact global running sum + shard assignment without a
+"""The range-offset operators (pack_shards, grouped_row_number,
+global_row_number): exact global running sums and row numbers without a
 single-partition window."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from distributed_webcrawler_spark.operators.pack import pack_shards
+from distributed_webcrawler_spark.operators.topk import pack_shards
 
 
 def test_pack_matches_serial_cumsum(spark):
@@ -21,6 +22,10 @@ def test_pack_matches_serial_cumsum(spark):
         acc += w
     # shards are budget-bounded: each shard's pre-straddle mass < budget
     assert max(r[1] for r in got.values()) == (acc - rows[-1][1]) // 300
+    empty = pack_shards(spark.createDataFrame([], "doc_id long, w long"),
+                        [F.col("doc_id")], "w", budget=300, partitions=7,
+                        cache_registry=reg)
+    assert empty.collect() == [] and empty.schema == out.schema
     for c in reg:
         c.unpersist()
 
@@ -59,5 +64,23 @@ def test_grouped_row_number_matches_window(spark):
     assert got == expect
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
+    # the offsets frame of an empty input has no rows to infer a schema from
+    empty = grouped_row_number(spark.createDataFrame([], "k long, g string"),
+                               ["g"], [F.col("k")], seq_col="seq",
+                               partitions=7, cache_registry=reg)
+    assert empty.collect() == [] and empty.schema == out.schema
+    for c in reg:
+        c.unpersist()
+
+
+def test_global_row_number_empty_input_counts_zero(spark):
+    from distributed_webcrawler_spark.operators.topk import global_row_number
+
+    reg: list = []
+    meta: dict = {}
+    out = global_row_number(spark.createDataFrame([], "k long"), [F.col("k")],
+                            partitions=5, cache_registry=reg, meta_out=meta)
+    assert meta["total"] == 0
+    assert out.collect() == [] and out.dtypes == [("k", "bigint"), ("seq", "int")]
     for c in reg:
         c.unpersist()
