@@ -2998,6 +2998,18 @@ FROM m
 """
 
 
+def _frozen(build, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Run a query builder that takes a cache registry (the range-offset
+    operators of operators/topk register their range-partitioned cache
+    there), freeze its result (lineage truncation) and release the caches
+    NOW instead of pinning executor storage for the rest of the session."""
+    reg: list = []
+    out = build(spark, sf_dir, reg).localCheckpoint(eager=True)
+    for c in reg:
+        c.unpersist()
+    return out
+
+
 _PACK_BUDGET = 2000  # tokens per training shard (tiny so the fixture cuts many)
 
 
@@ -3008,21 +3020,17 @@ def q_token_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     running sum via operators/topk.pack_shards — range-repartition +
     per-partition partial sums + driver cumsum over one number PER
     PARTITION, never the sum()-OVER-(ORDER BY) single-task trap."""
+    return _frozen(_token_shard_pack, spark, sf_dir)
+
+
+def _token_shard_pack(spark: SparkSession, sf_dir: str, reg: list) -> DataFrame:
     from distributed_webcrawler_spark.operators.topk import pack_shards
 
     docs = _t(spark, sf_dir, "documents")
     sized = docs.select("doc_id", X.token_count("text").cast("bigint").alias("n_tokens"))
-    reg: list = []
     out = pack_shards(sized, [F.col("doc_id")], "n_tokens", _PACK_BUDGET,
                       cache_registry=reg)
-    out = out.select("doc_id", "n_tokens", "cum_before", "shard_id")
-    # freeze the result (lineage truncation) so the operator's internal
-    # range-partitioned cache can be released NOW instead of pinning
-    # executor storage for the rest of the session
-    out = out.localCheckpoint(eager=True)
-    for c in reg:
-        c.unpersist()
-    return out
+    return out.select("doc_id", "n_tokens", "cum_before", "shard_id")
 
 
 _Q_PACK_SQL = f"""
@@ -3352,22 +3360,21 @@ def q_shard_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a shard far under budget that isn't the last one = packing bug).
     Plan: the pack op's output (already computed without a single-task
     window) + ONE groupBy(shard_id)."""
+    return _frozen(_shard_balance_report, spark, sf_dir)
+
+
+def _shard_balance_report(spark: SparkSession, sf_dir: str, reg: list) -> DataFrame:
     from distributed_webcrawler_spark.operators.topk import pack_shards
 
     docs = _t(spark, sf_dir, "documents")
     sized = docs.select("doc_id", X.token_count("text").cast("bigint").alias("n_tokens"))
-    reg: list = []
     packed = pack_shards(sized, [F.col("doc_id")], "n_tokens", _PACK_BUDGET,
                          cache_registry=reg)
-    out = (packed.groupBy("shard_id")
-           .agg(F.count("*").cast("bigint").alias("n_docs"),
-                F.sum("n_tokens").alias("tokens"))
-           .select("shard_id", "n_docs", "tokens",
-                   (F.col("tokens") - _PACK_BUDGET).alias("over_budget"))
-           .localCheckpoint(eager=True))
-    for c in reg:
-        c.unpersist()
-    return out
+    return (packed.groupBy("shard_id")
+            .agg(F.count("*").cast("bigint").alias("n_docs"),
+                 F.sum("n_tokens").alias("tokens"))
+            .select("shard_id", "n_docs", "tokens",
+                    (F.col("tokens") - _PACK_BUDGET).alias("over_budget")))
 
 
 _Q_SHARD_BAL_SQL = f"""
@@ -4477,6 +4484,10 @@ def q_webdataset_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     NEVER a single-partition global window); the oracle is the naive
     global window, which is exactly the contrast the pack operator
     exists for. Emits one manifest row per shard."""
+    return _frozen(_webdataset_shard_manifest, spark, sf_dir)
+
+
+def _webdataset_shard_manifest(spark: SparkSession, sf_dir: str, reg: list) -> DataFrame:
     from distributed_webcrawler_spark.operators.topk import pack_shards
 
     docs = _t(spark, sf_dir, "documents")
@@ -4485,19 +4496,14 @@ def q_webdataset_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_chars")
          + (16 + (F.col("doc_id") * 13) % 50)
          * (16 + (F.col("doc_id") * 29) % 50) * 3).alias("pair_bytes"))
-    reg: list = []
     packed = pack_shards(pairs, [F.col("doc_id").asc()], "pair_bytes",
                          _WDS_BUDGET, cache_registry=reg)
-    out = (packed.groupBy(F.col("shard_id").cast("int").alias("shard_id"))
-           .agg(F.count("*").cast("bigint").alias("n_pairs"),
-                F.sum("pair_bytes").cast("bigint").alias("bytes_total"),
-                F.min("doc_id").alias("first_id"),
-                F.max("doc_id").alias("last_id"))
-           .orderBy("shard_id")
-           .localCheckpoint(eager=True))
-    for c in reg:
-        c.unpersist()
-    return out
+    return (packed.groupBy(F.col("shard_id").cast("int").alias("shard_id"))
+            .agg(F.count("*").cast("bigint").alias("n_pairs"),
+                 F.sum("pair_bytes").cast("bigint").alias("bytes_total"),
+                 F.min("doc_id").alias("first_id"),
+                 F.max("doc_id").alias("last_id"))
+            .orderBy("shard_id"))
 
 
 _Q_WDS_SQL = f"""
@@ -5081,6 +5087,10 @@ def q_aspect_bucket_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     which would collapse 10^10 images into 5 tasks; dims are synthesized
     deterministically from part (w,h are table columns in the real payload
     schema, so this is pure Column math either way)."""
+    return _frozen(_aspect_bucket_pack, spark, sf_dir)
+
+
+def _aspect_bucket_pack(spark: SparkSession, sf_dir: str, reg: list) -> DataFrame:
     from distributed_webcrawler_spark.operators.topk import grouped_row_number
 
     part = _t(spark, sf_dir, "part")
@@ -5096,16 +5106,11 @@ def q_aspect_bucket_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
                .when(r < 1.6329931618554518, "1.33")
                .otherwise("2.00"))
     b = imgs.withColumn("bucket", bucket)
-    cache_reg: list = []
     seq = grouped_row_number(b, ["bucket"], [F.col("image_key")],
-                             seq_col="__seq", cache_registry=cache_reg)
-    out = (seq.select(
+                             seq_col="__seq", cache_registry=reg)
+    return seq.select(
         "image_key", "w", "h", "bucket",
         ((F.col("__seq") - 1) / ASPECT_BATCH).cast("int").alias("batch_idx"))
-        .localCheckpoint())  # materialize before releasing the range cache
-    for c in cache_reg:
-        c.unpersist()
-    return out
 
 
 _Q_ASPECT_SQL = f"""
@@ -5632,6 +5637,10 @@ def q_budget_apportion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sums of 6-dp values; partition-order drift ~1e-10 can't move them),
     so the quotient B*demand/total is the identical IEEE double on both
     engines before floor()."""
+    return _frozen(_budget_apportion, spark, sf_dir)
+
+
+def _budget_apportion(spark: SparkSession, sf_dir: str, reg: list) -> DataFrame:
     from distributed_webcrawler_spark.operators.topk import global_row_number
 
     fr = _frontier(spark, sf_dir)
@@ -5645,19 +5654,14 @@ def q_budget_apportion(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.round(q - F.floor(q), 9).alias("rem")))
     leftover = base.agg(
         (F.lit(_APPORTION_BUDGET) - F.sum("floor_q")).alias("l"))
-    reg: list = []
     ranked = global_row_number(
         base, [F.col("rem").desc(), F.col("host").asc()], seq_col="seq",
         cache_registry=reg)
-    out = (ranked.crossJoin(F.broadcast(leftover))
-           .select("host", "demand",
-                   (F.col("floor_q")
-                    + F.when(F.col("seq") <= F.col("l"), 1).otherwise(0))
-                   .cast("bigint").alias("quota"))
-           .localCheckpoint(eager=True))
-    for c in reg:
-        c.unpersist()
-    return out
+    return (ranked.crossJoin(F.broadcast(leftover))
+            .select("host", "demand",
+                    (F.col("floor_q")
+                     + F.when(F.col("seq") <= F.col("l"), 1).otherwise(0))
+                    .cast("bigint").alias("quota")))
 
 
 _Q_APPORTION_SQL = f"""

@@ -128,40 +128,46 @@ def _range_offsets(df: DataFrame, group_cols: list[str], order_cols: list[Column
     return rp.join(offset_df, ["__pid", *group_cols]), sum(acc.values())
 
 
+def _row_number(df: DataFrame, group_cols: list[str], order_cols: list[Column],
+                seq_col: str, seq_type: str, partitions: int | None,
+                cache_registry: list | None) -> tuple[DataFrame, int]:
+    """The offsets pass with one count per (bucket, group), then a local
+    rank per (bucket, group); returns the frame and the row count."""
+    rp, total = _range_offsets(df, group_cols, order_cols, F.count("*"), partitions,
+                               cache_registry)
+    w = Window.partitionBy("__pid", *group_cols).orderBy(*order_cols)
+    return (rp.withColumn(seq_col, (F.col("__offset") + F.row_number().over(w)).cast(seq_type))
+            .drop("__pid", "__offset")), total
+
+
 def global_row_number(df: DataFrame, order_cols: list[Column], seq_col: str = "seq",
                       partitions: int | None = None,
                       cache_registry: list | None = None,
                       meta_out: dict | None = None) -> DataFrame:
-    """Exact global row_number under a total order: the offsets pass with
-    one count per range bucket, then a local rank inside each bucket."""
-    rp, total = _range_offsets(df, [], order_cols, F.count("*"), partitions,
-                               cache_registry)
+    """Exact global row_number (``int``) under a total order."""
+    out, total = _row_number(df, [], order_cols, seq_col, "int", partitions,
+                             cache_registry)
     if meta_out is not None:
         # the counts job already materialized an exact global count — hand
         # it to the caller so it never pays a separate count() action
         meta_out["total"] = total
-    w = Window.partitionBy("__pid").orderBy(*order_cols)
-    return (rp.withColumn(seq_col, (F.col("__offset") + F.row_number().over(w)).cast("int"))
-            .drop("__pid", "__offset"))
+    return out
 
 
 def grouped_row_number(df: DataFrame, group_cols: list[str],
                        order_cols: list[Column], seq_col: str = "seq",
                        partitions: int | None = None,
                        cache_registry: list | None = None) -> DataFrame:
-    """Exact per-group row_number (1-based within each group, ordered by
-    ``order_cols``) WITHOUT one-task-per-group windows.
+    """Exact per-group row_number (``long``, 1-based within each group,
+    ordered by ``order_cols``) WITHOUT one-task-per-group windows.
 
     ``Window.partitionBy(group)`` puts each group in ONE task — fatal when
     group cardinality is small relative to data (5 aspect buckets over 10^10
     images = 5 tasks). The offsets pass counts per (bucket, group) instead,
     so the local rank runs per (bucket, group) in parallel; the driver holds
     O(partitions + groups) rows, fine up to ~millions of groups."""
-    rp, _ = _range_offsets(df, group_cols, order_cols, F.count("*"), partitions,
-                           cache_registry)
-    w = Window.partitionBy("__pid", *group_cols).orderBy(*order_cols)
-    return (rp.withColumn(seq_col, (F.col("__offset") + F.row_number().over(w)).cast("long"))
-            .drop("__pid", "__offset"))
+    return _row_number(df, group_cols, order_cols, seq_col, "long", partitions,
+                       cache_registry)[0]
 
 
 def pack_shards(df: DataFrame, order_cols: list[Column], weight_col: str,

@@ -45,7 +45,6 @@ Scale design notes:
 from __future__ import annotations
 
 import time
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -192,23 +191,22 @@ class CrawlEngine:
         if fr is not None:
             self.seen.add_frame(fr)
 
-    def _append_frontier(self, rows: DataFrame,
-                         appended: Callable[[], None] | None = None) -> int:
-        """Append frontier rows (no empty snapshot) and fold ONLY the new
-        snapshot into the seen set: cuckoo inserts are NOT idempotent, and
-        re-folding the full frontier would store duplicate fingerprints,
-        breaking evict_for_recrawl's one-copy-per-frontier-row accounting.
-        The append doubles as the rows' count (parquet footer metadata).
-        ``appended`` runs between the append and the fold."""
+    def _append_frontier(self, rows: DataFrame) -> int:
+        """Append frontier rows (no empty snapshot; the append doubles as
+        the rows' count from parquet footer metadata) and fold them in."""
         fsnap, n = self._t("frontier").append_counted(rows, skip_empty=True)
-        if appended is not None:
-            appended()
-        if n > 0 and self.seen is not None:
-            # from the parquet the append JUST wrote: driver filters read
-            # its hash column locally (no Spark job), shards fold it
-            # executor-side
-            self.seen.add_snapshot(self._t("frontier"), fsnap)
+        self._fold_new(fsnap, n)
         return n
+
+    def _fold_new(self, fsnap: int, n: int) -> None:
+        """Fold ONLY the just-appended frontier snapshot into the seen set:
+        cuckoo inserts are NOT idempotent, and re-folding the full frontier
+        would store duplicate fingerprints, breaking evict_for_recrawl's
+        one-copy-per-frontier-row accounting. Driver filters read the
+        snapshot's hash column locally (no Spark job), shards fold it
+        executor-side."""
+        if n > 0 and self.seen is not None:
+            self.seen.add_snapshot(self._t("frontier"), fsnap)
 
     # ------------------------------------------------------------- views
     def pending(self) -> DataFrame:
@@ -832,9 +830,10 @@ class CrawlEngine:
         def _branch_expand() -> int:
             self._desc(f"dws r{rnd}: expand+frontier+bloom")
             new_rows = self._expand(fetched, rnd)
-            n_new = self._append_frontier(
-                new_rows.select(*self._frontier_row_cols()),
-                appended=lambda: mark_at("expand_frontier"))
+            fsnap, n_new = self._t("frontier").append_counted(
+                new_rows.select(*self._frontier_row_cols()), skip_empty=True)
+            mark_at("expand_frontier")
+            self._fold_new(fsnap, n_new)
             mark_at("bloom_update")
             return n_new
 

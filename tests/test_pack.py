@@ -73,14 +73,27 @@ def test_grouped_row_number_matches_window(spark):
         c.unpersist()
 
 
-def test_global_row_number_empty_input_counts_zero(spark):
+def test_global_row_number_matches_serial_order(spark):
+    """global_row_number == Window.orderBy(key) exactly, planned as a window
+    keyed by range bucket, never the one-task empty-key window; an empty
+    input counts 0 rows."""
     from distributed_webcrawler_spark.operators.topk import global_row_number
 
+    rows = [((i * 37) % 101, i) for i in range(300)]
+    df = spark.createDataFrame(rows, "p long, k long").repartition(9)
     reg: list = []
     meta: dict = {}
-    out = global_row_number(spark.createDataFrame([], "k long"), [F.col("k")],
-                            partitions=5, cache_registry=reg, meta_out=meta)
+    out = global_row_number(df, [F.col("p").desc(), F.col("k")], partitions=5,
+                            cache_registry=reg, meta_out=meta)
+    expect = {k: i + 1 for i, (_p, k) in enumerate(sorted(rows, key=lambda t: (-t[0], t[1])))}
+    assert {r.k: r.seq for r in out.collect()} == expect and meta["total"] == 300
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" in plan
+    assert "SinglePartition" not in plan
+    empty = global_row_number(spark.createDataFrame([], "p long, k long"),
+                              [F.col("k")], partitions=5, cache_registry=reg,
+                              meta_out=meta)
     assert meta["total"] == 0
-    assert out.collect() == [] and out.dtypes == [("k", "bigint"), ("seq", "int")]
+    assert empty.collect() == [] and empty.schema == out.schema
     for c in reg:
         c.unpersist()
